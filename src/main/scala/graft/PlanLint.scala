@@ -666,10 +666,11 @@ object PlanLint {
     "q317_nndescent_knn" -> 10,
     // beam serve: trainer (6, memoized — priced fresh) + adjacency
     // checkpoint + entry scoring checkpoint + 3 hop checkpoints + write
+    // (measured 12 fresh-session at sf0.01)
     "q322_nn_beam_serve" -> 14,
     // incremental insert: base trainer (6) + adjacency + 4 beam
-    // checkpoints + tch/g1/aff/g2 + full retrain (3, memoized — priced
-    // fresh) + census write (measured 19 fresh-session)
+    // checkpoints + tch/aff/g2 + full retrain (3, memoized — priced
+    // fresh) + census write (measured 19 fresh-session at sf0.01)
     "q324_nn_incremental_insert" -> 22,
     // incremental delete: full trainer (6, memoized — priced fresh) +
     // damaged/g1/aff/g2 checkpoints + survivor retrain (3) + census
@@ -677,35 +678,38 @@ object PlanLint {
     // feed-driven index maintenance: publish + CDC apply (probes/DV
     // ckpt/stage) + feed/tombs/new-rows ckpts + delete wave + insert
     // placement hops + refinement + retrain + ghost/class counts +
-    // census write (measured 42 fresh-session)
+    // census write (measured 37 fresh-session at sf0.01)
     "q342_index_follows_table" -> 48,
     // durable subscriber: publish + bootstrap + 2 CDC commits + per
     // micro-batch (meta read, counters, wave checkpoints, 2 publishes)
-    // + census reads (measured 80 fresh-session)
+    // + census reads (measured 65 fresh-session at sf0.01)
     "q343_durable_index" -> 88,
     // policy subscriber: q343's loop with a fired survivor retrain in
-    // batch 2 instead of the insert wave (measured 69 fresh-session)
+    // batch 2 instead of the insert wave (measured 54 fresh-session at
+    // sf0.01)
     "q344_auto_retrain_policy" -> 76,
     // as-of serving: pays the shared q343 fixture when FIRST (live
-    // subscriber loop) + two walk chains + census (measured 85
-    // fresh-session; memo-shared runs cost the two walks alone)
+    // subscriber loop) + two walk chains + census (measured 72
+    // fresh-session at sf0.01; memo-shared runs cost the two walks alone)
     "q348_index_asof_serve" -> 92,
     // IVF-entry serve: trainer (6, memoized — priced fresh) + its own
     // adjacency/entry/3-hop checkpoints (5) + the embedded fixed walk
-    // (q322's 5) + census write (measured ~17 fresh-session)
+    // (q322's 5) + census write (measured 16 fresh-session at sf0.01)
     "q325_nn_ivf_entry_serve" -> 20,
     // HNSW serve: trainer (6, memoized — priced fresh) + adjacency +
     // layer emb/adjacency checkpoints (2) + layer walk (1+2) + ground
     // walk (1+3) + embedded fixed walk (1+3) + per checkpoint + write
+    // (measured 22 fresh-session at sf0.01)
     "q331_nn_hnsw_serve" -> 24,
     // multi-level HNSW: trainer (6) + und + lrank ckpt + 4 layer-adj
     // ckpts + 3 layer walks (2 each) + pool ckpt + efWalk (init + empty
     // expanded + 3 hops × front/expanded/visited) + single-layer arm
-    // (walk 3 + ground 4) + per ckpt + census write (measured 40)
+    // (walk 3 + ground 4) + per ckpt + census write (measured 37
+    // fresh-session at sf0.01)
     "q336_nn_hnsw_multilevel" -> 44,
     // clustered-geometry arm: q336's serve actions minus the shared
     // trainer, plus the blend checkpoint and ring-ground build
-    // (measured 36 fresh-session)
+    // (measured 33 fresh-session at sf0.01)
     "q341_nn_hnsw_clustered" -> 40,
     // IVF-as-table: trainer (3) + probe-cid collect + publish stage
     // stats/write + readPoint manifest reads + census
@@ -719,7 +723,7 @@ object PlanLint {
     "q345_filtered_ann" -> 10,
     // filtered graph serve: trainer (6, memoized — priced fresh) +
     // adjacency + entry + 3 hop checkpoints + pass checkpoint + census
-    // write (measured 13 fresh-session)
+    // write (measured 13 fresh-session at sf0.01)
     "q347_filtered_graph_serve" -> 16,
     "q208_pq_learned_recall" -> 8,
     // residual IVF-PQ: coarse trainer (3) + corpus-residual checkpoint +

@@ -223,9 +223,12 @@ object IndexMaintainer {
   * session's in-memory frames, so the hash pins the durable artifact.
   */
 object IndexMaintain {
-  import Similarity.{DIM, NnK, NnRounds, bpSql, cosBp, delWaveCtes,
-    embFrame, kmeansCtes, nnCensusCtes, nnGraphCtesCore, nnInsWaveCtes,
-    nnMemberGraphFor}
+  import Similarity.{DIM, NnBeam, NnHops, NnK, NnRounds, PanelSql,
+    WrapBefore, beam, beamCte, bpSql, delWaveCtes, embFrame, entriesSql,
+    exactTopK, feedChainCtes, fixedEntries, fixedSeedSql, graphHits,
+    hitsOf, kmeansCtes, nnCensusCtes, nnEntriesFrom, nnGraphCtesCore,
+    nnMemberGraphFor, panelScorer, undSql, undirected, visitsOf, walk,
+    walkHopsSql}
 
   private def m10(c: Column): Column = pmod(c, lit(10))
 
@@ -292,19 +295,7 @@ object IndexMaintain {
     val probes = emb
       .where(col("vec_id") < 10 && m10(col("vec_id")) =!= 7)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val exactK = emb.where(m10(col("vec_id")) =!= 7)
-      .select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(gg: DataFrame, nm: String) = exactK.as("x")
-      .join(gg.as("g"), col("x.q_id") === col("g.u") &&
-        col("x.c_id") === col("g.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("g.v")).as(nm))
+    val exactK = exactTopK(emb.where(m10(col("vec_id")) =!= 7), probes)
     // per-version edge counts are manifest metadata (the count= line is
     // written from the staged files' stats) — no scan jobs needed
     val eV = (1 to 3).map(v => SnapshotStore.countOf(s, idx, v))
@@ -321,7 +312,8 @@ object IndexMaintain {
       sum(col("bp")).as("msbp"),
       sum(when(m10(col("u")) === 7 || m10(col("v")) === 7, 1L)
         .otherwise(0L)).as("n_ghost_g")))
-    hitsOf(g, "n_hits_m").join(hitsOf(scr, "n_hits_scr"), "q_id")
+    graphHits(exactK, g, "n_hits_m")
+      .join(graphHits(exactK, scr, "n_hits_scr"), "q_id")
       .crossJoin(glob)
       .select(col("q_id"), col("n_hits_m"),
         round(col("n_hits_m") / lit(NnK.toDouble), 4).as("recall_m"),
@@ -338,19 +330,14 @@ object IndexMaintain {
       .orderBy(col("q_id"))
   }
 
-  val q343Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
-       |${nnGraphCtesCore("b_", "vec_id % 10 <> 3")},
-       |${delWaveCtes(s"b_g$NnRounds", "w1", 7)},
-       |${nnInsWaveCtes("w1g2", c => s"$c % 10 = 3", "vec_id % 10 = 3",
-           "vec_id % 10 <> 3 AND vec_id % 10 <> 7")},
+  val q343Sql: String =
+    s"""WITH $feedChainCtes,
        |${nnGraphCtesCore("s_", "vec_id % 10 <> 7")},
        |exactk AS (
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${bp("q.e", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.e", "c.e")} DESC, c.vec_id) AS ern
        |    FROM emb q JOIN emb c
        |      ON c.vec_id <> q.vec_id AND c.vec_id % 10 <> 7
        |    WHERE q.vec_id < 10 AND q.vec_id % 10 <> 7)
@@ -386,7 +373,6 @@ object IndexMaintain {
        |FROM ih i JOIN sh s ON i.q_id = s.q_id
        |CROSS JOIN gstat CROSS JOIN lineage
        |ORDER BY i.q_id""".stripMargin
-  }
 
   /** q344 fixture: vec table v1 = ALL classes; two delete-only commits
     * (class 7, then class 3) subscribed with the health policy armed at
@@ -508,58 +494,18 @@ object IndexMaintain {
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     def serve(ver: Int, liveMember: Column): DataFrame = {
       val g = SnapshotStore.read(s, idx, Some(ver)).localCheckpoint()
-      // mutual edges leave ≤2× duplicate rows; the hop frontier is
-      // distinct-ed, so the adjacency dedup shuffle is saved
-      val und = g.select("u", "v")
-        .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-        .localCheckpoint()
-      val entries = Similarity.nnEntriesFrom(
-        g.select(col("u").as("vec_id")).distinct())
-      def score(cand: DataFrame): DataFrame = cand
-        .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-        .join(broadcast(probes), "q_id")
-        .where(col("v") =!= col("q_id"))
-        .select(col("q_id"), col("v"),
-          Similarity.cosBp(col("qe"), col("ve")).as("bp"))
-      def beamOf(vis: DataFrame): DataFrame = vis
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("q_id"))
-            .orderBy(col("bp").desc, col("v"))))
-        .where(col("rn") <= Similarity.NnBeam).drop("rn")
-      var visited = score(
-          probes.select("q_id").crossJoin(broadcast(entries)))
-        .localCheckpoint()
-      for (_ <- 1 to Similarity.NnHops) {
-        val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-          .join(und, "u").select(col("q_id"), col("v")).distinct()
-        visited = visited.unionAll(score(nbrs)).distinct()
-          .localCheckpoint()
-      }
-      val answer = beamOf(visited).select("q_id", "v")
-      val exact = emb.where(liveMember)
-        .select(col("vec_id").as("c_id"), col("e").as("ce"))
-        .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-        .select(col("q_id"), col("c_id"),
-          Similarity.cosBp(col("qe"), col("ce")).as("bp"))
-        .withColumn("ern", row_number().over(
-          Window.partitionBy(col("q_id"))
-            .orderBy(col("bp").desc, col("c_id"))))
-        .where(col("ern") <= Similarity.NnK).select("q_id", "c_id")
-      val nvis = visited.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_visited"))
+      val entries = nnEntriesFrom(g.select(col("u").as("vec_id")).distinct())
+      val visited = walk(panelScorer(emb, probes), undirected(g),
+        fixedEntries(probes, entries), NnHops, NnBeam)
+      val answer = beam(visited, NnBeam).select("q_id", "v")
       val nins = answer.where(m10(col("v")) === 3)
         .groupBy(col("q_id")).agg(count(lit(1)).as("n_ans_ins"))
-      exact.as("x")
-        .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-          col("x.c_id") === col("a.v"), "left")
-        .groupBy(col("x.q_id").as("q_id"))
-        .agg(count(col("a.v")).as("n_hits"))
-        .join(nvis, "q_id")
+      hitsOf(exactTopK(emb.where(liveMember), probes), answer, "n_hits")
+        .join(visitsOf(visited, "n_visited"), "q_id")
         .join(nins, Seq("q_id"), "left")
         .select(lit(ver.toLong).as("idx_version"), col("q_id"),
           col("n_hits"),
-          round(col("n_hits") / lit(Similarity.NnK.toDouble), 4)
-            .as("recall"),
+          round(col("n_hits") / lit(NnK.toDouble), 4).as("recall"),
           col("n_visited"),
           coalesce(col("n_ans_ins"), lit(0L)).as("n_ans_ins"))
     }
@@ -569,51 +515,16 @@ object IndexMaintain {
   }
 
   val q348Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
     // one beam-serve walk replay over graph CTE `gin`, prefix-isolated
-    def walkCtes(P: String, gin: String): String = {
-      val hops = (1 to Similarity.NnHops).map { h =>
-        s"""${P}fr${h - 1} AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS rn FROM ${P}vis${h - 1})
-           |  WHERE rn <= ${Similarity.NnBeam}),
-           |${P}nb$h AS (
-           |  SELECT DISTINCT f.q_id, u2.v FROM ${P}fr${h - 1} f
-           |  JOIN ${P}und u2 ON f.v = u2.u),
-           |${P}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${P}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${P}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${P}vis${h - 1}
-           |    UNION ALL SELECT * FROM ${P}sv$h))"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""${P}ents AS (
-         |  SELECT u AS v FROM (SELECT DISTINCT u FROM $gin)
-         |  ORDER BY md5('entry:' || CAST(u AS VARCHAR)), u
-         |  LIMIT ${Similarity.NnEntries}),
-         |${P}und AS (SELECT u, v FROM $gin
-         |        UNION SELECT v, u FROM $gin),
-         |${P}vis0 AS MATERIALIZED (
-         |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM qprobes q CROSS JOIN ${P}ents en
-         |  JOIN emb ev ON en.v = ev.vec_id
-         |  WHERE en.v <> q.q_id),
-         |$hops,
-         |${P}ans AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${P}vis${Similarity.NnHops})
-         |  WHERE rn <= ${Similarity.NnBeam})"""
-        .stripMargin
-    }
+    def walkCtes(P: String, gin: String): String =
+      s"""${entriesSql(s"${P}ents", s"(SELECT DISTINCT u FROM $gin)", "u")},
+         |${undSql(s"${P}und", gin)},
+         |${fixedSeedSql(s"${P}vis0", s"${P}ents", "en")},
+         |${walkHopsSql(P, s"${P}und", NnHops, NnBeam, PanelSql, WrapBefore)},
+         |${beamCte(s"${P}ans", s"${P}vis$NnHops", NnBeam)}""".stripMargin
     def censusSql(P: String, ver: Int, liveWhere: String): String =
       s"""SELECT CAST($ver AS BIGINT) AS idx_version, h.q_id, h.n_hits,
-         |  round(h.n_hits / ${Similarity.NnK}.0, 4) AS recall,
+         |  round(h.n_hits / $NnK.0, 4) AS recall,
          |  nv.n_visited, coalesce(ni.n_ans_ins, 0) AS n_ans_ins
          |FROM (
          |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
@@ -621,24 +532,20 @@ object IndexMaintain {
          |    SELECT q_id, c_id FROM (
          |      SELECT q.q_id, c.vec_id AS c_id,
          |        row_number() OVER (PARTITION BY q.q_id
-         |          ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
+         |          ORDER BY ${bpSql("q.qe", "c.e")} DESC, c.vec_id) AS ern
          |      FROM qprobes q JOIN emb c
          |        ON c.vec_id <> q.q_id AND ($liveWhere))
-         |    WHERE ern <= ${Similarity.NnK}) e
+         |    WHERE ern <= $NnK) e
          |  LEFT JOIN ${P}ans a ON e.q_id = a.q_id AND e.c_id = a.v
          |  GROUP BY e.q_id) h
          |JOIN (SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited
-         |      FROM ${P}vis${Similarity.NnHops} GROUP BY q_id) nv
+         |      FROM ${P}vis$NnHops GROUP BY q_id) nv
          |  ON h.q_id = nv.q_id
          |LEFT JOIN (SELECT q_id, CAST(count(*) AS BIGINT) AS n_ans_ins
          |           FROM ${P}ans WHERE v % 10 = 3 GROUP BY q_id) ni
          |  ON h.q_id = ni.q_id"""
         .stripMargin
-    s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
-       |${nnGraphCtesCore("b_", "vec_id % 10 <> 3")},
-       |${delWaveCtes(s"b_g$NnRounds", "w1", 7)},
-       |${nnInsWaveCtes("w1g2", c => s"$c % 10 = 3", "vec_id % 10 = 3",
-           "vec_id % 10 <> 3 AND vec_id % 10 <> 7")},
+    s"""WITH $feedChainCtes,
        |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
        |            WHERE vec_id < 10 AND vec_id % 10 <> 7),
        |${walkCtes("s2", "w1g2")},

@@ -2819,19 +2819,7 @@ object Similarity {
     val g = nnGraphFor(s, d)
     val probes = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val exactK = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("bp").desc,
-          col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    val hits = exactK.as("x")
-      .join(g.as("gg"), col("x.q_id") === col("gg.u") &&
-        col("x.c_id") === col("gg.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("gg.v")).as("n_hits"))
+    val hits = graphHits(exactTopK(emb, probes), g, "n_hits")
     val glob = broadcast(g.agg(count(lit(1)).as("g_edges"),
       sum(col("bp")).as("sbp")))
     hits.crossJoin(glob)
@@ -2859,7 +2847,6 @@ object Similarity {
     val d2 = "list_dot_product(p.sub, p.sub)" +
       " - 2*list_dot_product(p.sub, c.carr)" +
       " + list_dot_product(c.carr, c.carr)"
-    def bp(a: String, b: String) = bpSql(a, b)
     val memberFilter = if (posWhere.isEmpty) "" else s"\n  WHERE $posWhere"
     val rounds = (1 to NnRounds).map { r =>
       s"""${P}rev$r AS (
@@ -2876,7 +2863,7 @@ object Similarity {
          |  FROM ${P}b$r x JOIN ${P}b$r y ON x.v = y.u
          |  WHERE x.u <> y.v),
          |${P}sc$r AS (
-         |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+         |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
          |  FROM ${P}cand$r c JOIN emb eu ON c.u = eu.vec_id
          |                JOIN emb ev ON c.v = ev.vec_id),
          |${P}g$r AS MATERIALIZED (
@@ -2911,9 +2898,9 @@ object Similarity {
        |  FROM ${P}bpos a JOIN ${P}bpos b
        |    ON a.bkt = b.bkt AND b.rn BETWEEN a.rn + 1 AND a.rn + 3),
        |${P}p0 AS (
-       |  SELECT u, v, ${bp("ue", "ve")} AS bp FROM ${P}raw
+       |  SELECT u, v, ${bpSql("ue", "ve")} AS bp FROM ${P}raw
        |  UNION ALL
-       |  SELECT v, u, ${bp("ve", "ue")} FROM ${P}raw),
+       |  SELECT v, u, ${bpSql("ve", "ue")} FROM ${P}raw),
        |${P}g0 AS MATERIALIZED (
        |  SELECT u, v, bp FROM (
        |    SELECT *, row_number() OVER (PARTITION BY u
@@ -2929,14 +2916,13 @@ object Similarity {
     s"""${kmeansCtes(1, DIM, 8, 2)},
        |${nnGraphCtesCore("", "")}""".stripMargin
 
-  val q317Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
+  val q317Sql: String =
     s"""WITH $nnGraphCtes,
        |exactk AS (
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${bp("q.e", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.e", "c.e")} DESC, c.vec_id) AS ern
        |    FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
        |    WHERE q.vec_id < 10)
        |  WHERE ern <= $NnK),
@@ -2952,7 +2938,6 @@ object Similarity {
        |  g_edges, g_avg_bp
        |FROM hits h CROSS JOIN gstat
        |ORDER BY h.q_id""".stripMargin
-  }
 
   // ─── q322: graph-ANN SERVING — beam search over the k-NN graph ────────
   // q317 trains the neighbor graph; this is how production retrieval
@@ -2987,127 +2972,420 @@ object Similarity {
   private[graft] val NnHops = 3
   private[graft] val NnEntries = 4
 
-  def q322NnBeamServe(s: SparkSession, d: String): DataFrame = {
-    val emb = embFrame(s, d)
-    val g = nnGraphFor(s, d)
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    val probes = emb.where(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val entries = emb
-      .select(col("vec_id").as("v"),
-        md5(concat(lit("entry:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(NnEntries).select("v")
-    def score(cand: DataFrame): DataFrame = cand
+  // ─── the beam-walk kernel: ONE search routine over a shared index ────
+  // Every graph serve and insert placement (q322, q325, q331, q336,
+  // q341, q347, the q324/q342/q343 insert waves, q348) runs the same
+  // walk: score the entries, then per hop expand the best-`width`
+  // visited vertices along the undirected adjacency and score only the
+  // neighbours not yet visited. The one thing callers vary is the
+  // [[Scorer]] — the panel scorer (a small broadcast probe set,
+  // self-pairs excluded) or the batch scorer (a corpus-scale batch,
+  // plain equi-join) — so no kernel code branches on its caller. The
+  // SQL builders below are the oracle's twins: the same hop chain as
+  // unrolled CTEs, independent of the Spark code.
+
+  /** Scores (q_id, v) candidate pairs into (q_id, v, bp); 1:1 on unique
+    * pairs. */
+  private[graft] type Scorer = DataFrame => DataFrame
+
+  /** Panel scorer: the probes (q_id, qe) are a small broadcast panel,
+    * and a probe never scores itself. */
+  private[graft] def panelScorer(emb: DataFrame, probes: DataFrame): Scorer =
+    cand => cand
       .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
       .join(broadcast(probes), "q_id")
       .where(col("v") =!= col("q_id"))
       .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnBeam).drop("rn")
-    var visited = score(
-        probes.select("q_id").crossJoin(broadcast(entries)))
-      .localCheckpoint()
-    for (_ <- 1 to NnHops) {
-      val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-        .join(und, "u").select(col("q_id"), col("v")).distinct()
-      // r15 (§2.3/§2.4): only UNSEEN candidates are scored. visited is a
-      // SET (entries unique; score is 1:1 on unique (q_id, v)), and bp is
-      // deterministic, so anti-join-then-plain-union is row-identical to
-      // union-then-distinct — it drops the full-frame distinct shuffle
-      // per hop AND the duplicate embedding fetches for re-visited
-      // vertices.
-      val fresh = nbrs.join(visited.select("q_id", "v"),
-        Seq("q_id", "v"), "left_anti")
-      visited = visited.unionAll(score(fresh)).localCheckpoint()
+
+  /** Batch scorer: the batch (q_id, qe) grows with the corpus, so it is a
+    * plain equi-join, never a broadcast. Batch ids are never vertices of
+    * the walked graph, so no self-pair can arise. */
+  private[graft] def batchScorer(emb: DataFrame, batch: DataFrame): Scorer =
+    cand => cand
+      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
+      .join(batch, "q_id")
+      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
+
+  private def byBp = Window.partitionBy(col("q_id"))
+    .orderBy(col("bp").desc, col("v"))
+
+  /** The best `width` rows per probe by (bp desc, v). */
+  private[graft] def beam(vis: DataFrame, width: Int): DataFrame = vis
+    .withColumn("rn", row_number().over(byBp))
+    .where(col("rn") <= width).drop("rn")
+
+  /** Both directions of a graph's (u, v) edges, checkpointed. Mutual
+    * edges leave ≤2× duplicate rows; every hop distinct-s its neighbour
+    * frontier, so the dedup shuffle is saved. */
+  private[graft] def undirected(g: DataFrame): DataFrame = g.select("u", "v")
+    .unionAll(g.select(col("v").as("u"), col("u").as("v")))
+    .localCheckpoint()
+
+  /** Every query of `qs` (q_id) enters at every vertex of the small
+    * entry list `ents` (v). */
+  private[graft] def fixedEntries(qs: DataFrame, ents: DataFrame): DataFrame =
+    qs.select("q_id").crossJoin(broadcast(ents))
+
+  /** The md5 entry ordering key: entry panels take the first ids by
+    * (entryHash(id), id). */
+  private def entryHash(c: Column): Column =
+    md5(concat(lit("entry:"), c.cast("string")))
+
+  /** The first `n` vertices of `vs` (column `v`) in entry order. */
+  private def topEntries(vs: DataFrame, n: Int): DataFrame = vs
+    .select(col("v"), entryHash(col("v")).as("h"))
+    .orderBy(col("h"), col("v")).limit(n).select("v")
+
+  /** Named error of the walk's set precondition. */
+  private[graft] val WalkEntriesNotASet = "WALK_ENTRIES_NOT_A_SET"
+
+  /** `vis` with [[walk]]'s set precondition enforced by name: bp is a
+    * function of the pair, so a duplicate (q_id, v) sorts adjacent under
+    * the beam's own window, and comparing each row with its predecessor
+    * there reuses the beam's exchange. */
+  private def requireSet(vis: DataFrame): DataFrame = vis
+    .withColumn("prev", lag(col("v"), 1).over(byBp))
+    .where(when(col("prev") === col("v"),
+        raise_error(lit(s"$WalkEntriesNotASet: a walk's entries hold " +
+          "a duplicate (q_id, v) pair")))
+      .otherwise(lit(true)))
+    .drop("prev")
+
+  /** One hop: expand `front` along `adj` and add the UNSEEN neighbours'
+    * scores. `visited` is a set and bp is deterministic, so
+    * anti-join-then-plain-union is row-identical to union-then-distinct,
+    * without the full-frame distinct shuffle per hop or the duplicate
+    * embedding fetches for re-visited vertices. */
+  private def expand(score: Scorer, adj: DataFrame, visited: DataFrame,
+                     front: DataFrame): DataFrame = {
+    val nbrs = front.select(col("q_id"), col("v").as("u"))
+      .join(adj, "u").select(col("q_id"), col("v")).distinct()
+    val fresh = nbrs.join(visited.select("q_id", "v"),
+      Seq("q_id", "v"), "left_anti")
+    visited.unionAll(score(fresh)).localCheckpoint()
+  }
+
+  /** Beam walk: score `entries` (q_id, v — a set, enforced), then `hops`
+    * times expand each probe's best `width` visited vertices along the
+    * undirected adjacency `adj`. Returns the visited set (q_id, v, bp). */
+  private[graft] def walk(score: Scorer, adj: DataFrame, entries: DataFrame,
+                          hops: Int, width: Int): DataFrame = {
+    var visited = score(entries).localCheckpoint()
+    for (h <- 1 to hops) {
+      // hop 1 reads the scored entries through the check: every row of
+      // it feeds the hop's union, while the beam alone goes unread when
+      // the adjacency is empty. Later visited frames are sets by
+      // construction (see [[expand]]).
+      val vis = if (h == 1) requireSet(visited) else visited
+      visited = expand(score, adj, vis, beam(vis, width))
     }
-    val answer = beamOf(visited).select("q_id", "v")
-    val exact = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
+    visited
+  }
+
+  /** HNSW's actual SEARCH-LAYER loop (Malkov & Yashunin alg. 2), both
+    * halves: each hop expands the best `width` UNEXPANDED candidates
+    * ([[walk]] re-selects the global top-width every hop, so once the
+    * beam stabilizes its later hops re-expand the same vertices and
+    * score nothing new), and a candidate only expands while it can still
+    * IMPROVE the running top-[[Hnsw2EfPool]] — one whose bp is below the
+    * pool's floor is pruned, the published termination rule. Converged
+    * probes stop paying; hard probes keep exploring. `visited0` (the
+    * seed pool) must be a set. */
+  private def efWalk(score: Scorer, adj: DataFrame, visited0: DataFrame,
+                     widths: Seq[Int]): DataFrame = {
+    var visited = visited0.localCheckpoint()
+    var expanded = visited.select("q_id", "v").limit(0).localCheckpoint()
+    for (width <- widths) {
+      val kth = visited
+        .withColumn("krn", row_number().over(byBp))
+        .where(col("krn") === Hnsw2EfPool)
+        .select(col("q_id"), col("bp").as("kbp"))
+      val front = beam(
+        visited.join(expanded, Seq("q_id", "v"), "left_anti"), width)
+        .join(kth, Seq("q_id"), "left")
+        .where(col("kbp").isNull || col("bp") >= col("kbp"))
+        .select("q_id", "v").localCheckpoint()
+      // lazy: a union of already-checkpointed fronts — consumers pay
+      // one small anti-join probe, not a checkpoint job per width
+      expanded = expanded.unionAll(front)
+      visited = expand(score, adj, visited, front)
+    }
+    visited
+  }
+
+  /** Exact top-[[NnK]] per probe over the candidate corpus `cands`
+    * (vec_id, e): brute force against the broadcast probe panel — the
+    * recall census's ground truth (q_id, c_id). */
+  private[graft] def exactTopK(cands: DataFrame,
+                               probes: DataFrame): DataFrame =
+    cands.select(col("vec_id").as("c_id"), col("e").as("ce"))
       .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
       .select(col("q_id"), col("c_id"),
         cosBp(col("qe"), col("ce")).as("bp"))
       .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("bp").desc, col("c_id"))))
       .where(col("ern") <= NnK).select("q_id", "c_id")
-    val nvis = visited.groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_visited"))
+
+  /** Per `by` group, how many of `exact`'s (…, c_id) pairs `found`
+    * (…, v) holds: recall's numerator, as column `nm`. */
+  private[graft] def hitsOf(exact: DataFrame, found: DataFrame, nm: String,
+                            by: Seq[String] = Seq("q_id")): DataFrame =
     exact.as("x")
-      .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-        col("x.c_id") === col("a.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("a.v")).as("n_hits"))
-      .join(nvis, "q_id")
+      .join(found.as("a"),
+        by.map(k => col(s"x.$k") === col(s"a.$k")).reduce(_ && _) &&
+          col("x.c_id") === col("a.v"), "left")
+      .groupBy(by.map(k => col(s"x.$k").as(k)): _*)
+      .agg(count(col("a.v")).as(nm))
+
+  /** [[hitsOf]] against a graph's adjacency lists: a probe's hits are
+    * the exact neighbours its own list holds. */
+  private[graft] def graphHits(exact: DataFrame, g: DataFrame,
+                               nm: String): DataFrame =
+    hitsOf(exact, g.select(col("u").as("q_id"), col("v")), nm)
+
+  /** Rows per probe of a visited set, as column `nm`. */
+  private[graft] def visitsOf(vis: DataFrame, nm: String): DataFrame =
+    vis.groupBy(col("q_id")).agg(count(lit(1)).as(nm))
+
+  /** One serve arm's per-probe census: `n_hits_$tag` of the beam answer
+    * over `vis`, and `n_visited_$tag` over every visited row the arm
+    * paid for (`paid`: `vis`, plus any upper-layer walks). */
+  private def armCensus(exact: DataFrame, tag: String, vis: DataFrame,
+                        paid: DataFrame): DataFrame =
+    hitsOf(exact, beam(vis, NnBeam).select("q_id", "v"), s"n_hits_$tag")
+      .join(visitsOf(paid, s"n_visited_$tag"), "q_id")
+
+  /** Two arms side by side (`per`: q_id + both [[armCensus]] column
+    * pairs) with per-probe recall and the panel totals. */
+  private def armsReport(per: DataFrame, a: String, b: String): DataFrame = {
+    val tot = broadcast(per.agg(
+      sum(col(s"n_hits_$a")).as(s"tot_hits_$a"),
+      sum(col(s"n_visited_$a")).as(s"tot_vis_$a"),
+      sum(col(s"n_hits_$b")).as(s"tot_hits_$b"),
+      sum(col(s"n_visited_$b")).as(s"tot_vis_$b")))
+    def recall(t: String) =
+      round(col(s"n_hits_$t") / lit(NnK.toDouble), 4).as(s"recall_$t")
+    per.crossJoin(tot)
+      .select(col("q_id"), col(s"n_hits_$a"), recall(a),
+        col(s"n_visited_$a"), col(s"n_hits_$b"), recall(b),
+        col(s"n_visited_$b"),
+        col(s"tot_hits_$a"), col(s"tot_vis_$a"),
+        col(s"tot_hits_$b"), col(s"tot_vis_$b"))
+      .orderBy(col("q_id"))
+  }
+
+  // ── the kernel's oracle twins: CTE builders for DuckDB ──
+
+  /** The oracle twin of a [[Scorer]]: the probe CTE candidates are scored
+    * against, and whether self-pairs are excluded (panel) or cannot
+    * arise (batch). */
+  private[graft] case class ScorerSql(probes: String, panel: Boolean)
+  private[graft] val PanelSql = ScorerSql("qprobes", panel = true)
+  private val BatchSql = ScorerSql("newq", panel = false)
+
+  // line layouts of a hop's visited-set union, one per reference text
+  // (the oracle text stays byte-identical across the builders' callers)
+  private val OneLine = " UNION ALL "
+  private val WrapAfter = " UNION ALL\n    "
+  private[graft] val WrapBefore = "\n    UNION ALL "
+
+  /** `name`: the best `width` rows per probe of `from` — [[beam]]. */
+  private[graft] def beamCte(name: String, from: String,
+                             width: Int): String =
+    s"""$name AS (
+       |  SELECT q_id, v FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY q_id
+       |      ORDER BY bp DESC, v) AS rn FROM $from)
+       |  WHERE rn <= $width)""".stripMargin
+
+  /** `name`: both directions of graph CTE `g` — [[undirected]]. */
+  private[graft] def undSql(name: String, g: String,
+                            wrap: String = "\n        "): String =
+    s"$name AS (SELECT u, v FROM $g${wrap}UNION SELECT v, u FROM $g)"
+
+  /** `name`: the first [[NnEntries]] ids `c` of `from` in entry order —
+    * [[nnEntriesFrom]]. */
+  private[graft] def entriesSql(name: String, from: String,
+                                c: String = "vec_id"): String =
+    s"""$name AS (
+       |  SELECT $c AS v FROM $from
+       |  ORDER BY md5('entry:' || CAST($c AS VARCHAR)), $c
+       |  LIMIT $NnEntries)""".stripMargin
+
+  /** `name`: hop 0 of a walk whose probes all enter at the entry list
+    * `ents` (aliased `a`) — [[fixedEntries]] scored. */
+  private[graft] def fixedSeedSql(name: String, ents: String, a: String,
+                                  sc: ScorerSql = PanelSql): String = {
+    val self = if (sc.panel) s"\n  WHERE $a.v <> q.q_id" else ""
+    s"""$name AS MATERIALIZED (
+       |  SELECT q.q_id, $a.v, ${bpSql("q.qe", "ev.e")} AS bp
+       |  FROM ${sc.probes} q CROSS JOIN $ents $a
+       |  JOIN emb ev ON $a.v = ev.vec_id$self)""".stripMargin
+  }
+
+  /** `name`: hop 0 of a panel walk from per-probe entries `ents`
+    * (q_id, v; aliased `a`). */
+  private def seedSql(name: String, ents: String, a: String): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT $a.q_id, $a.v, ${bpSql("q.qe", "ev.e")} AS bp
+       |  FROM $ents $a JOIN emb ev ON $a.v = ev.vec_id
+       |  JOIN qprobes q ON $a.q_id = q.q_id
+       |  WHERE $a.v <> $a.q_id)""".stripMargin
+
+  /** Hop `h`'s scored candidates `${p}sv$h` from `${p}nb$h`. */
+  private def scoreCte(p: String, h: Int, sc: ScorerSql): String = {
+    val self = if (sc.panel) "\n  WHERE s.v <> s.q_id" else ""
+    s"""${p}sv$h AS (
+       |  SELECT s.q_id, s.v, ${bpSql("q.qe", "ev.e")} AS bp
+       |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
+       |  JOIN ${sc.probes} q ON s.q_id = q.q_id$self)""".stripMargin
+  }
+
+  /** Hop `h`'s visited set: the previous one plus the hop's scores. */
+  private def visCte(p: String, h: Int, layout: String): String =
+    s"""${p}vis$h AS MATERIALIZED (
+       |  SELECT DISTINCT q_id, v, bp FROM (
+       |    SELECT * FROM ${p}vis${h - 1}${layout}SELECT * FROM ${p}sv$h))"""
+      .stripMargin
+
+  /** [[walk]]'s hops 1..`hops` over adjacency CTE `adj`, prefixed `p`;
+    * needs `${p}vis0` in scope, emits `${p}vis$hops`. */
+  private[graft] def walkHopsSql(p: String, adj: String, hops: Int,
+                                 width: Int, sc: ScorerSql,
+                                 layout: String): String =
+    (1 to hops).map { h =>
+      s"""${beamCte(s"${p}fr${h - 1}", s"${p}vis${h - 1}", width)},
+         |${p}nb$h AS (
+         |  SELECT DISTINCT f.q_id, u2.v FROM ${p}fr${h - 1} f
+         |  JOIN $adj u2 ON f.v = u2.u),
+         |${scoreCte(p, h, sc)},
+         |${visCte(p, h, layout)}""".stripMargin
+    }.mkString(",\n")
+
+  /** [[efWalk]]'s hops over adjacency CTE `adj`, prefixed `p`; needs
+    * `${p}vis0` (seed pool) and `${p}exp0` (empty) in scope. Per hop:
+    * rank UNEXPANDED candidates, take the hop's width, prune below the
+    * ef-pool floor, expand, score, union. */
+  private def efHopsSql(p: String, adj: String, widths: Seq[Int]): String =
+    widths.zipWithIndex.map { case (w, i) =>
+      val h = i + 1
+      s"""${p}kth$h AS (
+         |  SELECT q_id, bp AS kbp FROM (
+         |    SELECT *, row_number() OVER (PARTITION BY q_id
+         |      ORDER BY bp DESC, v) AS krn FROM ${p}vis${h - 1})
+         |  WHERE krn = $Hnsw2EfPool),
+         |${p}fr$h AS (
+         |  SELECT q_id, v FROM (
+         |    SELECT u.q_id, u.v, u.bp, k.kbp,
+         |      row_number() OVER (PARTITION BY u.q_id
+         |        ORDER BY u.bp DESC, u.v) AS rn
+         |    FROM (SELECT x.q_id, x.v, x.bp FROM ${p}vis${h - 1} x
+         |          WHERE NOT EXISTS (SELECT 1 FROM ${p}exp${h - 1} e
+         |            WHERE e.q_id = x.q_id AND e.v = x.v)) u
+         |    LEFT JOIN ${p}kth$h k ON u.q_id = k.q_id)
+         |  WHERE rn <= $w AND (kbp IS NULL OR bp >= kbp)),
+         |${p}exp$h AS (SELECT q_id, v FROM ${p}exp${h - 1}
+         |              UNION SELECT q_id, v FROM ${p}fr$h),
+         |${p}nb$h AS (SELECT DISTINCT f.q_id, u2.v FROM ${p}fr$h f
+         |             JOIN $adj u2 ON f.v = u2.u),
+         |${scoreCte(p, h, PanelSql)},
+         |${visCte(p, h, WrapAfter)}""".stripMargin
+    }.mkString(",\n")
+
+  /** The exact top-[[NnK]] of every panel probe over `emb` —
+    * [[exactTopK]]. */
+  private def exactSql: String =
+    s"""exact AS (
+       |  SELECT q_id, c_id FROM (
+       |    SELECT q.q_id, c.vec_id AS c_id,
+       |      row_number() OVER (PARTITION BY q.q_id
+       |        ORDER BY ${bpSql("q.qe", "c.e")} DESC, c.vec_id) AS ern
+       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
+       |  WHERE ern <= $NnK)""".stripMargin
+
+  private def nvisSql(p: String, from: String): String =
+    s"""${p}nvis AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited
+       |         FROM $from GROUP BY q_id)""".stripMargin
+
+  private def hitsSql(p: String): String =
+    s"""${p}hits AS (
+       |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
+       |  FROM exact e LEFT JOIN ${p}answer a
+       |    ON e.q_id = a.q_id AND e.c_id = a.v
+       |  GROUP BY e.q_id)""".stripMargin
+
+  /** Walk `p`'s beam answer over `${p}vis$hops` and its hits (plus its
+    * visit count when `withVisits`) — [[armCensus]]. */
+  private def answerSql(p: String, hops: Int, withVisits: Boolean): String =
+    (Seq(beamCte(s"${p}answer", s"${p}vis$hops", NnBeam)) ++
+      (if (withVisits) Seq(nvisSql(p, s"${p}vis$hops")) else Nil) ++
+      Seq(hitsSql(p))).mkString(",\n")
+
+  /** The 40-probe panel head shared by the q325/q331/q336 oracles. */
+  private def panelHeadSql: String =
+    s"""WITH $nnGraphCtes,
+       |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
+       |            WHERE vec_id < $NnPanel),
+       |${undSql("und", s"g$NnRounds")},
+       |$exactSql""".stripMargin
+
+  /** q322's fixed-entry walk as the `f` arm of a panel census. */
+  private def fixedArmSql: String =
+    s"""${entriesSql("entries", "emb")},
+       |${fixedSeedSql("fvis0", "entries", "en")},
+       |${walkHopsSql("f", "und", NnHops, NnBeam, PanelSql, WrapAfter)},
+       |${answerSql("f", NnHops, withVisits = true)}""".stripMargin
+
+  /** The panel totals and final select of a two-arm census —
+    * [[armsReport]]. */
+  private def armsReportSql(a: String, b: String): String =
+    s"""tot AS (
+       |  SELECT CAST(sum(n_hits_$a) AS BIGINT) AS tot_hits_$a,
+       |    CAST(sum(n_visited_$a) AS BIGINT) AS tot_vis_$a,
+       |    CAST(sum(n_hits_$b) AS BIGINT) AS tot_hits_$b,
+       |    CAST(sum(n_visited_$b) AS BIGINT) AS tot_vis_$b
+       |  FROM per)
+       |SELECT p.q_id, p.n_hits_$a,
+       |  round(p.n_hits_$a / $NnK.0, 4) AS recall_$a,
+       |  p.n_visited_$a, p.n_hits_$b,
+       |  round(p.n_hits_$b / $NnK.0, 4) AS recall_$b,
+       |  p.n_visited_$b,
+       |  tot_hits_$a, tot_vis_$a, tot_hits_$b, tot_vis_$b
+       |FROM per p CROSS JOIN tot
+       |ORDER BY p.q_id""".stripMargin
+
+  def q322NnBeamServe(s: SparkSession, d: String): DataFrame = {
+    val emb = embFrame(s, d)
+    val und = undirected(nnGraphFor(s, d))
+    val probes = emb.where(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"))
+    val visited = walk(panelScorer(emb, probes), und,
+      fixedEntries(probes, nnEntriesFrom(emb)), NnHops, NnBeam)
+    hitsOf(exactTopK(emb, probes), beam(visited, NnBeam).select("q_id", "v"),
+        "n_hits")
+      .join(visitsOf(visited, "n_visited"), "q_id")
       .select(col("q_id"), col("n_hits"),
         round(col("n_hits") / lit(NnK.toDouble), 4).as("recall"),
         col("n_visited"))
       .orderBy(col("q_id"))
   }
 
-  val q322Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    val hops = (1 to NnHops).map { h =>
-      s"""fr${h - 1} AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM vis${h - 1})
-         |  WHERE rn <= $NnBeam),
-         |nb$h AS (
-         |  SELECT DISTINCT f.q_id, u2.v FROM fr${h - 1} f
-         |  JOIN und u2 ON f.v = u2.u),
-         |sv$h AS (
-         |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM nb$h s JOIN emb ev ON s.v = ev.vec_id
-         |  JOIN qprobes q ON s.q_id = q.q_id
-         |  WHERE s.v <> s.q_id),
-         |vis$h AS MATERIALIZED (
-         |  SELECT DISTINCT q_id, v, bp FROM (
-         |    SELECT * FROM vis${h - 1} UNION ALL SELECT * FROM sv$h))"""
-        .stripMargin
-    }.mkString(",\n")
+  val q322Sql: String =
     s"""WITH $nnGraphCtes,
        |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
        |            WHERE vec_id < 10),
-       |entries AS (
-       |  SELECT vec_id AS v FROM emb
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |und AS (SELECT u, v FROM g$NnRounds
-       |        UNION SELECT v, u FROM g$NnRounds),
-       |vis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN entries en
-       |  JOIN emb ev ON en.v = ev.vec_id
-       |  WHERE en.v <> q.q_id),
-       |$hops,
-       |answer AS (
-       |  SELECT q_id, v FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY bp DESC, v) AS rn FROM vis$NnHops)
-       |  WHERE rn <= $NnBeam),
-       |exact AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.vec_id AS c_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
-       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
-       |  WHERE ern <= $NnK),
-       |nvis AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited
-       |         FROM vis$NnHops GROUP BY q_id),
-       |hits AS (
-       |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-       |  FROM exact e LEFT JOIN answer a
-       |    ON e.q_id = a.q_id AND e.c_id = a.v
-       |  GROUP BY e.q_id)
+       |${entriesSql("entries", "emb")},
+       |${undSql("und", s"g$NnRounds")},
+       |${fixedSeedSql("vis0", "entries", "en")},
+       |${walkHopsSql("", "und", NnHops, NnBeam, PanelSql, OneLine)},
+       |${beamCte("answer", s"vis$NnHops", NnBeam)},
+       |$exactSql,
+       |${nvisSql("", s"vis$NnHops")},
+       |${hitsSql("")}
        |SELECT h.q_id, h.n_hits, round(h.n_hits / $NnK.0, 4) AS recall,
        |  n.n_visited
        |FROM hits h JOIN nvis n ON h.q_id = n.q_id
        |ORDER BY h.q_id""".stripMargin
-  }
 
   // ─── q325: per-query entry selection for graph serving ───────────────
   // q322's stated limitation: 4 FIXED entries bound every answer to
@@ -3137,42 +3415,13 @@ object Similarity {
 
   def q325NnIvfEntryServe(s: SparkSession, d: String): DataFrame = {
     val emb = embFrame(s, d)
-    val g = nnGraphFor(s, d)
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    val und = undirected(nnGraphFor(s, d))
     val probes = emb.where(col("vec_id") < NnPanel)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(broadcast(probes), "q_id")
-      .where(col("v") =!= col("q_id"))
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnBeam).drop("rn")
-    def walk(entries: DataFrame, hops: Int): DataFrame = {
-      var visited = score(entries).localCheckpoint()
-      for (_ <- 1 to hops) {
-        val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-          .join(und, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
+    val score = panelScorer(emb, probes)
     // fixed global entries, 3 hops — q322's walk on the wider panel
-    val fent = emb
-      .select(col("vec_id").as("v"),
-        md5(concat(lit("entry:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(NnEntries).select("v")
-    val fvis = walk(
-      probes.select("q_id").crossJoin(broadcast(fent)), NnHops)
+    val fvis = walk(score, und, fixedEntries(probes, nnEntriesFrom(emb)),
+      NnHops, NnBeam)
     // IVF-seeded per-query entries, 2 hops
     val cents = kmeansFor(s, d, 1, DIM, 8, 2)
     val pcells = probes
@@ -3184,115 +3433,31 @@ object Similarity {
       .select(col("vec_id"), col("cid"))
     val centry = afin
       .withColumn("rn", row_number().over(Window.partitionBy(col("cid"))
-        .orderBy(md5(concat(lit("entry:"), col("vec_id").cast("string"))),
-                 col("vec_id"))))
+        .orderBy(entryHash(col("vec_id")), col("vec_id"))))
       .where(col("rn") <= NnPerCell)
       .select(col("cid"), col("vec_id").as("v"))
     val ient = pcells.join(centry, "cid").select("q_id", "v").distinct()
-    val jvis = walk(ient, NnIvfHops)
-    val exact = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def census(vis: DataFrame, tag: String): DataFrame = {
-      val answer = beamOf(vis).select("q_id", "v")
-      exact.as("x")
-        .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-          col("x.c_id") === col("a.v"), "left")
-        .groupBy(col("x.q_id").as("q_id"))
-        .agg(count(col("a.v")).as(s"n_hits_$tag"))
-        .join(vis.groupBy(col("q_id"))
-          .agg(count(lit(1)).as(s"n_visited_$tag")), "q_id")
-    }
+    val jvis = walk(score, und, ient, NnIvfHops, NnBeam)
+    val exact = exactTopK(emb, probes)
     // materialized: `per` feeds both the panel-total aggregate and the
     // final select — without this the two walks re-derive per consumer
-    val per = census(jvis, "ivf").join(census(fvis, "fixed"), "q_id")
+    val per = armCensus(exact, "ivf", jvis, jvis)
+      .join(armCensus(exact, "fixed", fvis, fvis), "q_id")
       .localCheckpoint()
-    val tot = broadcast(per.agg(
-      sum(col("n_hits_ivf")).as("tot_hits_ivf"),
-      sum(col("n_visited_ivf")).as("tot_vis_ivf"),
-      sum(col("n_hits_fixed")).as("tot_hits_fixed"),
-      sum(col("n_visited_fixed")).as("tot_vis_fixed")))
-    per.crossJoin(tot)
-      .select(col("q_id"), col("n_hits_ivf"),
-        round(col("n_hits_ivf") / lit(NnK.toDouble), 4).as("recall_ivf"),
-        col("n_visited_ivf"), col("n_hits_fixed"),
-        round(col("n_hits_fixed") / lit(NnK.toDouble), 4)
-          .as("recall_fixed"),
-        col("n_visited_fixed"),
-        col("tot_hits_ivf"), col("tot_vis_ivf"),
-        col("tot_hits_fixed"), col("tot_vis_fixed"))
-      .orderBy(col("q_id"))
+    armsReport(per, "ivf", "fixed")
   }
 
   val q325Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
     // two beam walks over the same graph/probes, prefixed f (fixed
     // entries, 3 hops) and j (IVF-seeded entries, 2 hops)
-    def hopsOf(p: String, hops: Int) = (1 to hops).map { h =>
-      s"""${p}fr${h - 1} AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${p}vis${h - 1})
-         |  WHERE rn <= $NnBeam),
-         |${p}nb$h AS (
-         |  SELECT DISTINCT f.q_id, u2.v FROM ${p}fr${h - 1} f
-         |  JOIN und u2 ON f.v = u2.u),
-         |${p}sv$h AS (
-         |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-         |  JOIN qprobes q ON s.q_id = q.q_id
-         |  WHERE s.v <> s.q_id),
-         |${p}vis$h AS MATERIALIZED (
-         |  SELECT DISTINCT q_id, v, bp FROM (
-         |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-         |    SELECT * FROM ${p}sv$h))""".stripMargin
-    }.mkString(",\n")
-    def answerOf(p: String, hops: Int) =
-      s"""${p}answer AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${p}vis$hops)
-         |  WHERE rn <= $NnBeam),
-         |${p}nvis AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited
-         |         FROM ${p}vis$hops GROUP BY q_id),
-         |${p}hits AS (
-         |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-         |  FROM exact e LEFT JOIN ${p}answer a
-         |    ON e.q_id = a.q_id AND e.c_id = a.v
-         |  GROUP BY e.q_id)""".stripMargin
     val d2q = "list_dot_product(q.qe, q.qe)" +
       " - 2*list_dot_product(q.qe, c.carr)" +
       " + list_dot_product(c.carr, c.carr)"
     val d2p = "list_dot_product(p.sub, p.sub)" +
       " - 2*list_dot_product(p.sub, c.carr)" +
       " + list_dot_product(c.carr, c.carr)"
-    s"""WITH $nnGraphCtes,
-       |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
-       |            WHERE vec_id < $NnPanel),
-       |und AS (SELECT u, v FROM g$NnRounds
-       |        UNION SELECT v, u FROM g$NnRounds),
-       |exact AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.vec_id AS c_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
-       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
-       |  WHERE ern <= $NnK),
-       |entries AS (
-       |  SELECT vec_id AS v FROM emb
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |fvis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN entries en
-       |  JOIN emb ev ON en.v = ev.vec_id
-       |  WHERE en.v <> q.q_id),
-       |${hopsOf("f", NnHops)},
-       |${answerOf("f", NnHops)},
+    s"""$panelHeadSql,
+       |$fixedArmSql,
        |afin AS (
        |  SELECT vec_id, cid FROM (
        |    SELECT p.vec_id, c.cid,
@@ -3317,13 +3482,9 @@ object Similarity {
        |  WHERE rn <= $NnPerCell),
        |ient AS (SELECT DISTINCT p.q_id, ce.v
        |         FROM pcells p JOIN centry ce ON p.cid = ce.cid),
-       |jvis0 AS MATERIALIZED (
-       |  SELECT i.q_id, i.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM ient i JOIN emb ev ON i.v = ev.vec_id
-       |  JOIN qprobes q ON i.q_id = q.q_id
-       |  WHERE i.v <> i.q_id),
-       |${hopsOf("j", NnIvfHops)},
-       |${answerOf("j", NnIvfHops)},
+       |${seedSql("jvis0", "ient", "i")},
+       |${walkHopsSql("j", "und", NnIvfHops, NnBeam, PanelSql, WrapAfter)},
+       |${answerSql("j", NnIvfHops, withVisits = true)},
        |per AS MATERIALIZED (
        |  SELECT j.q_id, j.n_hits AS n_hits_ivf,
        |    jn.n_visited AS n_visited_ivf,
@@ -3332,20 +3493,7 @@ object Similarity {
        |  FROM jhits j JOIN jnvis jn ON j.q_id = jn.q_id
        |  JOIN fhits f ON j.q_id = f.q_id
        |  JOIN fnvis fn ON j.q_id = fn.q_id),
-       |tot AS (
-       |  SELECT CAST(sum(n_hits_ivf) AS BIGINT) AS tot_hits_ivf,
-       |    CAST(sum(n_visited_ivf) AS BIGINT) AS tot_vis_ivf,
-       |    CAST(sum(n_hits_fixed) AS BIGINT) AS tot_hits_fixed,
-       |    CAST(sum(n_visited_fixed) AS BIGINT) AS tot_vis_fixed
-       |  FROM per)
-       |SELECT p.q_id, p.n_hits_ivf,
-       |  round(p.n_hits_ivf / $NnK.0, 4) AS recall_ivf,
-       |  p.n_visited_ivf, p.n_hits_fixed,
-       |  round(p.n_hits_fixed / $NnK.0, 4) AS recall_fixed,
-       |  p.n_visited_fixed,
-       |  tot_hits_ivf, tot_vis_ivf, tot_hits_fixed, tot_vis_fixed
-       |FROM per p CROSS JOIN tot
-       |ORDER BY p.q_id""".stripMargin
+       |${armsReportSql("ivf", "fixed")}""".stripMargin
   }
 
   // ─── q331: HNSW-shape sampled UPPER LAYER for graph serving ──────────
@@ -3371,205 +3519,84 @@ object Similarity {
   private val HnswLayerBeam = 2
   private val HnswLayerHops = 2
 
-  def q331NnHnswServe(s: SparkSession, d: String): DataFrame = {
-    val emb = embFrame(s, d)
-    val g = nnGraphFor(s, d)
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    val probes = emb.where(col("vec_id") < NnPanel)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(broadcast(probes), "q_id")
-      .where(col("v") =!= col("q_id"))
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame, width: Int): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= width).drop("rn")
-    def walk(adj: DataFrame, entries: DataFrame, hops: Int,
-             width: Int): DataFrame = {
-      var visited = score(entries).localCheckpoint()
-      for (_ <- 1 to hops) {
-        val nbrs = beamOf(visited, width).select(col("q_id"), col("v").as("u"))
-          .join(adj, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
-    // upper layer + its own exact top-K adjacency (32-row bounded build)
-    val layer = emb.where(col("vec_id") >= NnPanel)
-      .select(col("vec_id").as("v"),
+  /** The HNSW layer sample: the first `n` non-panel vertices (v, e) in
+    * md5("layer:"||id) order, numbered `rn` — a shorter layer is a
+    * prefix, so layers nest for free. */
+  private def layerRanking(emb: DataFrame, n: Int): DataFrame =
+    emb.where(col("vec_id") >= NnPanel)
+      .select(col("vec_id").as("v"), col("e"),
         md5(concat(lit("layer:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(HnswLayer).select("v")
-    val lemb = layer.join(emb.select(col("vec_id").as("v"), col("e")), "v")
+      .orderBy(col("h"), col("v")).limit(n)
+      .withColumn("rn", row_number().over(
+        Window.orderBy(col("h"), col("v"))))
       .localCheckpoint()
-    val lpairs = lemb.select(col("v").as("u"), col("e").as("ue"))
-      .crossJoin(broadcast(lemb.select(col("v"), col("e").as("ve"))))
+
+  /** The undirected exact top-`k` adjacency within the first `n`
+    * vertices of a [[layerRanking]] — an n² bounded build. */
+  private def layerAdj(ranked: DataFrame, n: Int, k: Int): DataFrame = {
+    val le = ranked.where(col("rn") <= n).select(col("v"), col("e"))
+    val pairs = le.select(col("v").as("u"), col("e").as("ue"))
+      .crossJoin(broadcast(le.select(col("v"), col("e").as("ve"))))
       .where(col("u") =!= col("v"))
       .select(col("u"), col("v"), cosBp(col("ue"), col("ve")).as("bp"))
-    val ladj = lpairs
-      .withColumn("rn", row_number().over(Window.partitionBy(col("u"))
+    undirected(pairs
+      .withColumn("arn", row_number().over(Window.partitionBy(col("u"))
         .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= HnswLayerK).select("u", "v")
-    val lund = ladj.unionAll(ladj.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    val lent = layer
-      .select(col("v"),
-        md5(concat(lit("entry:"), col("v").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(1).select("v")
-    // descend: layer walk picks the ground entry per probe
-    val lvis = walk(lund,
-      probes.select("q_id").crossJoin(broadcast(lent)),
-      HnswLayerHops, HnswLayerBeam)
-    val gent = beamOf(lvis, 1).select("q_id", "v")
-    val gvis = walk(und, gent, NnHops, NnBeam)
-    // fixed 4-entry walk — q322's serve on the same panel
-    val fent = emb
-      .select(col("vec_id").as("v"),
-        md5(concat(lit("entry:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(NnEntries).select("v")
-    val fvis = walk(und,
-      probes.select("q_id").crossJoin(broadcast(fent)), NnHops, NnBeam)
-    val exact = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(vis: DataFrame, tag: String): DataFrame = {
-      val answer = beamOf(vis, NnBeam).select("q_id", "v")
-      exact.as("x")
-        .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-          col("x.c_id") === col("a.v"), "left")
-        .groupBy(col("x.q_id").as("q_id"))
-        .agg(count(col("a.v")).as(s"n_hits_$tag"))
-    }
-    val hvis = lvis.groupBy(col("q_id")).agg(count(lit(1)).as("nl"))
-      .join(gvis.groupBy(col("q_id")).agg(count(lit(1)).as("ng")), "q_id")
-      .select(col("q_id"), (col("nl") + col("ng")).as("n_visited_hnsw"))
-    val per = hitsOf(gvis, "hnsw").join(hvis, "q_id")
-      .join(hitsOf(fvis, "fixed"), "q_id")
-      .join(fvis.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_visited_fixed")), "q_id")
-      .localCheckpoint()
-    val tot = broadcast(per.agg(
-      sum(col("n_hits_hnsw")).as("tot_hits_hnsw"),
-      sum(col("n_visited_hnsw")).as("tot_vis_hnsw"),
-      sum(col("n_hits_fixed")).as("tot_hits_fixed"),
-      sum(col("n_visited_fixed")).as("tot_vis_fixed")))
-    per.crossJoin(tot)
-      .select(col("q_id"), col("n_hits_hnsw"),
-        round(col("n_hits_hnsw") / lit(NnK.toDouble), 4).as("recall_hnsw"),
-        col("n_visited_hnsw"), col("n_hits_fixed"),
-        round(col("n_hits_fixed") / lit(NnK.toDouble), 4).as("recall_fixed"),
-        col("n_visited_fixed"),
-        col("tot_hits_hnsw"), col("tot_vis_hnsw"),
-        col("tot_hits_fixed"), col("tot_vis_fixed"))
-      .orderBy(col("q_id"))
+      .where(col("arn") <= k).select("u", "v"))
   }
 
-  val q331Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    def hopsOf(p: String, adj: String, hops: Int, width: Int) =
-      (1 to hops).map { h =>
-        s"""${p}fr${h - 1} AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS rn FROM ${p}vis${h - 1})
-           |  WHERE rn <= $width),
-           |${p}nb$h AS (
-           |  SELECT DISTINCT f.q_id, u2.v FROM ${p}fr${h - 1} f
-           |  JOIN $adj u2 ON f.v = u2.u),
-           |${p}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${p}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-           |    SELECT * FROM ${p}sv$h))""".stripMargin
-      }.mkString(",\n")
-    def answerOf(p: String, hops: Int) =
-      s"""${p}answer AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${p}vis$hops)
-         |  WHERE rn <= $NnBeam),
-         |${p}nvis AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited
-         |         FROM ${p}vis$hops GROUP BY q_id),
-         |${p}hits AS (
-         |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-         |  FROM exact e LEFT JOIN ${p}answer a
-         |    ON e.q_id = a.q_id AND e.c_id = a.v
-         |  GROUP BY e.q_id)""".stripMargin
-    s"""WITH $nnGraphCtes,
-       |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
-       |            WHERE vec_id < $NnPanel),
-       |und AS (SELECT u, v FROM g$NnRounds
-       |        UNION SELECT v, u FROM g$NnRounds),
-       |exact AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.vec_id AS c_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
-       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
-       |  WHERE ern <= $NnK),
+  def q331NnHnswServe(s: SparkSession, d: String): DataFrame = {
+    val emb = embFrame(s, d)
+    val und = undirected(nnGraphFor(s, d))
+    val probes = emb.where(col("vec_id") < NnPanel)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"))
+    val score = panelScorer(emb, probes)
+    // upper layer + its own exact top-K adjacency (32-row bounded build)
+    val layer = layerRanking(emb, HnswLayer)
+    // descend: layer walk picks the ground entry per probe
+    val lvis = walk(score, layerAdj(layer, HnswLayer, HnswLayerK),
+      fixedEntries(probes, topEntries(layer, 1)),
+      HnswLayerHops, HnswLayerBeam)
+    val gvis = walk(score, und, beam(lvis, 1).select("q_id", "v"),
+      NnHops, NnBeam)
+    // fixed 4-entry walk — q322's serve on the same panel
+    val fvis = walk(score, und, fixedEntries(probes, nnEntriesFrom(emb)),
+      NnHops, NnBeam)
+    val exact = exactTopK(emb, probes)
+    val per = armCensus(exact, "hnsw", gvis, lvis.unionAll(gvis))
+      .join(armCensus(exact, "fixed", fvis, fvis), "q_id")
+      .localCheckpoint()
+    armsReport(per, "hnsw", "fixed")
+  }
+
+  val q331Sql: String =
+    s"""$panelHeadSql,
        |layer AS (
        |  SELECT vec_id AS v, e FROM emb WHERE vec_id >= $NnPanel
        |  ORDER BY md5('layer:' || CAST(vec_id AS VARCHAR)), vec_id
        |  LIMIT $HnswLayer),
        |lpairs AS (
-       |  SELECT x.v AS u, y.v AS v, ${bp("x.e", "y.e")} AS bp
+       |  SELECT x.v AS u, y.v AS v, ${bpSql("x.e", "y.e")} AS bp
        |  FROM layer x JOIN layer y ON x.v <> y.v),
        |ladj AS (
        |  SELECT u, v FROM (
        |    SELECT *, row_number() OVER (PARTITION BY u
        |      ORDER BY bp DESC, v) AS rn FROM lpairs)
        |  WHERE rn <= $HnswLayerK),
-       |lund AS (SELECT u, v FROM ladj UNION SELECT v, u FROM ladj),
+       |${undSql("lund", "ladj", " ")},
        |lent AS (
        |  SELECT v FROM layer
        |  ORDER BY md5('entry:' || CAST(v AS VARCHAR)), v LIMIT 1),
-       |lvis0 AS MATERIALIZED (
-       |  SELECT q.q_id, l.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN lent l
-       |  JOIN emb ev ON l.v = ev.vec_id
-       |  WHERE l.v <> q.q_id),
-       |${hopsOf("l", "lund", HnswLayerHops, HnswLayerBeam)},
-       |gent AS (
-       |  SELECT q_id, v FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY bp DESC, v) AS rn FROM lvis$HnswLayerHops)
-       |  WHERE rn <= 1),
-       |gvis0 AS MATERIALIZED (
-       |  SELECT ge.q_id, ge.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM gent ge JOIN emb ev ON ge.v = ev.vec_id
-       |  JOIN qprobes q ON ge.q_id = q.q_id
-       |  WHERE ge.v <> ge.q_id),
-       |${hopsOf("g", "und", NnHops, NnBeam)},
-       |${answerOf("g", NnHops)},
+       |${fixedSeedSql("lvis0", "lent", "l")},
+       |${walkHopsSql("l", "lund", HnswLayerHops, HnswLayerBeam, PanelSql,
+           WrapAfter)},
+       |${beamCte("gent", s"lvis$HnswLayerHops", 1)},
+       |${seedSql("gvis0", "gent", "ge")},
+       |${walkHopsSql("g", "und", NnHops, NnBeam, PanelSql, WrapAfter)},
+       |${answerSql("g", NnHops, withVisits = true)},
        |lnvis AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_lvis
        |          FROM lvis$HnswLayerHops GROUP BY q_id),
-       |entries AS (
-       |  SELECT vec_id AS v FROM emb
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |fvis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN entries en
-       |  JOIN emb ev ON en.v = ev.vec_id
-       |  WHERE en.v <> q.q_id),
-       |${hopsOf("f", "und", NnHops, NnBeam)},
-       |${answerOf("f", NnHops)},
+       |$fixedArmSql,
        |per AS MATERIALIZED (
        |  SELECT g.q_id, g.n_hits AS n_hits_hnsw,
        |    ln.n_lvis + gn.n_visited AS n_visited_hnsw,
@@ -3579,21 +3606,7 @@ object Similarity {
        |  JOIN lnvis ln ON g.q_id = ln.q_id
        |  JOIN fhits f ON g.q_id = f.q_id
        |  JOIN fnvis fn ON g.q_id = fn.q_id),
-       |tot AS (
-       |  SELECT CAST(sum(n_hits_hnsw) AS BIGINT) AS tot_hits_hnsw,
-       |    CAST(sum(n_visited_hnsw) AS BIGINT) AS tot_vis_hnsw,
-       |    CAST(sum(n_hits_fixed) AS BIGINT) AS tot_hits_fixed,
-       |    CAST(sum(n_visited_fixed) AS BIGINT) AS tot_vis_fixed
-       |  FROM per)
-       |SELECT p.q_id, p.n_hits_hnsw,
-       |  round(p.n_hits_hnsw / $NnK.0, 4) AS recall_hnsw,
-       |  p.n_visited_hnsw, p.n_hits_fixed,
-       |  round(p.n_hits_fixed / $NnK.0, 4) AS recall_fixed,
-       |  p.n_visited_fixed,
-       |  tot_hits_hnsw, tot_vis_hnsw, tot_hits_fixed, tot_vis_fixed
-       |FROM per p CROSS JOIN tot
-       |ORDER BY p.q_id""".stripMargin
-  }
+       |${armsReportSql("hnsw", "fixed")}""".stripMargin
 
   // ─── q336: MULTI-LEVEL HNSW — layer stack + true search-layer serve ──
   // q331 proved one sampled layer beats fixed entries; real HNSW keeps a
@@ -3637,107 +3650,25 @@ object Similarity {
   private val Hnsw2EfPool = 6       // termination floor: the ef-pool size
   private val Hnsw2EfWidths = Seq(4, 3, 2) // ground expansions per hop
 
-  def q336NnHnswMulti(s: SparkSession, d: String): DataFrame = {
-    val emb = embFrame(s, d)
-    val g = nnGraphFor(s, d)
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    val probes = emb.where(col("vec_id") < NnPanel)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(broadcast(probes), "q_id")
-      .where(col("v") =!= col("q_id"))
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame, width: Int): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= width).drop("rn")
-    def walk(adj: DataFrame, entries: DataFrame, hops: Int,
-             width: Int): DataFrame = {
-      var visited = score(entries).localCheckpoint()
-      for (_ <- 1 to hops) {
-        val nbrs = beamOf(visited, width)
-          .select(col("q_id"), col("v").as("u"))
-          .join(adj, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
-    // HNSW's actual SEARCH-LAYER loop (Malkov & Yashunin alg. 2), both
-    // halves: each hop expands the best width UNEXPANDED candidates
-    // (q331's walk re-selects the global top-width every hop, so once
-    // the beam stabilizes its later hops re-expand the same vertices
-    // and score nothing new), and a candidate only expands while it can
-    // still IMPROVE the running top-K — one whose bp is below the K-th
-    // best visited is pruned, the published termination rule. Converged
-    // probes stop paying; hard probes keep exploring.
-    def efWalk(adj: DataFrame, visited0: DataFrame,
-               widths: Seq[Int]): DataFrame = {
-      var visited = visited0.localCheckpoint()
-      var expanded = visited.select("q_id", "v").limit(0).localCheckpoint()
-      for (width <- widths) {
-        val kth = visited
-          .withColumn("krn", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("bp").desc, col("v"))))
-          .where(col("krn") === Hnsw2EfPool)
-          .select(col("q_id"), col("bp").as("kbp"))
-        val front = beamOf(
-          visited.join(expanded, Seq("q_id", "v"), "left_anti"), width)
-          .join(kth, Seq("q_id"), "left")
-          .where(col("kbp").isNull || col("bp") >= col("kbp"))
-          .select("q_id", "v").localCheckpoint()
-        // lazy: a union of already-checkpointed fronts — consumers pay
-        // one small anti-join probe, not a checkpoint job per width
-        expanded = expanded.unionAll(front)
-        val nbrs = front.select(col("q_id"), col("v").as("u"))
-          .join(adj, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
+  /** The two HNSW serve arms over embeddings `emb` (vec_id, e), probe
+    * panel `probes` and ground adjacency `und`: the three-layer descent
+    * + [[efWalk]] ground search ("ml") next to q331's single layer +
+    * fixed ground walk ("sl"). q336 runs it on the corpus, q341 on the
+    * clustered synthesis. */
+  private def hnswArms(emb: DataFrame, probes: DataFrame,
+                       und: DataFrame): DataFrame = {
+    val score = panelScorer(emb, probes)
     // ONE md5 ordering; each layer is a prefix ⇒ nested for free
-    val ranked = emb.where(col("vec_id") >= NnPanel)
-      .select(col("vec_id").as("v"), col("e"),
-        md5(concat(lit("layer:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(Hnsw2Sizes.head)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("h"), col("v"))))
-      .localCheckpoint()
-    def layerAdj(n: Int, k: Int): DataFrame = {
-      val le = ranked.where(col("rn") <= n).select(col("v"), col("e"))
-      val pairs = le.select(col("v").as("u"), col("e").as("ue"))
-        .crossJoin(broadcast(le.select(col("v"), col("e").as("ve"))))
-        .where(col("u") =!= col("v"))
-        .select(col("u"), col("v"), cosBp(col("ue"), col("ve")).as("bp"))
-      val adj = pairs
-        .withColumn("arn", row_number().over(Window.partitionBy(col("u"))
-          .orderBy(col("bp").desc, col("v"))))
-        .where(col("arn") <= k).select("u", "v")
-      adj.unionAll(adj.select(col("v").as("u"), col("u").as("v")))
-        .localCheckpoint()
-    }
-    val Seq(adj1, adj2, adj3) = Hnsw2Sizes.map(layerAdj(_, Hnsw2AdjK))
-    val topEnt = ranked.where(col("rn") <= Hnsw2Sizes.last)
-      .select(col("v"),
-        md5(concat(lit("entry:"), col("v").cast("string"))).as("eh"))
-      .orderBy(col("eh"), col("v")).limit(1).select("v")
+    val ranked = layerRanking(emb, Hnsw2Sizes.head)
+    def entry(n: Int) = topEntries(ranked.where(col("rn") <= n), 1)
+    val Seq(adj1, adj2, adj3) =
+      Hnsw2Sizes.map(layerAdj(ranked, _, Hnsw2AdjK))
     // descend: each layer's best vertex is the next layer's entry
-    val vis3 = walk(adj3, probes.select("q_id").crossJoin(broadcast(topEnt)),
+    val vis3 = walk(score, adj3, fixedEntries(probes, entry(Hnsw2Sizes.last)),
       Hnsw2Hops, Hnsw2Beam)
-    val vis2 = walk(adj2, beamOf(vis3, 1).select("q_id", "v"),
+    val vis2 = walk(score, adj2, beam(vis3, 1).select("q_id", "v"),
       Hnsw2Hops, Hnsw2Beam)
-    val vis1 = walk(adj1, beamOf(vis2, 1).select("q_id", "v"),
+    val vis1 = walk(score, adj1, beam(vis2, 1).select("q_id", "v"),
       Hnsw2Hops, Hnsw2L1Beam)
     // the ef-pool discipline: every vertex the descent SCORED is a
     // candidate — upper-layer visits are real corpus vertices with real
@@ -3746,218 +3677,86 @@ object Similarity {
     // is the distinct union of all scored vertices.
     val lpool = vis3.unionAll(vis2).unionAll(vis1).distinct()
       .localCheckpoint()
-    val mvis = efWalk(und, lpool, Hnsw2EfWidths)
+    val mvis = efWalk(score, und, lpool, Hnsw2EfWidths)
       .localCheckpoint()
     // single-layer arm — q331's hierarchy verbatim on the same panel
     // (its 32-vertex layer is this ordering's prefix 32)
-    val sadj = layerAdj(HnswLayer, HnswLayerK)
-    val sent = ranked.where(col("rn") <= HnswLayer)
-      .select(col("v"),
-        md5(concat(lit("entry:"), col("v").cast("string"))).as("eh"))
-      .orderBy(col("eh"), col("v")).limit(1).select("v")
-    val svis = walk(sadj, probes.select("q_id").crossJoin(broadcast(sent)),
+    val sadj = layerAdj(ranked, HnswLayer, HnswLayerK)
+    val svis = walk(score, sadj, fixedEntries(probes, entry(HnswLayer)),
       HnswLayerHops, HnswLayerBeam)
-    val gvis = walk(und, beamOf(svis, 1).select("q_id", "v"),
+    val gvis = walk(score, und, beam(svis, 1).select("q_id", "v"),
       NnHops, NnBeam)
-    val exact = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(vis: DataFrame, nm: String): DataFrame = {
-      val answer = beamOf(vis, NnBeam).select("q_id", "v")
-      exact.as("x")
-        .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-          col("x.c_id") === col("a.v"), "left")
-        .groupBy(col("x.q_id").as("q_id"))
-        .agg(count(col("a.v")).as(nm))
-    }
-    def nvisOf(vs: Seq[DataFrame], nm: String): DataFrame = vs
-      .map(_.groupBy(col("q_id")).agg(count(lit(1)).as("n")))
-      .reduce(_.unionAll(_))
-      .groupBy(col("q_id")).agg(sum(col("n")).as(nm))
-    val per = hitsOf(mvis, "n_hits_ml")
-      .join(mvis.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_visited_ml")), "q_id")
-      .join(hitsOf(gvis, "n_hits_sl"), "q_id")
-      .join(nvisOf(Seq(svis, gvis), "n_visited_sl"), "q_id")
+    val exact = exactTopK(emb, probes)
+    val per = armCensus(exact, "ml", mvis, mvis)
+      .join(armCensus(exact, "sl", gvis, svis.unionAll(gvis)), "q_id")
       .localCheckpoint()
-    val tot = broadcast(per.agg(
-      sum(col("n_hits_ml")).as("tot_hits_ml"),
-      sum(col("n_visited_ml")).as("tot_vis_ml"),
-      sum(col("n_hits_sl")).as("tot_hits_sl"),
-      sum(col("n_visited_sl")).as("tot_vis_sl")))
-    per.crossJoin(tot)
-      .select(col("q_id"), col("n_hits_ml"),
-        round(col("n_hits_ml") / lit(NnK.toDouble), 4).as("recall_ml"),
-        col("n_visited_ml"), col("n_hits_sl"),
-        round(col("n_hits_sl") / lit(NnK.toDouble), 4).as("recall_sl"),
-        col("n_visited_sl"),
-        col("tot_hits_ml"), col("tot_vis_ml"),
-        col("tot_hits_sl"), col("tot_vis_sl"))
-      .orderBy(col("q_id"))
+    armsReport(per, "ml", "sl")
   }
 
-  val q336Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    def hopsOf(p: String, adj: String, hops: Int, width: Int) =
-      (1 to hops).map { h =>
-        s"""${p}fr${h - 1} AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS rn FROM ${p}vis${h - 1})
-           |  WHERE rn <= $width),
-           |${p}nb$h AS (
-           |  SELECT DISTINCT f.q_id, u2.v FROM ${p}fr${h - 1} f
-           |  JOIN $adj u2 ON f.v = u2.u),
-           |${p}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${p}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-           |    SELECT * FROM ${p}sv$h))""".stripMargin
-      }.mkString(",\n")
-    def entOf(p: String, from: String) =
-      s"""${p}ent AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM $from)
-         |  WHERE rn <= 1)""".stripMargin
-    // the efWalk twin: requires ${p}vis0 (seed pool) and ${p}exp0
-    // (empty) in scope; per hop, rank UNEXPANDED candidates, take the
-    // hop's width, prune below the ef-pool floor, expand, score, union
-    def efHops(p: String, adj: String, widths: Seq[Int]) =
-      widths.zipWithIndex.map { case (w, i) =>
-        val h = i + 1
-        s"""${p}kth$h AS (
-           |  SELECT q_id, bp AS kbp FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS krn FROM ${p}vis${h - 1})
-           |  WHERE krn = $Hnsw2EfPool),
-           |${p}fr$h AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT u.q_id, u.v, u.bp, k.kbp,
-           |      row_number() OVER (PARTITION BY u.q_id
-           |        ORDER BY u.bp DESC, u.v) AS rn
-           |    FROM (SELECT x.q_id, x.v, x.bp FROM ${p}vis${h - 1} x
-           |          WHERE NOT EXISTS (SELECT 1 FROM ${p}exp${h - 1} e
-           |            WHERE e.q_id = x.q_id AND e.v = x.v)) u
-           |    LEFT JOIN ${p}kth$h k ON u.q_id = k.q_id)
-           |  WHERE rn <= $w AND (kbp IS NULL OR bp >= kbp)),
-           |${p}exp$h AS (SELECT q_id, v FROM ${p}exp${h - 1}
-           |              UNION SELECT q_id, v FROM ${p}fr$h),
-           |${p}nb$h AS (SELECT DISTINCT f.q_id, u2.v FROM ${p}fr$h f
-           |             JOIN $adj u2 ON f.v = u2.u),
-           |${p}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${p}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-           |    SELECT * FROM ${p}sv$h))""".stripMargin
-      }.mkString(",\n")
-    def seedOf(p: String, entries: String) =
-      s"""${p}vis0 AS MATERIALIZED (
-         |  SELECT en.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM $entries en JOIN emb ev ON en.v = ev.vec_id
-         |  JOIN qprobes q ON en.q_id = q.q_id
-         |  WHERE en.v <> en.q_id)""".stripMargin
-    def adjOf(p: String, n: Int) =
+  def q336NnHnswMulti(s: SparkSession, d: String): DataFrame = {
+    val emb = embFrame(s, d)
+    val und = undirected(nnGraphFor(s, d))
+    val probes = emb.where(col("vec_id") < NnPanel)
+      .select(col("vec_id").as("q_id"), col("e").as("qe"))
+    hnswArms(emb, probes, und)
+  }
+
+  /** [[hnswArms]]'s oracle twin, from the layer ranking on; needs emb,
+    * qprobes, und and exact in scope. */
+  private def hnswArmsSql: String = {
+    def adjOf(p: String, n: Int, k: Int) =
       s"""${p}mem AS (SELECT v, e FROM lrank WHERE rn <= $n),
          |${p}adjd AS (
          |  SELECT u, v FROM (
          |    SELECT x.v AS u, y.v AS v, row_number() OVER (PARTITION BY x.v
-         |      ORDER BY ${bp("x.e", "y.e")} DESC, y.v) AS arn
+         |      ORDER BY ${bpSql("x.e", "y.e")} DESC, y.v) AS arn
          |    FROM ${p}mem x JOIN ${p}mem y ON x.v <> y.v)
-         |  WHERE arn <= $Hnsw2AdjK),
-         |${p}adj AS (SELECT u, v FROM ${p}adjd
-         |            UNION SELECT v, u FROM ${p}adjd)""".stripMargin
-    def answerOf(p: String, hops: Int) =
-      s"""${p}answer AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${p}vis$hops)
-         |  WHERE rn <= $NnBeam),
-         |${p}hits AS (
-         |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-         |  FROM exact e LEFT JOIN ${p}answer a
-         |    ON e.q_id = a.q_id AND e.c_id = a.v
-         |  GROUP BY e.q_id)""".stripMargin
+         |  WHERE arn <= $k),
+         |${undSql(s"${p}adj", s"${p}adjd", "\n            ")}""".stripMargin
     val Seq(n1, n2, n3) = Hnsw2Sizes
-    s"""WITH $nnGraphCtes,
-       |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
-       |            WHERE vec_id < $NnPanel),
-       |und AS (SELECT u, v FROM g$NnRounds
-       |        UNION SELECT v, u FROM g$NnRounds),
-       |exact AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.vec_id AS c_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
-       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
-       |  WHERE ern <= $NnK),
-       |lrank AS (
+    s"""lrank AS (
        |  SELECT v, e, row_number() OVER (ORDER BY h, v) AS rn FROM (
        |    SELECT vec_id AS v, e,
        |      md5('layer:' || CAST(vec_id AS VARCHAR)) AS h
        |    FROM emb WHERE vec_id >= $NnPanel
        |    ORDER BY h, v LIMIT $n1)),
-       |${adjOf("l1", n1)},
-       |${adjOf("l2", n2)},
-       |${adjOf("l3", n3)},
+       |${adjOf("l1", n1, Hnsw2AdjK)},
+       |${adjOf("l2", n2, Hnsw2AdjK)},
+       |${adjOf("l3", n3, Hnsw2AdjK)},
        |topent AS (
        |  SELECT v FROM lrank WHERE rn <= $n3
        |  ORDER BY md5('entry:' || CAST(v AS VARCHAR)), v LIMIT 1),
-       |avis0 AS MATERIALIZED (
-       |  SELECT q.q_id, t.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN topent t
-       |  JOIN emb ev ON t.v = ev.vec_id
-       |  WHERE t.v <> q.q_id),
-       |${hopsOf("a", "l3adj", Hnsw2Hops, Hnsw2Beam)},
-       |${entOf("a", s"avis$Hnsw2Hops")},
-       |${seedOf("b", "aent")},
-       |${hopsOf("b", "l2adj", Hnsw2Hops, Hnsw2Beam)},
-       |${entOf("b", s"bvis$Hnsw2Hops")},
-       |${seedOf("c", "bent")},
-       |${hopsOf("c", "l1adj", Hnsw2Hops, Hnsw2L1Beam)},
+       |${fixedSeedSql("avis0", "topent", "t")},
+       |${walkHopsSql("a", "l3adj", Hnsw2Hops, Hnsw2Beam, PanelSql,
+           WrapAfter)},
+       |${beamCte("aent", s"avis$Hnsw2Hops", 1)},
+       |${seedSql("bvis0", "aent", "en")},
+       |${walkHopsSql("b", "l2adj", Hnsw2Hops, Hnsw2Beam, PanelSql,
+           WrapAfter)},
+       |${beamCte("bent", s"bvis$Hnsw2Hops", 1)},
+       |${seedSql("cvis0", "bent", "en")},
+       |${walkHopsSql("c", "l1adj", Hnsw2Hops, Hnsw2L1Beam, PanelSql,
+           WrapAfter)},
        |mvis0 AS MATERIALIZED (
        |  SELECT DISTINCT q_id, v, bp FROM (
        |    SELECT * FROM avis$Hnsw2Hops
        |    UNION ALL SELECT * FROM bvis$Hnsw2Hops
        |    UNION ALL SELECT * FROM cvis$Hnsw2Hops)),
        |mexp0 AS (SELECT q_id, v FROM mvis0 WHERE 1 = 0),
-       |${efHops("m", "und", Hnsw2EfWidths)},
-       |manswer AS (
-       |  SELECT q_id, v FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY bp DESC, v) AS rn FROM mvis${Hnsw2EfWidths.size})
-       |  WHERE rn <= $NnBeam),
-       |mhits AS (
-       |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-       |  FROM exact e LEFT JOIN manswer a
-       |    ON e.q_id = a.q_id AND e.c_id = a.v
-       |  GROUP BY e.q_id),
+       |${efHopsSql("m", "und", Hnsw2EfWidths)},
+       |${beamCte("manswer", s"mvis${Hnsw2EfWidths.size}", NnBeam)},
+       |${hitsSql("m")},
        |slent AS (
        |  SELECT v FROM lrank WHERE rn <= $HnswLayer
        |  ORDER BY md5('entry:' || CAST(v AS VARCHAR)), v LIMIT 1),
-       |${adjOf("sl", HnswLayer)},
-       |svis0 AS MATERIALIZED (
-       |  SELECT q.q_id, t.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN slent t
-       |  JOIN emb ev ON t.v = ev.vec_id
-       |  WHERE t.v <> q.q_id),
-       |${hopsOf("s", "sladj", HnswLayerHops, HnswLayerBeam)},
-       |${entOf("s", s"svis$HnswLayerHops")},
-       |${seedOf("g", "sent")},
-       |${hopsOf("g", "und", NnHops, NnBeam)},
-       |${answerOf("g", NnHops)},
+       |${adjOf("sl", HnswLayer, HnswLayerK)},
+       |${fixedSeedSql("svis0", "slent", "t")},
+       |${walkHopsSql("s", "sladj", HnswLayerHops, HnswLayerBeam, PanelSql,
+           WrapAfter)},
+       |${beamCte("sent", s"svis$HnswLayerHops", 1)},
+       |${seedSql("gvis0", "sent", "en")},
+       |${walkHopsSql("g", "und", NnHops, NnBeam, PanelSql, WrapAfter)},
+       |${answerSql("g", NnHops, withVisits = false)},
        |mlvis AS (
        |  SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited_ml
        |  FROM mvis${Hnsw2EfWidths.size} GROUP BY q_id),
@@ -3973,21 +3772,12 @@ object Similarity {
        |  FROM mhits m JOIN mlvis mv ON m.q_id = mv.q_id
        |  JOIN ghits g ON m.q_id = g.q_id
        |  JOIN slvis sv ON m.q_id = sv.q_id),
-       |tot AS (
-       |  SELECT CAST(sum(n_hits_ml) AS BIGINT) AS tot_hits_ml,
-       |    CAST(sum(n_visited_ml) AS BIGINT) AS tot_vis_ml,
-       |    CAST(sum(n_hits_sl) AS BIGINT) AS tot_hits_sl,
-       |    CAST(sum(n_visited_sl) AS BIGINT) AS tot_vis_sl
-       |  FROM per)
-       |SELECT p.q_id, p.n_hits_ml,
-       |  round(p.n_hits_ml / $NnK.0, 4) AS recall_ml,
-       |  p.n_visited_ml, p.n_hits_sl,
-       |  round(p.n_hits_sl / $NnK.0, 4) AS recall_sl,
-       |  p.n_visited_sl,
-       |  tot_hits_ml, tot_vis_ml, tot_hits_sl, tot_vis_sl
-       |FROM per p CROSS JOIN tot
-       |ORDER BY p.q_id""".stripMargin
+       |${armsReportSql("ml", "sl")}""".stripMargin
   }
+
+  val q336Sql: String =
+    s"""$panelHeadSql,
+       |$hnswArmsSql""".stripMargin
 
   // ─── q341: multi-level HNSW on CLUSTERED geometry ─────────────────────
   // q336 honestly recorded that the near-iid synthetic fixture blunts
@@ -4046,234 +3836,11 @@ object Similarity {
       .unionAll(raw.select(col("v").as("u"), col("u").as("v"),
         cosBp(col("ve"), col("ue")).as("bp"))))
       .localCheckpoint()
-    val und = cg.select("u", "v")
-      .unionAll(cg.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    // q336's serve machinery verbatim, over the clustered vectors
-    def score(cand: DataFrame): DataFrame = cand
-      .join(cemb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(broadcast(probes), "q_id")
-      .where(col("v") =!= col("q_id"))
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame, width: Int): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= width).drop("rn")
-    def walk(adj: DataFrame, entries: DataFrame, hops: Int,
-             width: Int): DataFrame = {
-      var visited = score(entries).localCheckpoint()
-      for (_ <- 1 to hops) {
-        val nbrs = beamOf(visited, width)
-          .select(col("q_id"), col("v").as("u"))
-          .join(adj, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
-    def efWalk(adj: DataFrame, visited0: DataFrame,
-               widths: Seq[Int]): DataFrame = {
-      var visited = visited0.localCheckpoint()
-      var expanded = visited.select("q_id", "v").limit(0).localCheckpoint()
-      for (width <- widths) {
-        val kth = visited
-          .withColumn("krn", row_number().over(
-            Window.partitionBy(col("q_id"))
-              .orderBy(col("bp").desc, col("v"))))
-          .where(col("krn") === Hnsw2EfPool)
-          .select(col("q_id"), col("bp").as("kbp"))
-        val front = beamOf(
-          visited.join(expanded, Seq("q_id", "v"), "left_anti"), width)
-          .join(kth, Seq("q_id"), "left")
-          .where(col("kbp").isNull || col("bp") >= col("kbp"))
-          .select("q_id", "v").localCheckpoint()
-        // lazy: a union of already-checkpointed fronts — consumers pay
-        // one small anti-join probe, not a checkpoint job per width
-        expanded = expanded.unionAll(front)
-        val nbrs = front.select(col("q_id"), col("v").as("u"))
-          .join(adj, "u").select(col("q_id"), col("v")).distinct()
-        // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-        val fresh = nbrs.join(visited.select("q_id", "v"),
-          Seq("q_id", "v"), "left_anti")
-        visited = visited.unionAll(score(fresh)).localCheckpoint()
-      }
-      visited
-    }
-    val ranked = cemb.where(col("vec_id") >= NnPanel)
-      .select(col("vec_id").as("v"), col("e"),
-        md5(concat(lit("layer:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(Hnsw2Sizes.head)
-      .withColumn("rn", row_number().over(
-        Window.orderBy(col("h"), col("v"))))
-      .localCheckpoint()
-    def layerAdj(n: Int, k: Int): DataFrame = {
-      val le = ranked.where(col("rn") <= n).select(col("v"), col("e"))
-      val pairs = le.select(col("v").as("u"), col("e").as("ue"))
-        .crossJoin(broadcast(le.select(col("v"), col("e").as("ve"))))
-        .where(col("u") =!= col("v"))
-        .select(col("u"), col("v"), cosBp(col("ue"), col("ve")).as("bp"))
-      val adj = pairs
-        .withColumn("arn", row_number().over(Window.partitionBy(col("u"))
-          .orderBy(col("bp").desc, col("v"))))
-        .where(col("arn") <= k).select("u", "v")
-      adj.unionAll(adj.select(col("v").as("u"), col("u").as("v")))
-        .localCheckpoint()
-    }
-    val Seq(adj1, adj2, adj3) = Hnsw2Sizes.map(layerAdj(_, Hnsw2AdjK))
-    val topEnt = ranked.where(col("rn") <= Hnsw2Sizes.last)
-      .select(col("v"),
-        md5(concat(lit("entry:"), col("v").cast("string"))).as("eh"))
-      .orderBy(col("eh"), col("v")).limit(1).select("v")
-    val vis3 = walk(adj3, probes.select("q_id").crossJoin(broadcast(topEnt)),
-      Hnsw2Hops, Hnsw2Beam)
-    val vis2 = walk(adj2, beamOf(vis3, 1).select("q_id", "v"),
-      Hnsw2Hops, Hnsw2Beam)
-    val vis1 = walk(adj1, beamOf(vis2, 1).select("q_id", "v"),
-      Hnsw2Hops, Hnsw2L1Beam)
-    val lpool = vis3.unionAll(vis2).unionAll(vis1).distinct()
-      .localCheckpoint()
-    val mvis = efWalk(und, lpool, Hnsw2EfWidths)
-      .localCheckpoint()
-    val sadj = layerAdj(HnswLayer, HnswLayerK)
-    val sent = ranked.where(col("rn") <= HnswLayer)
-      .select(col("v"),
-        md5(concat(lit("entry:"), col("v").cast("string"))).as("eh"))
-      .orderBy(col("eh"), col("v")).limit(1).select("v")
-    val svis = walk(sadj, probes.select("q_id").crossJoin(broadcast(sent)),
-      HnswLayerHops, HnswLayerBeam)
-    val gvis = walk(und, beamOf(svis, 1).select("q_id", "v"),
-      NnHops, NnBeam)
-    val exact = cemb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(vis: DataFrame, nm: String): DataFrame = {
-      val answer = beamOf(vis, NnBeam).select("q_id", "v")
-      exact.as("x")
-        .join(answer.as("a"), col("x.q_id") === col("a.q_id") &&
-          col("x.c_id") === col("a.v"), "left")
-        .groupBy(col("x.q_id").as("q_id"))
-        .agg(count(col("a.v")).as(nm))
-    }
-    def nvisOf(vs: Seq[DataFrame], nm: String): DataFrame = vs
-      .map(_.groupBy(col("q_id")).agg(count(lit(1)).as("n")))
-      .reduce(_.unionAll(_))
-      .groupBy(col("q_id")).agg(sum(col("n")).as(nm))
-    val per = hitsOf(mvis, "n_hits_ml")
-      .join(mvis.groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_visited_ml")), "q_id")
-      .join(hitsOf(gvis, "n_hits_sl"), "q_id")
-      .join(nvisOf(Seq(svis, gvis), "n_visited_sl"), "q_id")
-      .localCheckpoint()
-    val tot = broadcast(per.agg(
-      sum(col("n_hits_ml")).as("tot_hits_ml"),
-      sum(col("n_visited_ml")).as("tot_vis_ml"),
-      sum(col("n_hits_sl")).as("tot_hits_sl"),
-      sum(col("n_visited_sl")).as("tot_vis_sl")))
-    per.crossJoin(tot)
-      .select(col("q_id"), col("n_hits_ml"),
-        round(col("n_hits_ml") / lit(NnK.toDouble), 4).as("recall_ml"),
-        col("n_visited_ml"), col("n_hits_sl"),
-        round(col("n_hits_sl") / lit(NnK.toDouble), 4).as("recall_sl"),
-        col("n_visited_sl"),
-        col("tot_hits_ml"), col("tot_vis_ml"),
-        col("tot_hits_sl"), col("tot_vis_sl"))
-      .orderBy(col("q_id"))
+    // q336's serve arms verbatim, over the clustered vectors
+    hnswArms(cemb, probes, undirected(cg))
   }
 
-  val q341Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    def hopsOf(p: String, adj: String, hops: Int, width: Int) =
-      (1 to hops).map { h =>
-        s"""${p}fr${h - 1} AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS rn FROM ${p}vis${h - 1})
-           |  WHERE rn <= $width),
-           |${p}nb$h AS (
-           |  SELECT DISTINCT f.q_id, u2.v FROM ${p}fr${h - 1} f
-           |  JOIN $adj u2 ON f.v = u2.u),
-           |${p}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${p}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-           |    SELECT * FROM ${p}sv$h))""".stripMargin
-      }.mkString(",\n")
-    def entOf(p: String, from: String) =
-      s"""${p}ent AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM $from)
-         |  WHERE rn <= 1)""".stripMargin
-    def efHops(p: String, adj: String, widths: Seq[Int]) =
-      widths.zipWithIndex.map { case (w, i) =>
-        val h = i + 1
-        s"""${p}kth$h AS (
-           |  SELECT q_id, bp AS kbp FROM (
-           |    SELECT *, row_number() OVER (PARTITION BY q_id
-           |      ORDER BY bp DESC, v) AS krn FROM ${p}vis${h - 1})
-           |  WHERE krn = $Hnsw2EfPool),
-           |${p}fr$h AS (
-           |  SELECT q_id, v FROM (
-           |    SELECT u.q_id, u.v, u.bp, k.kbp,
-           |      row_number() OVER (PARTITION BY u.q_id
-           |        ORDER BY u.bp DESC, u.v) AS rn
-           |    FROM (SELECT x.q_id, x.v, x.bp FROM ${p}vis${h - 1} x
-           |          WHERE NOT EXISTS (SELECT 1 FROM ${p}exp${h - 1} e
-           |            WHERE e.q_id = x.q_id AND e.v = x.v)) u
-           |    LEFT JOIN ${p}kth$h k ON u.q_id = k.q_id)
-           |  WHERE rn <= $w AND (kbp IS NULL OR bp >= kbp)),
-           |${p}exp$h AS (SELECT q_id, v FROM ${p}exp${h - 1}
-           |              UNION SELECT q_id, v FROM ${p}fr$h),
-           |${p}nb$h AS (SELECT DISTINCT f.q_id, u2.v FROM ${p}fr$h f
-           |             JOIN $adj u2 ON f.v = u2.u),
-           |${p}sv$h AS (
-           |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-           |  FROM ${p}nb$h s JOIN emb ev ON s.v = ev.vec_id
-           |  JOIN qprobes q ON s.q_id = q.q_id
-           |  WHERE s.v <> s.q_id),
-           |${p}vis$h AS MATERIALIZED (
-           |  SELECT DISTINCT q_id, v, bp FROM (
-           |    SELECT * FROM ${p}vis${h - 1} UNION ALL
-           |    SELECT * FROM ${p}sv$h))""".stripMargin
-      }.mkString(",\n")
-    def seedOf(p: String, entries: String) =
-      s"""${p}vis0 AS MATERIALIZED (
-         |  SELECT en.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM $entries en JOIN emb ev ON en.v = ev.vec_id
-         |  JOIN qprobes q ON en.q_id = q.q_id
-         |  WHERE en.v <> en.q_id)""".stripMargin
-    def adjOf(p: String, n: Int, k: Int) =
-      s"""${p}mem AS (SELECT v, e FROM lrank WHERE rn <= $n),
-         |${p}adjd AS (
-         |  SELECT u, v FROM (
-         |    SELECT x.v AS u, y.v AS v, row_number() OVER (PARTITION BY x.v
-         |      ORDER BY ${bp("x.e", "y.e")} DESC, y.v) AS arn
-         |    FROM ${p}mem x JOIN ${p}mem y ON x.v <> y.v)
-         |  WHERE arn <= $k),
-         |${p}adj AS (SELECT u, v FROM ${p}adjd
-         |            UNION SELECT v, u FROM ${p}adjd)""".stripMargin
-    def answerOf(p: String, hops: Int) =
-      s"""${p}answer AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ${p}vis$hops)
-         |  WHERE rn <= $NnBeam),
-         |${p}hits AS (
-         |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-         |  FROM exact e LEFT JOIN ${p}answer a
-         |    ON e.q_id = a.q_id AND e.c_id = a.v
-         |  GROUP BY e.q_id)""".stripMargin
-    val Seq(n1, n2, n3) = Hnsw2Sizes
+  val q341Sql: String =
     s"""WITH rawe AS (
        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
        |anch AS (
@@ -4287,13 +3854,7 @@ object Similarity {
        |  FROM rawe r JOIN anch a ON r.vec_id % $Hnsw3Anchors = a.anchor),
        |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
        |            WHERE vec_id < $NnPanel),
-       |exact AS (
-       |  SELECT q_id, c_id FROM (
-       |    SELECT q.q_id, c.vec_id AS c_id,
-       |      row_number() OVER (PARTITION BY q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
-       |    FROM emb c JOIN qprobes q ON c.vec_id <> q.q_id)
-       |  WHERE ern <= $NnK),
+       |$exactSql,
        |crk AS (
        |  SELECT vec_id, e, row_number() OVER (
        |      PARTITION BY vec_id % $Hnsw3Anchors
@@ -4309,96 +3870,12 @@ object Similarity {
        |    SELECT *, row_number() OVER (PARTITION BY u
        |      ORDER BY bp DESC, v) AS trn
        |    FROM (SELECT DISTINCT u, v, bp FROM (
-       |      SELECT u, v, ${bp("ue", "ve")} AS bp FROM craw
+       |      SELECT u, v, ${bpSql("ue", "ve")} AS bp FROM craw
        |      UNION ALL
-       |      SELECT v, u, ${bp("ve", "ue")} FROM craw)))
+       |      SELECT v, u, ${bpSql("ve", "ue")} FROM craw)))
        |  WHERE trn <= $NnK),
-       |und AS (SELECT u, v FROM cg UNION SELECT v, u FROM cg),
-       |lrank AS (
-       |  SELECT v, e, row_number() OVER (ORDER BY h, v) AS rn FROM (
-       |    SELECT vec_id AS v, e,
-       |      md5('layer:' || CAST(vec_id AS VARCHAR)) AS h
-       |    FROM emb WHERE vec_id >= $NnPanel
-       |    ORDER BY h, v LIMIT $n1)),
-       |${adjOf("l1", n1, Hnsw2AdjK)},
-       |${adjOf("l2", n2, Hnsw2AdjK)},
-       |${adjOf("l3", n3, Hnsw2AdjK)},
-       |topent AS (
-       |  SELECT v FROM lrank WHERE rn <= $n3
-       |  ORDER BY md5('entry:' || CAST(v AS VARCHAR)), v LIMIT 1),
-       |avis0 AS MATERIALIZED (
-       |  SELECT q.q_id, t.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN topent t
-       |  JOIN emb ev ON t.v = ev.vec_id
-       |  WHERE t.v <> q.q_id),
-       |${hopsOf("a", "l3adj", Hnsw2Hops, Hnsw2Beam)},
-       |${entOf("a", s"avis$Hnsw2Hops")},
-       |${seedOf("b", "aent")},
-       |${hopsOf("b", "l2adj", Hnsw2Hops, Hnsw2Beam)},
-       |${entOf("b", s"bvis$Hnsw2Hops")},
-       |${seedOf("c", "bent")},
-       |${hopsOf("c", "l1adj", Hnsw2Hops, Hnsw2L1Beam)},
-       |mvis0 AS MATERIALIZED (
-       |  SELECT DISTINCT q_id, v, bp FROM (
-       |    SELECT * FROM avis$Hnsw2Hops
-       |    UNION ALL SELECT * FROM bvis$Hnsw2Hops
-       |    UNION ALL SELECT * FROM cvis$Hnsw2Hops)),
-       |mexp0 AS (SELECT q_id, v FROM mvis0 WHERE 1 = 0),
-       |${efHops("m", "und", Hnsw2EfWidths)},
-       |manswer AS (
-       |  SELECT q_id, v FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY bp DESC, v) AS rn FROM mvis${Hnsw2EfWidths.size})
-       |  WHERE rn <= $NnBeam),
-       |mhits AS (
-       |  SELECT e.q_id, CAST(count(a.v) AS BIGINT) AS n_hits
-       |  FROM exact e LEFT JOIN manswer a
-       |    ON e.q_id = a.q_id AND e.c_id = a.v
-       |  GROUP BY e.q_id),
-       |slent AS (
-       |  SELECT v FROM lrank WHERE rn <= $HnswLayer
-       |  ORDER BY md5('entry:' || CAST(v AS VARCHAR)), v LIMIT 1),
-       |${adjOf("sl", HnswLayer, HnswLayerK)},
-       |svis0 AS MATERIALIZED (
-       |  SELECT q.q_id, t.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN slent t
-       |  JOIN emb ev ON t.v = ev.vec_id
-       |  WHERE t.v <> q.q_id),
-       |${hopsOf("s", "sladj", HnswLayerHops, HnswLayerBeam)},
-       |${entOf("s", s"svis$HnswLayerHops")},
-       |${seedOf("g", "sent")},
-       |${hopsOf("g", "und", NnHops, NnBeam)},
-       |${answerOf("g", NnHops)},
-       |mlvis AS (
-       |  SELECT q_id, CAST(count(*) AS BIGINT) AS n_visited_ml
-       |  FROM mvis${Hnsw2EfWidths.size} GROUP BY q_id),
-       |slvis AS (
-       |  SELECT q_id, CAST(sum(n) AS BIGINT) AS n_visited_sl FROM (
-       |    SELECT q_id, count(*) AS n FROM svis$HnswLayerHops GROUP BY 1
-       |    UNION ALL
-       |    SELECT q_id, count(*) FROM gvis$NnHops GROUP BY 1)
-       |  GROUP BY q_id),
-       |per AS MATERIALIZED (
-       |  SELECT m.q_id, m.n_hits AS n_hits_ml, mv.n_visited_ml,
-       |    g.n_hits AS n_hits_sl, sv.n_visited_sl
-       |  FROM mhits m JOIN mlvis mv ON m.q_id = mv.q_id
-       |  JOIN ghits g ON m.q_id = g.q_id
-       |  JOIN slvis sv ON m.q_id = sv.q_id),
-       |tot AS (
-       |  SELECT CAST(sum(n_hits_ml) AS BIGINT) AS tot_hits_ml,
-       |    CAST(sum(n_visited_ml) AS BIGINT) AS tot_vis_ml,
-       |    CAST(sum(n_hits_sl) AS BIGINT) AS tot_hits_sl,
-       |    CAST(sum(n_visited_sl) AS BIGINT) AS tot_vis_sl
-       |  FROM per)
-       |SELECT p.q_id, p.n_hits_ml,
-       |  round(p.n_hits_ml / $NnK.0, 4) AS recall_ml,
-       |  p.n_visited_ml, p.n_hits_sl,
-       |  round(p.n_hits_sl / $NnK.0, 4) AS recall_sl,
-       |  p.n_visited_sl,
-       |  tot_hits_ml, tot_vis_ml, tot_hits_sl, tot_vis_sl
-       |FROM per p CROSS JOIN tot
-       |ORDER BY p.q_id""".stripMargin
-  }
+       |${undSql("und", "cg", " ")},
+       |$hnswArmsSql""".stripMargin
 
   // ─── q324: incremental k-NN-graph maintenance (insert a batch) ───────
   // q317's trainer is train-once; a production corpus GROWS. Retraining
@@ -4433,78 +3910,16 @@ object Similarity {
 
   /** (base graph, maintained graph after the batch insert) — exposed so
     * the spec can pin the carry discipline (untouched vertices keep
-    * their base lists verbatim) and batch coverage structurally. */
+    * their base lists verbatim) and batch coverage structurally. The
+    * insert is [[nnInsertWaveKeys]] with the batch rows and the base
+    * entry panel as frames. */
   private[graft] def nnMaintainedGraph(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val emb = embFrame(s, d)
     val bg = nnMemberGraphFor(s, d,
       pmod(col("vec_id"), lit(10)) =!= 9).localCheckpoint()
-    val und = bg.select("u", "v")
-      .unionAll(bg.select(col("v").as("u"), col("u").as("v")))
-      .distinct().localCheckpoint()
-    val newq = emb.where(isNnBatch(col("vec_id")))
-      .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val entries = emb.where(!isNnBatch(col("vec_id")))
-      .select(col("vec_id").as("v"),
-        md5(concat(lit("entry:"), col("vec_id").cast("string"))).as("h"))
-      .orderBy(col("h"), col("v")).limit(NnEntries).select("v")
-    // batch-side scoring is a plain equi-join (NOT a broadcast — the
-    // batch grows with the corpus, unlike q322's 10-probe panel)
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(newq, "q_id")
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnBeam).drop("rn")
-    var visited = score(
-        newq.select("q_id").crossJoin(broadcast(entries)))
-      .localCheckpoint()
-    for (_ <- 1 to NnHops) {
-      val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-        .join(und, "u").select(col("q_id"), col("v")).distinct()
-      // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-      val fresh = nbrs.join(visited.select("q_id", "v"),
-        Seq("q_id", "v"), "left_anti")
-      visited = visited.unionAll(score(fresh)).localCheckpoint()
-    }
-    val fwd = visited
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnK)
-      .select(col("q_id").as("u"), col("v"), col("bp"))
-    val back = visited
-      .select(col("v").as("u"), col("q_id").as("v"), col("bp"))
-    val tch = back.select("u").distinct().localCheckpoint()
-    val g1 = bg.join(tch, Seq("u"), "left_anti")
-      .unionAll(nnTopK(
-        bg.join(tch, Seq("u"), "left_semi").unionAll(back)))
-      .unionAll(fwd)
-      .localCheckpoint()
-    // one localized refinement round: only new-incident candidate pairs
-    val rev = g1.select(col("v").as("u"), col("u").as("v"), col("bp"))
-      .withColumn("rrn", row_number().over(Window.partitionBy(col("u"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rrn") <= NnRevCap).drop("rrn")
-    val b = g1.select("u", "v").unionAll(rev.select("u", "v")).distinct()
-    val bNew = b.where(isNnBatch(col("u")))
-    val bvNew = b.where(isNnBatch(col("v")))
-    val cand = bNew.as("x").join(b.as("y"), col("x.v") === col("y.u"))
-        .select(col("x.u").as("u"), col("y.v").as("v"))
-      .unionAll(b.as("x").join(bvNew.as("y"), col("x.v") === col("y.u"))
-        .select(col("x.u").as("u"), col("y.v").as("v")))
-      .where(col("u") =!= col("v")).distinct()
-    val scored = cand
-      .join(emb.select(col("vec_id").as("u"), col("e").as("ue")), "u")
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .select(col("u"), col("v"), cosBp(col("ue"), col("ve")).as("bp"))
-    val aff = cand.select("u").distinct().localCheckpoint()
-    val g2 = g1.join(aff, Seq("u"), "left_anti")
-      .unionAll(nnTopK(
-        g1.join(aff, Seq("u"), "left_semi").unionAll(scored)))
-      .localCheckpoint()
-    (bg, g2)
+    (bg, nnInsertWaveKeys(emb, bg, emb.where(isNnBatch(col("vec_id"))),
+      nnEntriesFrom(emb.where(!isNnBatch(col("vec_id"))))))
   }
 
   def q324NnIncrementalInsert(s: SparkSession, d: String): DataFrame = {
@@ -4512,22 +3927,12 @@ object Similarity {
     val (_, g2) = nnMaintainedGraph(s, d)
     val probes = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val exactK = emb.select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
+    val exactK = exactTopK(emb, probes)
     val full = nnGraphFor(s, d)
-    def hitsOf(g: DataFrame, nm: String) = exactK.as("x")
-      .join(g.as("gg"), col("x.q_id") === col("gg.u") &&
-        col("x.c_id") === col("gg.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("gg.v")).as(nm))
     val glob = broadcast(g2.agg(count(lit(1)).as("mg_edges"),
       sum(col("bp")).as("msbp")))
-    hitsOf(g2, "n_hits_inc").join(hitsOf(full, "n_hits_full"), "q_id")
+    graphHits(exactK, g2, "n_hits_inc")
+      .join(graphHits(exactK, full, "n_hits_full"), "q_id")
       .crossJoin(glob)
       .select(col("q_id"), col("n_hits_inc"),
         round(col("n_hits_inc") / lit(NnK.toDouble), 4).as("recall_inc"),
@@ -4537,97 +3942,18 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
-  val q324Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    val hops = (1 to NnHops).map { h =>
-      s"""ifr${h - 1} AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ivis${h - 1})
-         |  WHERE rn <= $NnBeam),
-         |inb$h AS (
-         |  SELECT DISTINCT f.q_id, u2.v FROM ifr${h - 1} f
-         |  JOIN bund u2 ON f.v = u2.u),
-         |isv$h AS (
-         |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM inb$h s JOIN emb ev ON s.v = ev.vec_id
-         |  JOIN newq q ON s.q_id = q.q_id),
-         |ivis$h AS MATERIALIZED (
-         |  SELECT DISTINCT q_id, v, bp FROM (
-         |    SELECT * FROM ivis${h - 1} UNION ALL SELECT * FROM isv$h))"""
-        .stripMargin
-    }.mkString(",\n")
+  val q324Sql: String =
     s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
        |${nnGraphCtesCore("bg_", "vec_id % 10 <> 9")},
        |${nnGraphCtesCore("", "")},
-       |newq AS (SELECT vec_id AS q_id, e AS qe FROM emb
-       |         WHERE vec_id % 10 = 9),
-       |bents AS (
-       |  SELECT vec_id AS v FROM emb WHERE vec_id % 10 <> 9
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |bund AS (SELECT u, v FROM bg_g$NnRounds
-       |         UNION SELECT v, u FROM bg_g$NnRounds),
-       |ivis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM newq q CROSS JOIN bents en
-       |  JOIN emb ev ON en.v = ev.vec_id),
-       |$hops,
-       |mfwd AS (
-       |  SELECT q_id AS u, v, bp FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY q_id
-       |      ORDER BY bp DESC, v) AS rn FROM ivis$NnHops)
-       |  WHERE rn <= $NnK),
-       |mback AS (SELECT v AS u, q_id AS v, bp FROM ivis$NnHops),
-       |tch AS (SELECT DISTINCT u FROM mback),
-       |mg1 AS MATERIALIZED (
-       |  SELECT u, v, bp FROM bg_g$NnRounds
-       |  WHERE u NOT IN (SELECT u FROM tch)
-       |  UNION ALL
-       |  SELECT u, v, bp FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY u
-       |      ORDER BY bp DESC, v) AS trn
-       |    FROM (SELECT DISTINCT u, v, bp FROM (
-       |      SELECT g.u, g.v, g.bp FROM bg_g$NnRounds g
-       |        JOIN tch t ON g.u = t.u
-       |      UNION ALL SELECT * FROM mback)))
-       |  WHERE trn <= $NnK
-       |  UNION ALL
-       |  SELECT u, v, bp FROM mfwd),
-       |mrev AS (
-       |  SELECT u, v FROM (
-       |    SELECT g.v AS u, g.u AS v, row_number() OVER (PARTITION BY g.v
-       |      ORDER BY g.bp DESC, g.u) AS rrn FROM mg1 g)
-       |  WHERE rrn <= $NnRevCap),
-       |mb AS (SELECT u, v FROM mg1 UNION SELECT u, v FROM mrev),
-       |mcand AS (
-       |  SELECT DISTINCT u, v FROM (
-       |    SELECT x.u, y.v FROM mb x JOIN mb y ON x.v = y.u
-       |    WHERE x.u % 10 = 9
-       |    UNION ALL
-       |    SELECT x.u, y.v FROM mb x JOIN mb y ON x.v = y.u
-       |    WHERE y.v % 10 = 9)
-       |  WHERE u <> v),
-       |msc AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
-       |  FROM mcand c JOIN emb eu ON c.u = eu.vec_id
-       |               JOIN emb ev ON c.v = ev.vec_id),
-       |maff AS (SELECT DISTINCT u FROM mcand),
-       |mg2 AS MATERIALIZED (
-       |  SELECT u, v, bp FROM mg1 WHERE u NOT IN (SELECT u FROM maff)
-       |  UNION ALL
-       |  SELECT u, v, bp FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY u
-       |      ORDER BY bp DESC, v) AS trn
-       |    FROM (SELECT DISTINCT u, v, bp FROM (
-       |      SELECT g.u, g.v, g.bp FROM mg1 g JOIN maff t ON g.u = t.u
-       |      UNION ALL SELECT * FROM msc)))
-       |  WHERE trn <= $NnK),
+       |${nnInsWaveCtes(s"bg_g$NnRounds", c => s"$c % 10 = 9",
+           "vec_id % 10 = 9",
+           entriesSql("bents", "emb WHERE vec_id % 10 <> 9"))},
        |exactk AS (
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${bp("q.e", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.e", "c.e")} DESC, c.vec_id) AS ern
        |    FROM emb q JOIN emb c ON c.vec_id <> q.vec_id
        |    WHERE q.vec_id < 10)
        |  WHERE ern <= $NnK),
@@ -4649,7 +3975,6 @@ object Similarity {
        |  mg_edges, mg_avg_bp
        |FROM ih i JOIN fh f ON i.q_id = f.q_id CROSS JOIN mstat
        |ORDER BY i.q_id""".stripMargin
-  }
 
   // ─── q334: incremental k-NN-graph maintenance (delete a batch) ───────
   // The q324 contract INVERTED: a production corpus also SHRINKS (GDPR
@@ -4794,10 +4119,8 @@ object Similarity {
     * q322/q324 entry discipline with membership as DATA. Returns a
     * 1-column frame `v`.
     */
-  private[graft] def nnEntriesFrom(keys: DataFrame): DataFrame = keys
-    .select(col("vec_id").as("v"),
-      md5(concat(lit("entry:"), col("vec_id").cast("string"))).as("h"))
-    .orderBy(col("h"), col("v")).limit(NnEntries).select("v")
+  private[graft] def nnEntriesFrom(keys: DataFrame): DataFrame =
+    topEntries(keys.select(col("vec_id").as("v")), NnEntries)
 
   /** One insert-maintenance WAVE with the batch as DATA (q324's
     * machinery factored for the feed-driven subscriber): place each new
@@ -4816,34 +4139,9 @@ object Similarity {
                                       newRows: DataFrame,
                                       entries: DataFrame): DataFrame = {
     val newq = newRows.select(col("vec_id").as("q_id"), col("e").as("qe"))
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier anyway, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(newq, "q_id")
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnBeam).drop("rn")
-    var visited = score(
-        newq.select("q_id").crossJoin(broadcast(entries)))
-      .localCheckpoint()
-    for (_ <- 1 to NnHops) {
-      val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-        .join(und, "u").select(col("q_id"), col("v")).distinct()
-      // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-      val fresh = nbrs.join(visited.select("q_id", "v"),
-        Seq("q_id", "v"), "left_anti")
-      visited = visited.unionAll(score(fresh)).localCheckpoint()
-    }
-    val fwd = visited
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnK)
+    val visited = walk(batchScorer(emb, newq), undirected(g),
+      fixedEntries(newq, entries), NnHops, NnBeam)
+    val fwd = beam(visited, NnK)
       .select(col("q_id").as("u"), col("v"), col("bp"))
     val back = visited
       .select(col("v").as("u"), col("q_id").as("v"), col("bp"))
@@ -4888,24 +4186,13 @@ object Similarity {
       pmod(col("vec_id"), lit(10)) =!= 7)
     val probes = emb.where(col("vec_id") < 10 && !isNnDel(col("vec_id")))
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val exactK = emb.where(!isNnDel(col("vec_id")))
-      .select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(g: DataFrame, nm: String) = exactK.as("x")
-      .join(g.as("gg"), col("x.q_id") === col("gg.u") &&
-        col("x.c_id") === col("gg.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("gg.v")).as(nm))
+    val exactK = exactTopK(emb.where(!isNnDel(col("vec_id"))), probes)
     val glob = broadcast(mg.agg(count(lit(1)).as("mg_edges"),
       sum(col("bp")).as("msbp"),
       sum(when(isNnDel(col("u")) || isNnDel(col("v")), 1L).otherwise(0L))
         .as("n_ghost")))
-    hitsOf(mg, "n_hits_del").join(hitsOf(scr, "n_hits_scr"), "q_id")
+    graphHits(exactK, mg, "n_hits_del")
+      .join(graphHits(exactK, scr, "n_hits_scr"), "q_id")
       .crossJoin(glob)
       .select(col("q_id"), col("n_hits_del"),
         round(col("n_hits_del") / lit(NnK.toDouble), 4).as("recall_del"),
@@ -4916,8 +4203,7 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
-  val q334Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
+  val q334Sql: String =
     s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
        |${nnGraphCtesCore("", "")},
        |${nnGraphCtesCore("s_", "vec_id % 10 <> 7")},
@@ -4937,7 +4223,7 @@ object Similarity {
        |  SELECT DISTINCT t.u, d.w AS v FROM dtodel t
        |  JOIN dund d ON t.x = d.x WHERE d.w <> t.u),
        |dsc AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+       |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
        |  FROM dcand c JOIN emb eu ON c.u = eu.vec_id
        |               JOIN emb ev ON c.v = ev.vec_id),
        |dg1 AS MATERIALIZED (
@@ -4965,7 +4251,7 @@ object Similarity {
        |    WHERE y.v IN (SELECT u FROM ddam))
        |  WHERE u <> v),
        |dsc2 AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+       |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
        |  FROM dcand2 c JOIN emb eu ON c.u = eu.vec_id
        |                JOIN emb ev ON c.v = ev.vec_id),
        |daff AS (SELECT DISTINCT u FROM dcand2),
@@ -4983,7 +4269,7 @@ object Similarity {
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${bp("q.e", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.e", "c.e")} DESC, c.vec_id) AS ern
        |    FROM emb q JOIN emb c
        |      ON c.vec_id <> q.vec_id AND c.vec_id % 10 <> 7
        |    WHERE q.vec_id < 10 AND q.vec_id % 10 <> 7)
@@ -5009,7 +4295,6 @@ object Similarity {
        |  mg_edges, mg_avg_bp, n_ghost
        |FROM dh d JOIN sh s ON d.q_id = s.q_id CROSS JOIN dstat
        |ORDER BY d.q_id""".stripMargin
-  }
 
   // ─── q345: FILTERED ANN — "top-k WHERE predicate" ────────────────────
   // The production vector-search staple every serving arm lacked: rank
@@ -5098,17 +4383,14 @@ object Similarity {
       .where(col("rn2") <= FilterK).select("filt", "q_id", "c_id")
     val nPost = scored.groupBy(col("q_id"))
       .agg(count(lit(1)).as("n_cand_post"))
-    def hitsOf(arm: DataFrame, nm: String) = ex.as("x")
-      .join(arm.as("a"), col("x.filt") === col("a.filt") &&
-        col("x.q_id") === col("a.q_id") && col("x.c_id") === col("a.c_id"),
-        "left")
-      .groupBy(col("x.filt").as("filt"), col("x.q_id").as("q_id"))
-      .agg(count(col("a.c_id")).as(nm))
+    def armHits(arm: DataFrame, nm: String) = hitsOf(ex,
+      arm.select(col("filt"), col("q_id"), col("c_id").as("v")), nm,
+      Seq("filt", "q_id"))
     base
       .join(nPre, Seq("filt", "q_id"), "left")
       .join(nPost, Seq("q_id"), "left")
-      .join(hitsOf(pre, "n_hits_pre"), Seq("filt", "q_id"), "left")
-      .join(hitsOf(post, "n_hits_post"), Seq("filt", "q_id"), "left")
+      .join(armHits(pre, "n_hits_pre"), Seq("filt", "q_id"), "left")
+      .join(armHits(post, "n_hits_post"), Seq("filt", "q_id"), "left")
       .select(col("filt"), col("q_id"),
         coalesce(col("n_cand_pre"), lit(0L)).as("n_cand_pre"),
         coalesce(col("n_cand_post"), lit(0L)).as("n_cand_post"),
@@ -5122,7 +4404,6 @@ object Similarity {
   }
 
   val q345Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
     val d2q = "list_dot_product(q.qe, q.qe)" +
       " - 2*list_dot_product(q.qe, c.carr)" +
       " + list_dot_product(c.carr, c.carr)"
@@ -5152,7 +4433,7 @@ object Similarity {
        |  FROM pc p JOIN afin a ON p.cid = a.cid
        |  WHERE a.vec_id <> p.q_id),
        |scored AS MATERIALIZED (
-       |  SELECT cd.q_id, cd.c_id, ${bp("q.qe", "e.e")} AS bp
+       |  SELECT cd.q_id, cd.c_id, ${bpSql("q.qe", "e.e")} AS bp
        |  FROM cand cd JOIN emb e ON cd.c_id = e.vec_id
        |  JOIN probes q ON cd.q_id = q.q_id),
        |pass AS MATERIALIZED (
@@ -5167,7 +4448,7 @@ object Similarity {
        |  SELECT filt, q_id, c_id FROM (
        |    SELECT ps.filt, q.q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY ps.filt, q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.qe", "c.e")} DESC, c.vec_id) AS ern
        |    FROM probes q JOIN emb c ON c.vec_id <> q.q_id
        |    JOIN pass ps ON ps.vec_id = c.vec_id)
        |  WHERE ern <= $FilterK),
@@ -5246,35 +4527,11 @@ object Similarity {
   def q347FilteredGraphServe(s: SparkSession, d: String): DataFrame = {
     val emb = embFrame(s, d)
     val lab = embeddings(s, d).select(col("vec_id"), col("label"))
-    val g = nnGraphFor(s, d)
-    // mutual edges leave ≤2× duplicate rows; every hop distinct-s its
-    // neighbor frontier, so the adjacency dedup shuffle is saved
-    val und = g.select("u", "v")
-      .unionAll(g.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+    val und = undirected(nnGraphFor(s, d))
     val probes = emb.where(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val entries = nnEntriesFrom(emb.select("vec_id"))
-    def score(cand: DataFrame): DataFrame = cand
-      .join(emb.select(col("vec_id").as("v"), col("e").as("ve")), "v")
-      .join(broadcast(probes), "q_id")
-      .where(col("v") =!= col("q_id"))
-      .select(col("q_id"), col("v"), cosBp(col("qe"), col("ve")).as("bp"))
-    def beamOf(vis: DataFrame): DataFrame = vis
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
-      .where(col("rn") <= NnBeam).drop("rn")
-    var visited = score(
-        probes.select("q_id").crossJoin(broadcast(entries)))
-      .localCheckpoint()
-    for (_ <- 1 to NnHops) {
-      val nbrs = beamOf(visited).select(col("q_id"), col("v").as("u"))
-        .join(und, "u").select(col("q_id"), col("v")).distinct()
-      // r15: anti-join-then-union ≡ union-then-distinct (q322 walk note)
-      val fresh = nbrs.join(visited.select("q_id", "v"),
-        Seq("q_id", "v"), "left_anti")
-      visited = visited.unionAll(score(fresh)).localCheckpoint()
-    }
+    val visited = walk(panelScorer(emb, probes), und,
+      fixedEntries(probes, nnEntriesFrom(emb)), NnHops, NnBeam)
     val pass = lab.where(pmod(col("label"), lit(2)) === 0)
         .select(lit("half").as("filt"), col("vec_id").as("v"))
       .unionAll(lab.where(col("label") === 3)
@@ -5295,8 +4552,7 @@ object Similarity {
       .where(col("ern") <= NnK).select("filt", "q_id", "c_id")
     // arm 1: overfetch CUT (2k) then filter then cut to k
     val cut = visited
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("v"))))
+      .withColumn("rn", row_number().over(byBp))
       .where(col("rn") <= 2 * NnK)
       .join(pass, Seq("v"))
       .withColumn("rn2", row_number().over(
@@ -5312,19 +4568,12 @@ object Similarity {
       .where(col("rn") <= NnK).select("filt", "q_id", "v")
     val nPool = pooled.groupBy(col("filt"), col("q_id"))
       .agg(count(lit(1)).as("n_pool"))
-    val nVis = visited.groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_visited"))
-    def hitsOf(arm: DataFrame, nm: String) = ex.as("x")
-      .join(arm.as("a"), col("x.filt") === col("a.filt") &&
-        col("x.q_id") === col("a.q_id") && col("x.c_id") === col("a.v"),
-        "left")
-      .groupBy(col("x.filt").as("filt"), col("x.q_id").as("q_id"))
-      .agg(count(col("a.v")).as(nm))
+    val byFilt = Seq("filt", "q_id")
     base
-      .join(nVis, Seq("q_id"), "left")
-      .join(nPool, Seq("filt", "q_id"), "left")
-      .join(hitsOf(cut, "n_hits_post"), Seq("filt", "q_id"), "left")
-      .join(hitsOf(pool, "n_hits_pool"), Seq("filt", "q_id"), "left")
+      .join(visitsOf(visited, "n_visited"), Seq("q_id"), "left")
+      .join(nPool, byFilt, "left")
+      .join(hitsOf(ex, cut, "n_hits_post", byFilt), byFilt, "left")
+      .join(hitsOf(ex, pool, "n_hits_pool", byFilt), byFilt, "left")
       .select(col("filt"), col("q_id"),
         coalesce(col("n_visited"), lit(0L)).as("n_visited"),
         coalesce(col("n_pool"), lit(0L)).as("n_pool"),
@@ -5337,43 +4586,15 @@ object Similarity {
       .orderBy(col("filt"), col("q_id"))
   }
 
-  val q347Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    val hops = (1 to NnHops).map { h =>
-      s"""fr${h - 1} AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM vis${h - 1})
-         |  WHERE rn <= $NnBeam),
-         |nb$h AS (
-         |  SELECT DISTINCT f.q_id, u2.v FROM fr${h - 1} f
-         |  JOIN und u2 ON f.v = u2.u),
-         |sv$h AS (
-         |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM nb$h s JOIN emb ev ON s.v = ev.vec_id
-         |  JOIN qprobes q ON s.q_id = q.q_id
-         |  WHERE s.v <> s.q_id),
-         |vis$h AS MATERIALIZED (
-         |  SELECT DISTINCT q_id, v, bp FROM (
-         |    SELECT * FROM vis${h - 1} UNION ALL SELECT * FROM sv$h))"""
-        .stripMargin
-    }.mkString(",\n")
+  val q347Sql: String =
     s"""WITH $nnGraphCtes,
        |lemb AS (SELECT vec_id, label FROM embeddings),
        |qprobes AS (SELECT vec_id AS q_id, e AS qe FROM emb
        |            WHERE vec_id < 10),
-       |entries AS (
-       |  SELECT vec_id AS v FROM emb
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |und AS (SELECT u, v FROM g$NnRounds
-       |        UNION SELECT v, u FROM g$NnRounds),
-       |vis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM qprobes q CROSS JOIN entries en
-       |  JOIN emb ev ON en.v = ev.vec_id
-       |  WHERE en.v <> q.q_id),
-       |$hops,
+       |${entriesSql("entries", "emb")},
+       |${undSql("und", s"g$NnRounds")},
+       |${fixedSeedSql("vis0", "entries", "en")},
+       |${walkHopsSql("", "und", NnHops, NnBeam, PanelSql, OneLine)},
        |pass AS MATERIALIZED (
        |  SELECT 'half' AS filt, vec_id AS v FROM lemb WHERE label % 2 = 0
        |  UNION ALL
@@ -5386,7 +4607,7 @@ object Similarity {
        |  SELECT filt, q_id, c_id FROM (
        |    SELECT ps.filt, q.q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY ps.filt, q.q_id
-       |        ORDER BY ${bp("q.qe", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.qe", "c.e")} DESC, c.vec_id) AS ern
        |    FROM qprobes q JOIN emb c ON c.vec_id <> q.q_id
        |    JOIN pass ps ON ps.v = c.vec_id)
        |  WHERE ern <= $NnK),
@@ -5439,7 +4660,6 @@ object Similarity {
        |LEFT JOIN ch ON b.filt = ch.filt AND b.q_id = ch.q_id
        |LEFT JOIN lh ON b.filt = lh.filt AND b.q_id = lh.q_id
        |ORDER BY b.filt, b.q_id""".stripMargin
-  }
 
   // ─── q340: k-NN index HEALTH POLICY (when to rebuild) ────────────────
   // q324 inserts and q334 deletes keep the graph correct, but each
@@ -5522,8 +4742,7 @@ object Similarity {
     * (tombstones = `vec_id % 10 = m`), prefix-isolated — the q334
     * d-block factored for q340's chained waves. Emits `${P}g2` (the
     * maintained graph) and `${P}recut` (damaged ∪ affected). */
-  private[graft] def delWaveCtes(gin: String, P: String, m: Int): String = {
-    def bp(a: String, b: String) = bpSql(a, b)
+  private[graft] def delWaveCtes(gin: String, P: String, m: Int): String =
     s"""${P}gp AS (SELECT u, v, bp FROM $gin
        |        WHERE u % 10 <> $m AND v % 10 <> $m),
        |${P}dam AS (SELECT DISTINCT u FROM $gin
@@ -5540,7 +4759,7 @@ object Similarity {
        |  SELECT DISTINCT t.u, d.w AS v FROM ${P}todel t
        |  JOIN ${P}und d ON t.x = d.x WHERE d.w <> t.u),
        |${P}sc AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+       |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
        |  FROM ${P}cand c JOIN emb eu ON c.u = eu.vec_id
        |               JOIN emb ev ON c.v = ev.vec_id),
        |${P}g1 AS MATERIALIZED (
@@ -5570,7 +4789,7 @@ object Similarity {
        |    WHERE y.v IN (SELECT u FROM ${P}dam))
        |  WHERE u <> v),
        |${P}sc2 AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+       |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
        |  FROM ${P}cand2 c JOIN emb eu ON c.u = eu.vec_id
        |                JOIN emb ev ON c.v = ev.vec_id),
        |${P}aff AS (SELECT DISTINCT u FROM ${P}cand2),
@@ -5588,7 +4807,6 @@ object Similarity {
        |  WHERE trn <= $NnK),
        |${P}recut AS (SELECT u FROM ${P}dam UNION SELECT u FROM ${P}aff)"""
       .stripMargin
-  }
 
   /** Graph-health census CTEs over graph CTE `g`, prefix-isolated:
     * `${P}c` = (edges, avgbp, ghost-count under `ghost`), `${P}f` =
@@ -5607,9 +4825,7 @@ object Similarity {
        |    SELECT u FROM $g GROUP BY u HAVING count(*) >= $NnK))"""
       .stripMargin
 
-  val q340Sql: String = {
-    def censusCtes(g: String, P: String, ghost: String): String =
-      nnCensusCtes(g, P, ghost)
+  val q340Sql: String =
     s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
        |${nnGraphCtesCore("", "")},
        |${delWaveCtes(s"g$NnRounds", "w1", 7)},
@@ -5622,11 +4838,11 @@ object Similarity {
        |    CAST(sum(CASE WHEN vec_id % 10 <> 7 AND vec_id % 10 <> 3
        |      THEN 1 ELSE 0 END) AS BIGINT) AS l2
        |  FROM emb),
-       |${censusCtes(s"g$NnRounds", "c0", "FALSE")},
-       |${censusCtes("w1g2", "c1", "u % 10 = 7 OR v % 10 = 7")},
-       |${censusCtes("w2g2", "c2",
+       |${nnCensusCtes(s"g$NnRounds", "c0", "FALSE")},
+       |${nnCensusCtes("w1g2", "c1", "u % 10 = 7 OR v % 10 = 7")},
+       |${nnCensusCtes("w2g2", "c2",
            "u % 10 = 7 OR v % 10 = 7 OR u % 10 = 3 OR v % 10 = 3")},
-       |${censusCtes(s"s2g$NnRounds", "ca",
+       |${nnCensusCtes(s"s2g$NnRounds", "ca",
            "u % 10 = 7 OR v % 10 = 7 OR u % 10 = 3 OR v % 10 = 3")},
        |pol AS (
        |  SELECT l0, l1, l2,
@@ -5658,7 +4874,6 @@ object Similarity {
        |    CASE WHEN fired2 = 1 THEN l2 - af.nfull ELSE l2 - mf.nfull END
        |  FROM pol, c2c m, c2f mf, cac a, caf af)
        |ORDER BY wave""".stripMargin
-  }
 
   // ─── q342: the index FOLLOWS the table through the change feed ───────
   // The round's two pillars close into one loop: the SNAPSHOT TABLE is
@@ -5730,19 +4945,7 @@ object Similarity {
     val probes = emb
       .where(col("vec_id") < 10 && m10(col("vec_id")) =!= 7)
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
-    val exactK = emb.where(m10(col("vec_id")) =!= 7)
-      .select(col("vec_id").as("c_id"), col("e").as("ce"))
-      .join(broadcast(probes)).where(col("c_id") =!= col("q_id"))
-      .select(col("q_id"), col("c_id"),
-        cosBp(col("qe"), col("ce")).as("bp"))
-      .withColumn("ern", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("bp").desc, col("c_id"))))
-      .where(col("ern") <= NnK).select("q_id", "c_id")
-    def hitsOf(g: DataFrame, nm: String) = exactK.as("x")
-      .join(g.as("gg"), col("x.q_id") === col("gg.u") &&
-        col("x.c_id") === col("gg.v"), "left")
-      .groupBy(col("x.q_id").as("q_id"))
-      .agg(count(col("gg.v")).as(nm))
+    val exactK = exactTopK(emb.where(m10(col("vec_id")) =!= 7), probes)
     val nDel = tombs.count()
     val nIns = newRows.count()
     val liveTotal = SnapshotStore.countOf(s, table, 2)
@@ -5754,7 +4957,8 @@ object Similarity {
       .where(col("gu").isNotNull || col("gv").isNotNull).count()
     val glob = broadcast(g2.agg(count(lit(1)).as("mg_edges"),
       sum(col("bp")).as("msbp")))
-    hitsOf(g2, "n_hits_m").join(hitsOf(scr, "n_hits_scr"), "q_id")
+    graphHits(exactK, g2, "n_hits_m")
+      .join(graphHits(exactK, scr, "n_hits_scr"), "q_id")
       .crossJoin(glob)
       .select(col("q_id"), col("n_hits_m"),
         round(col("n_hits_m") / lit(NnK.toDouble), 4).as("recall_m"),
@@ -5766,50 +4970,22 @@ object Similarity {
       .orderBy(col("q_id"))
   }
 
-  /** Insert-wave CTE chain (the q324 placement machinery as SQL,
-    * factored from the q342 oracle for reuse by q343's): place the
-    * `newWhere` batch into input graph CTE `gin` with entry points from
-    * `entsWhere`; `isNew(col)` is the batch-membership predicate the
-    * refinement round restricts by. Emits `mg2`, the maintained graph
-    * after the wave. Fixed internal names (newq/bents/bund/ivisN/mg1/
-    * mg2) — one insert wave per WITH chain.
+  /** Insert-wave CTE chain (the q324 placement machinery as SQL — the
+    * oracle twin of [[nnInsertWaveKeys]]): place the `newWhere` batch
+    * into input graph CTE `gin` from the entry-panel CTE `bents`
+    * ([[entriesSql]]); `isNew(col)` is the batch-membership predicate
+    * the refinement round restricts by. Emits `mg2`, the maintained
+    * graph after the wave. Fixed internal names (newq/bents/bund/ivisN/
+    * mg1/mg2) — one insert wave per WITH chain.
     */
-  private[graft] def nnInsWaveCtes(gin: String, isNew: String => String,
-                                   newWhere: String,
-                                   entsWhere: String): String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    val hops = (1 to NnHops).map { h =>
-      s"""ifr${h - 1} AS (
-         |  SELECT q_id, v FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY q_id
-         |      ORDER BY bp DESC, v) AS rn FROM ivis${h - 1})
-         |  WHERE rn <= $NnBeam),
-         |inb$h AS (
-         |  SELECT DISTINCT f.q_id, u2.v FROM ifr${h - 1} f
-         |  JOIN bund u2 ON f.v = u2.u),
-         |isv$h AS (
-         |  SELECT s.q_id, s.v, ${bp("q.qe", "ev.e")} AS bp
-         |  FROM inb$h s JOIN emb ev ON s.v = ev.vec_id
-         |  JOIN newq q ON s.q_id = q.q_id),
-         |ivis$h AS MATERIALIZED (
-         |  SELECT DISTINCT q_id, v, bp FROM (
-         |    SELECT * FROM ivis${h - 1} UNION ALL SELECT * FROM isv$h))"""
-        .stripMargin
-    }.mkString(",\n")
+  private def nnInsWaveCtes(gin: String, isNew: String => String,
+                            newWhere: String, bents: String): String =
     s"""newq AS (SELECT vec_id AS q_id, e AS qe FROM emb
        |         WHERE $newWhere),
-       |bents AS (
-       |  SELECT vec_id AS v FROM emb
-       |  WHERE $entsWhere
-       |  ORDER BY md5('entry:' || CAST(vec_id AS VARCHAR)), vec_id
-       |  LIMIT $NnEntries),
-       |bund AS (SELECT u, v FROM $gin
-       |         UNION SELECT v, u FROM $gin),
-       |ivis0 AS MATERIALIZED (
-       |  SELECT q.q_id, en.v, ${bp("q.qe", "ev.e")} AS bp
-       |  FROM newq q CROSS JOIN bents en
-       |  JOIN emb ev ON en.v = ev.vec_id),
-       |$hops,
+       |$bents,
+       |${undSql("bund", gin, "\n         ")},
+       |${fixedSeedSql("ivis0", "bents", "en", BatchSql)},
+       |${walkHopsSql("i", "bund", NnHops, NnBeam, BatchSql, OneLine)},
        |mfwd AS (
        |  SELECT q_id AS u, v, bp FROM (
        |    SELECT *, row_number() OVER (PARTITION BY q_id
@@ -5846,7 +5022,7 @@ object Similarity {
        |    WHERE ${isNew("y.v")})
        |  WHERE u <> v),
        |msc AS (
-       |  SELECT c.u, c.v, ${bp("eu.e", "ev.e")} AS bp
+       |  SELECT c.u, c.v, ${bpSql("eu.e", "ev.e")} AS bp
        |  FROM mcand c JOIN emb eu ON c.u = eu.vec_id
        |               JOIN emb ev ON c.v = ev.vec_id),
        |maff AS (SELECT DISTINCT u FROM mcand),
@@ -5860,21 +5036,28 @@ object Similarity {
        |      SELECT g.u, g.v, g.bp FROM mg1 g JOIN maff t ON g.u = t.u
        |      UNION ALL SELECT * FROM msc)))
        |  WHERE trn <= $NnK)""".stripMargin
-  }
 
-  val q342Sql: String = {
-    def bp(a: String, b: String) = bpSql(a, b)
-    s"""WITH ${kmeansCtes(1, DIM, 8, 2)},
+  /** The q342 feed chain as CTEs — base graph without class 3, the
+    * class-7 delete wave, the class-3 insert wave — shared by the
+    * q342/q343/q348 oracles; emits `w1g2` (after the delete) and `mg2`
+    * (after the insert). */
+  private[graft] def feedChainCtes: String =
+    s"""${kmeansCtes(1, DIM, 8, 2)},
        |${nnGraphCtesCore("b_", "vec_id % 10 <> 3")},
        |${delWaveCtes(s"b_g$NnRounds", "w1", 7)},
        |${nnInsWaveCtes("w1g2", c => s"$c % 10 = 3", "vec_id % 10 = 3",
-           "vec_id % 10 <> 3 AND vec_id % 10 <> 7")},
+           entriesSql("bents",
+             "emb\n  WHERE vec_id % 10 <> 3 AND vec_id % 10 <> 7"))}"""
+      .stripMargin
+
+  val q342Sql: String =
+    s"""WITH $feedChainCtes,
        |${nnGraphCtesCore("s_", "vec_id % 10 <> 7")},
        |exactk AS (
        |  SELECT q_id, c_id FROM (
        |    SELECT q.vec_id AS q_id, c.vec_id AS c_id,
        |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY ${bp("q.e", "c.e")} DESC, c.vec_id) AS ern
+       |        ORDER BY ${bpSql("q.e", "c.e")} DESC, c.vec_id) AS ern
        |    FROM emb q JOIN emb c
        |      ON c.vec_id <> q.vec_id AND c.vec_id % 10 <> 7
        |    WHERE q.vec_id < 10 AND q.vec_id % 10 <> 7)
@@ -5910,7 +5093,6 @@ object Similarity {
        |FROM ih i JOIN sh s ON i.q_id = s.q_id
        |CROSS JOIN gstat CROSS JOIN cnts
        |ORDER BY i.q_id""".stripMargin
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q347_filtered_graph_serve" -> (q347FilteredGraphServe _),

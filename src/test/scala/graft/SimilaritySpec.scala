@@ -2,7 +2,10 @@ package graft
 
 import graft.ops.Similarity
 import graft.sources.Multimodal
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 
 /** Similarity + multimodal semantics beyond what the oracle checks. */
 class SimilaritySpec extends SparkSpec {
@@ -752,6 +755,81 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.head._6 <= rows.head._8,
       s"ivf visits ${rows.head._6} > fixed ${rows.head._8}")
     rows.foreach { r => assert(r._1 <= 4 && r._3 <= 4, "hits bounded by K") }
+  }
+
+  test("walk kernel ≡ the naive union-then-distinct walk on generated " +
+       "graphs (mutual/duplicate edges, self-loops, isolated vertices, bp " +
+       "ties, empty entries, hops 0–3, widths 1–3); duplicate entries " +
+       "fail by name") {
+    // few distinct vectors over up to 8 vertices ⇒ bp ties are common
+    val palette = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0),
+      Seq(2.0, 1.0))
+    case class Case(n: Int, vecs: Seq[Int], edges: Seq[(Long, Long)],
+                    ents: Seq[Long], panel: Boolean, hops: Int, width: Int)
+    val gen = for {
+      n <- Gen.choose(1, 8)
+      vecs <- Gen.listOfN(n + 2, Gen.choose(0, palette.size - 1))
+      vid = Gen.choose(0L, n - 1L)
+      edges <- Gen.choose(0, 12).flatMap(Gen.listOfN(_, Gen.zip(vid, vid)))
+      mutual <- Gen.someOf(edges)
+      ents <- Gen.choose(0, 3).flatMap(Gen.listOfN(_, vid))
+      panel <- Gen.oneOf(true, false)
+      hops <- Gen.choose(0, 3)
+      width <- Gen.choose(1, 3)
+    } yield Case(n, vecs, edges ++ mutual.map(_.swap), ents, panel, hops,
+      width)
+    val cases = (0 until 40).flatMap(i =>
+      gen(Gen.Parameters.default, Seed(i.toLong)))
+    // the seeds reach every shape the walk's contract distinguishes
+    assert(cases.exists(_.ents.isEmpty))
+    assert(cases.exists(c => c.hops > 0 && c.ents.distinct.size < c.ents.size))
+    assert(cases.exists(c => c.edges.exists(e => e._1 == e._2)))
+    assert(cases.exists(c => c.edges.distinct.size < c.edges.size))
+    assert(cases.exists(c => c.n > c.edges.flatMap(e => Seq(e._1, e._2))
+      .distinct.size))
+    assert(Set(0, 3).subsetOf(cases.map(_.hops).toSet))
+    assert(Set(1, 3).subsetOf(cases.map(_.width).toSet))
+    def naiveWalk(score: Similarity.Scorer, adj: DataFrame,
+                  entries: DataFrame, hops: Int, width: Int): DataFrame = {
+      var visited = score(entries)
+      for (_ <- 1 to hops) {
+        val nbrs = Similarity.beam(visited, width)
+          .select($"q_id", $"v".as("u")).join(adj, "u")
+          .select($"q_id", $"v").distinct()
+        visited = visited.unionAll(score(nbrs)).distinct().localCheckpoint()
+      }
+      visited
+    }
+    def rows(df: DataFrame) = df.select($"q_id", $"v", $"bp")
+      .as[(Long, Long, Long)].collect().toSeq.sorted
+    cases.foreach { c =>
+      val emb = c.vecs.take(c.n).zipWithIndex
+        .map { case (k, i) => (i.toLong, palette(k)) }.toDF("vec_id", "e")
+      // panel probes are graph vertices (self-pairs excluded); batch
+      // probes are new ids outside the graph
+      val probeRows =
+        if (c.panel) (0 until math.min(2, c.n)).map(i =>
+          (i.toLong, palette(c.vecs(i))))
+        else Seq((100L, palette(c.vecs(c.n))), (101L, palette(c.vecs(c.n + 1))))
+      val probes = probeRows.toDF("q_id", "qe")
+      val score =
+        if (c.panel) Similarity.panelScorer(emb, probes)
+        else Similarity.batchScorer(emb, probes)
+      val adj = Similarity.undirected(c.edges.toDF("u", "v"))
+      def entries = Similarity.fixedEntries(probes, c.ents.toDF("v"))
+      val pairs = for ((q, _) <- probeRows; v <- c.ents if q != v) yield (q, v)
+      lazy val kernel = Similarity.walk(score, adj, entries, c.hops, c.width)
+      if (c.hops > 0 && pairs.distinct.size < pairs.size) {
+        val err = intercept[Exception](rows(kernel))
+        assert(Iterator.iterate[Throwable](err)(_.getCause)
+            .takeWhile(_ != null)
+            .exists(e => String.valueOf(e.getMessage)
+              .contains(Similarity.WalkEntriesNotASet)),
+          s"$c: duplicate entries must fail by name, got $err")
+      } else
+        assert(rows(kernel) === rows(naiveWalk(score, adj, entries, c.hops,
+          c.width)), s"kernel and naive walk disagree on $c")
+    }
   }
 
   test("q324 incremental insert: base graph excludes the batch, every " +
