@@ -682,16 +682,18 @@ object PlanLint {
     "q342_index_follows_table" -> 48,
     // durable subscriber: publish + bootstrap + 2 CDC commits + per
     // micro-batch (meta read, counters, wave checkpoints, 2 publishes)
-    // + census reads (measured 65 fresh-session at sf0.01)
-    "q343_durable_index" -> 88,
+    // + census reads (measured 65 fresh-session at sf0.001 and sf0.01;
+    // bound = measured + 5)
+    "q343_durable_index" -> 70,
     // policy subscriber: q343's loop with a fired survivor retrain in
     // batch 2 instead of the insert wave (measured 54 fresh-session at
-    // sf0.01)
-    "q344_auto_retrain_policy" -> 76,
+    // sf0.001 and sf0.01; bound = measured + 5)
+    "q344_auto_retrain_policy" -> 59,
     // as-of serving: pays the shared q343 fixture when FIRST (live
     // subscriber loop) + two walk chains + census (measured 72
-    // fresh-session at sf0.01; memo-shared runs cost the two walks alone)
-    "q348_index_asof_serve" -> 92,
+    // fresh-session at sf0.001 and sf0.01; bound = measured + 5;
+    // memo-shared runs cost the two walks alone)
+    "q348_index_asof_serve" -> 77,
     // IVF-entry serve: trainer (6, memoized — priced fresh) + its own
     // adjacency/entry/3-hop checkpoints (5) + the embedded fixed walk
     // (q322's 5) + census write (measured 16 fresh-session at sf0.01)

@@ -1,7 +1,9 @@
 package graft.ingest
 
+import graft.sources.Pagination
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
 /** The reference's full catalog fan-out as ONE declarative multi-output
   * DAG: parse a page of course JSON once, derive all 12 sink relations
@@ -17,6 +19,16 @@ import org.apache.spark.sql.functions._
   * that per query. Dimension ids are `row_number` over the natural key
   * (deterministic, SURVEY §7.3); bridge tables carry (course_id, dim_id)
   * exactly like course_catalog_database.sql:90–106.
+  *
+  * Partition sizing: the dimension probes' counts build the parse cache,
+  * and its MEASURED in-memory bytes (the cache's own size accumulator,
+  * never an optimizer estimate — an explode's estimate does not grow
+  * with its fan-out) set the partition count every other relation is
+  * derived at: ceil(cached bytes / `spark.sql.files.maxPartitionBytes`).
+  * A catalog round of a few hundred KB is then one partition, so each
+  * relation a caller writes is one part file instead of one per core.
+  * The dimensions themselves come out of a global `row_number` window,
+  * already one partition.
   */
 object CatalogPipeline {
 
@@ -42,15 +54,6 @@ object CatalogPipeline {
       .select(col("c.*"))
       .cache()
 
-    val courses = parsed.select(
-      col("id"), col("title"), col("description"), col("url"),
-      col("estimated_content_length"), col("num_lectures"), col("num_videos"),
-      col("mobile_native_deeplink"), col("is_practice_test_course"),
-      col("num_quizzes"), col("num_practice_tests"), col("has_closed_caption"),
-      col("last_update_date"), col("xapi_activity_id"), col("is_custom"),
-      col("is_imported"), col("headline"), col("level"),
-      col("locale.locale").as("locale"))
-
     def dim(titleCol: String): graft.ops.Merge.ManagedFrame =
       // keyed on BOTH distinct columns: ordering by title alone would
       // tie-break duplicate titles (different urls) by partition layout,
@@ -61,39 +64,52 @@ object CatalogPipeline {
           .where(col("title").isNotNull).distinct(),
         Seq("title", "url"))
 
+    // the probes' counts materialize the parse cache; only then is its
+    // size measured, and the rest of the fan-out reads it at that size
     val categoriesM = dim("primary_category")
     val subcategoriesM = dim("primary_subcategory")
     val categories = categoriesM.df
     val subcategories = subcategoriesM.df
+    val src = bridge.cachedBytes(parsed)
+      .fold(parsed)(b => parsed.coalesce(Pagination.partitionsFor(spark, b)))
 
-    def bridge(d: DataFrame, titleCol: String, fk: String): DataFrame =
-      parsed.select(col("id").as("course_id"),
-                    col(s"$titleCol.title").as("title"))
+    val courses = src.select(
+      col("id"), col("title"), col("description"), col("url"),
+      col("estimated_content_length"), col("num_lectures"), col("num_videos"),
+      col("mobile_native_deeplink"), col("is_practice_test_course"),
+      col("num_quizzes"), col("num_practice_tests"), col("has_closed_caption"),
+      col("last_update_date"), col("xapi_activity_id"), col("is_custom"),
+      col("is_imported"), col("headline"), col("level"),
+      col("locale.locale").as("locale"))
+
+    def bridgeOf(d: DataFrame, titleCol: String, fk: String): DataFrame =
+      src.select(col("id").as("course_id"),
+                 col(s"$titleCol.title").as("title"))
         .join(d.select(col("title"), col("id").as(fk)), Seq("title"))
         .select(col("course_id"), col(fk))
 
     val explodeStruct = (c: String, fields: Seq[String]) =>
-      parsed.select(col("id").as("course_id"), explode(col(c)).as("x"))
+      src.select(col("id").as("course_id"), explode(col(c)).as("x"))
         .select(col("course_id") +: fields.map(f => col(s"x.$f")): _*)
 
     val relations = Map(
       "courses" -> courses,
       "categories" -> categories,
       "subcategories" -> subcategories,
-      "course_categories" -> bridge(categories, "primary_category", "category_id"),
-      "course_subcategories" -> bridge(subcategories, "primary_subcategory", "subcategory_id"),
+      "course_categories" -> bridgeOf(categories, "primary_category", "category_id"),
+      "course_subcategories" -> bridgeOf(subcategories, "primary_subcategory", "subcategory_id"),
       "topics" -> explodeStruct("topics", Seq("id", "title", "url")),
       "promo_videos" -> explodeStruct("promo_video_url", Seq("type", "label", "file")),
-      "instructors" -> parsed.select(col("id").as("course_id"),
+      "instructors" -> src.select(col("id").as("course_id"),
         explode(col("instructors")).as("instructor")),
-      "requirements" -> parsed.where(col("requirements.list").isNotNull)
+      "requirements" -> src.where(col("requirements.list").isNotNull)
         .select(col("id").as("course_id"),
                 explode(col("requirements.list")).as("requirement")),
-      "what_you_will_learn" -> parsed.select(col("id").as("course_id"),
+      "what_you_will_learn" -> src.select(col("id").as("course_id"),
         explode(col("what_you_will_learn.list")).as("outcome")),
-      "images" -> parsed.select(col("id").as("course_id"), explode(col("images")))
+      "images" -> src.select(col("id").as("course_id"), explode(col("images")))
         .withColumnRenamed("key", "size").withColumnRenamed("value", "url"),
-      "caption_languages" -> parsed.select(col("id").as("course_id"),
+      "caption_languages" -> src.select(col("id").as("course_id"),
         explode(col("caption_languages")).as("language")),
       "caption_locales" -> explodeStruct("caption_locales",
         Seq("locale", "title", "english_title")),

@@ -1,5 +1,6 @@
 package graft.plans
 
+import graft.sources.SnapshotStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
@@ -87,27 +88,25 @@ object SummaryRewrite extends Rule[LogicalPlan] {
   }
 
   /** relative-path:length:mtime of every file RECURSIVELY under the fact
-    * path — the staleness fingerprint. Recursive (fs.listFiles(p, true))
-    * because a PARTITIONED fact's dynamic-partition overwrite rewrites
-    * files in subdirectories while leaving top-level entries (_SUCCESS)
-    * untouched: a top-level-only listing would miss it and fresh() would
-    * silently serve stale summary rows. A metadata-only walk (no data
-    * read); empty when the path cannot be listed, which then never
-    * matches a live signature.
+    * path — the staleness fingerprint. Recursive because a PARTITIONED
+    * fact's dynamic-partition overwrite rewrites files in subdirectories
+    * while leaving top-level entries (_SUCCESS) untouched: a
+    * top-level-only listing would miss it and fresh() would silently
+    * serve stale summary rows. A metadata-only walk (no data read, and
+    * no `ls -ld` fork per file — see [[SnapshotStore.walkFiles]]); empty
+    * when the path cannot be listed, which then never matches a live
+    * signature. This runs inside an optimizer rule, on every plan that
+    * aggregates a registered fact.
     */
   private def factSignature(spark: SparkSession, factPath: String): String =
     try {
       val p = new org.apache.hadoop.fs.Path(factPath)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       val prefix = fs.getFileStatus(p).getPath.toString // qualified root
-      val it = fs.listFiles(p, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next()
+      SnapshotStore.walkFiles(fs, p).map { f =>
         val rel = f.getPath.toString.stripPrefix(prefix)
-        buf += s"$rel:${f.getLen}:${f.getModificationTime}"
-      }
-      buf.sorted.mkString(",")
+        s"$rel:${f.getLen}:${f.getModificationTime}"
+      }.sorted.mkString(",")
     } catch { case scala.util.control.NonFatal(_) => "" }
 
   def clear(): Unit = registry.clear()

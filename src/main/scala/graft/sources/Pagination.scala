@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import java.nio.charset.StandardCharsets.UTF_8
 
 /** O1 + O16–O18: the reference's paginated REST source, modeled without
   * sockets.
@@ -174,9 +175,31 @@ object Pagination {
         aborted))
   }
 
-  /** Lift fetched record bodies into a typed DataFrame (the O2 boundary). */
+  /** Lift fetched record bodies into a typed DataFrame (the O2 boundary).
+    *
+    * The frame is sized by the bodies' measured UTF-8 bytes: one
+    * partition per `spark.sql.files.maxPartitionBytes` (see
+    * [[partitionsFor]]), never more than one per body — the split a
+    * file scan of the same bytes would get. A local collection left to
+    * Spark is cut into one partition per core whatever its size, and
+    * every downstream write then stages that many part files.
+    */
   def toDF(spark: SparkSession, bodies: Seq[String], schema: StructType): DataFrame = {
     import spark.implicits._
-    spark.read.schema(schema).json(spark.createDataset(bodies))
+    val bytes = bodies.iterator.map(_.getBytes(UTF_8).length.toLong).sum
+    val n = math.min(partitionsFor(spark, bytes), math.max(1, bodies.size))
+    spark.read.schema(schema)
+      .json(spark.createDataset(spark.sparkContext.parallelize(bodies, n)))
+  }
+
+  /** Partitions for `bytes` of MEASURED data: ceil(bytes /
+    * `spark.sql.files.maxPartitionBytes`), at least one. Shared by the
+    * ingest frames ([[toDF]], `CatalogPipeline.fanoutManaged`); callers
+    * pass bytes they hold or have materialized, never a plan estimate.
+    */
+  private[graft] def partitionsFor(spark: SparkSession, bytes: Long): Int = {
+    val target = spark.sessionState.conf.filesMaxPartitionBytes
+    math.min(Int.MaxValue.toLong,
+      math.max(1L, (bytes + target - 1) / target)).toInt
   }
 }

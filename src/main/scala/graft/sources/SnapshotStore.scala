@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -29,6 +29,20 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    version, no matter when it runs.
   *  - `read(spark, table, Some(v))` is time travel: old manifests (and
   *    their data dirs) are immutable once committed.
+  *
+  * File metadata is a first-class cost here, and the store keeps it to
+  * what the protocol needs:
+  *  - reads take their schema from the MANIFEST (mapped to physical
+  *    names through the colmap, hive partition columns left to the dir
+  *    names), so building a snapshot's DataFrame launches no Spark job —
+  *    a parquet read without a schema runs a schema-inference job per
+  *    snap dir;
+  *  - staged dirs carry no `_SUCCESS` marker: the manifest is the only
+  *    commit point, and nothing reads the marker;
+  *  - staged files are listed by a `listStatus` walk ([[walkFiles]]),
+  *    never `listFiles`, whose `LocatedFileStatus` per file makes
+  *    Hadoop's local filesystem fork `ls -ld` when it runs without its
+  *    native library; footers are opened from those statuses.
   *
   * Manifest format: line 1 `version=N`, line 2 `count=M`, line 3
   * `schema=DDL`, remaining lines one data file each:
@@ -131,21 +145,34 @@ object SnapshotStore {
       rel.split('/').dropRight(1).toSeq.map(_.split("=", 2)(0))
     }
 
+  /** Every FILE under `dir`, recursively, sorted by path: a walk of
+    * plain `listStatus` calls. It never builds a `LocatedFileStatus`,
+    * which `listFiles` does for every file it returns: the constructor
+    * copies the permission, owner and group, and Hadoop's local
+    * filesystem, without its native library, loads those by forking
+    * `ls -ld` once per entry. Shared with `SummaryRewrite`'s staleness
+    * fingerprint.
+    */
+  private[graft] def walkFiles(f: org.apache.hadoop.fs.FileSystem,
+                               dir: Path): Seq[FileStatus] = {
+    val buf = Seq.newBuilder[FileStatus]
+    def walk(d: Path): Unit = f.listStatus(d).foreach { st =>
+      if (st.isDirectory) walk(st.getPath) else buf += st
+    }
+    walk(dir)
+    buf.result().sortBy(_.getPath.toString)
+  }
+
   /** All part files under `dir`, recursively (hive partition dirs). */
-  private def listParquet(f: org.apache.hadoop.fs.FileSystem,
-                          dir: Path): Seq[Path] = {
-    val it = f.listFiles(dir, true)
-    val buf = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
+  private[graft] def listParquet(f: org.apache.hadoop.fs.FileSystem,
+                                 dir: Path): Seq[FileStatus] =
+    walkFiles(f, dir).filter { st =>
+      val p = st.getPath
       // underscore-prefixed subdirs (_bloom, _dv) hold side files, not
       // data — a deletion-vector parquet must never list as a data file
-      if (p.getName.startsWith("part-") && p.getName.endsWith(".parquet")
-          && !p.getParent.getName.startsWith("_"))
-        buf += p
+      p.getName.startsWith("part-") && p.getName.endsWith(".parquet") &&
+        !p.getParent.getName.startsWith("_")
     }
-    buf.result().sortBy(_.toString)
-  }
 
   /** Stage `df` under the version's data dir and build the manifest body
     * (count + per-file integral-column min/max stats). ONE column-pruned
@@ -182,12 +209,10 @@ object SnapshotStore {
   private case class FooterStats(rows: Long,
                                  mm: Map[String, (Long, Long)], ok: Boolean)
 
-  private def footerStatsOf(conf: org.apache.hadoop.conf.Configuration,
-                            p: String, want: Set[String]): FooterStats = {
+  private def footerStatsOf(file: org.apache.parquet.io.InputFile,
+                            want: Set[String]): FooterStats = {
     import scala.jdk.CollectionConverters._
-    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(p), conf))
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(file)
     try {
       val blocks = rdr.getFooter.getBlocks.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -224,15 +249,20 @@ object SnapshotStore {
     * discovery (an unparseable/NULL partition value contributes no
     * stats, like an all-null column). Returns None when any footer
     * lacks stats for a wanted column (caller falls back to the scan).
+    * Footers are read one after another: a small thread pool measured
+    * more CPU for no less wall time at refresh sizes.
     */
-  private def footerStatLines(spark: SparkSession, files: Seq[String],
+  private def footerStatLines(spark: SparkSession, files: Seq[FileStatus],
                               dirName: String, statCols: Seq[String])
       : Option[(Long, Seq[String])] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val per = files.map { p =>
-      val st = footerStatsOf(conf, p, statCols.toSet)
+    val per = files.map { fst =>
+      // opened from the listing's own status: no second stat per file
+      val st = footerStatsOf(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(fst, conf),
+        statCols.toSet)
       if (!st.ok) return None
-      p -> st
+      fst.getPath.toString -> st
     }
     val count0 = per.map(_._2.rows).sum
     // zero-row part files are dropped outright, mirroring the scan path
@@ -251,6 +281,16 @@ object SnapshotStore {
     Some((count0, lines))
   }
 
+  /** The write every staged dir goes through (data files and DVs):
+    * overwrite, without Hadoop's `_SUCCESS` marker. A staged dir is
+    * visible only through the manifest that names its files, so the
+    * manifest is the sole commit point and the marker would be one more
+    * created file that no reader consults.
+    */
+  private def stagingWriter(df: DataFrame) =
+    df.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+
   /** [[stageBody]]'s engine, returning (row count, manifest file lines)
     * so a MERGE can splice freshly staged lines together with lines
     * carried over from the previous version.
@@ -261,10 +301,11 @@ object SnapshotStore {
                          partitionBy: Seq[String] = Nil): (Long, Seq[String]) = {
     val spark = df.sparkSession
     val f = fs(spark, dataDir)
-    val writer = df.write.mode("overwrite")
+    val writer = stagingWriter(df)
     (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*)
      else writer).parquet(dataDir.toString)
-    val files = listParquet(f, dataDir).map(_.toString)
+    val listed = listParquet(f, dataDir)
+    val files = listed.map(_.getPath.toString)
     // a write whose every task produced zero rows (e.g. a delete that
     // emptied all touched files) leaves no part files at all — nothing
     // to stat, nothing to list
@@ -278,7 +319,7 @@ object SnapshotStore {
     // side files genuinely need the column BYTES, so those publishes
     // keep the one combined stats+bloom scan below.
     if (bloomCols.isEmpty) {
-      footerStatLines(spark, files, dataDir.getName, statCols) match {
+      footerStatLines(spark, listed, dataDir.getName, statCols) match {
         case Some(res) => return res
         case None => // fall through to the scan twin
       }
@@ -722,7 +763,21 @@ object SnapshotStore {
     * manifest's file list — never a directory scan of the table root.
     */
   def read(spark: SparkSession, table: String,
-           version: Option[Int] = None): DataFrame = {
+           version: Option[Int] = None): DataFrame =
+    readWith(spark, table, version, inferSchema = false)
+
+  /** [[read]] with each snap dir's schema INFERRED from its parquet
+    * footers — one schema-inference Spark job per dir — instead of taken
+    * from the manifest. The read as it was before manifest-schema reads,
+    * kept as the differential twin SnapshotStoreSpec checks [[read]]
+    * against.
+    */
+  private[graft] def readInferred(spark: SparkSession, table: String,
+                                  version: Option[Int] = None): DataFrame =
+    readWith(spark, table, version, inferSchema = true)
+
+  private def readWith(spark: SparkSession, table: String,
+                       version: Option[Int], inferSchema: Boolean): DataFrame = {
     val committed = versions(spark, table)
     require(committed.nonEmpty, s"no committed snapshots under $table")
     val v = version.getOrElse(committed.last)
@@ -730,7 +785,7 @@ object SnapshotStore {
       s"version $v not committed (have: ${committed.mkString(",")})")
     val lines = manifestLines(spark, table, v)
     val files = lines.drop(3).filter(_.nonEmpty).map(_.split('\t')(0))
-    loadFiles(spark, files, lines)
+    loadFiles(spark, files, lines, inferSchema)
   }
 
   /** Load a version's (possibly pruned) file list. Files are grouped by
@@ -744,9 +799,41 @@ object SnapshotStore {
     * rewrites everything into one dir, collapsing the references).
     */
   private def loadFiles(spark: SparkSession, files: Seq[String],
-                        lines: List[String]): DataFrame =
+                        lines: List[String],
+                        inferSchema: Boolean = false): DataFrame =
     if (files.isEmpty) emptyFrame(spark, lines)
-    else loadFilesWithPos(spark, files, lines).drop("_k", "_pos")
+    else loadFilesWithPos(spark, files, lines, inferSchema).drop("_k", "_pos")
+
+  /** Scan of one snap dir's `files` under the manifest's schema: the
+    * LOGICAL fields mapped to their PHYSICAL names through the colmap,
+    * minus the hive partition columns, which stay discovered from the
+    * dir names (the layout is their spec; [[loadFilesWithPos]] casts
+    * them to the manifest type). A given schema spares Spark the
+    * one-task schema-inference job it runs for every parquet read
+    * without one; a column the files predate reads as NULL, as the
+    * add-column contract wants. `inferSchema` restores inference, for
+    * [[readInferred]] only.
+    */
+  private def readSnapDir(spark: SparkSession, dir: String, files: Seq[String],
+                          lines: List[String],
+                          inferSchema: Boolean = false): DataFrame = {
+    val colmap = colmapOfLine(lines(2))
+    val partCols = partitionColsOf(files).map(_.toLowerCase).toSet
+    val phys = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructType.fromDDL(ddlOfLine(lines(2)))
+        .fields.map(fl => fl.copy(name = physOf(colmap, fl.name)))
+        .filterNot(fl => partCols.contains(fl.name.toLowerCase)))
+    val reader = spark.read.option("basePath", dir)
+    (if (inferSchema) reader else reader.schema(phys))
+      .parquet(files: _*)
+  }
+
+  /** The union of deletion-vector dirs, read under the DV's fixed
+    * (k, pos) schema — no inference job per dir.
+    */
+  private def readDv(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    dirs.map(dir => spark.read.schema(DvSchema).parquet(dir))
+      .reduce(_.unionAll(_))
 
   /** [[loadFiles]] with the row's canonical file key and in-file row
     * position retained as `_k`/`_pos` — the handle [[dvDelete]] needs to
@@ -758,7 +845,8 @@ object SnapshotStore {
     * no join).
     */
   private def loadFilesWithPos(spark: SparkSession, files: Seq[String],
-                               lines: List[String]): DataFrame = {
+                               lines: List[String],
+                               inferSchema: Boolean = false): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType
       .fromDDL(ddlOfLine(lines(2)))
     val colmap = colmapOfLine(lines(2))
@@ -783,7 +871,7 @@ object SnapshotStore {
         val keyCol = concat(lit(dirName + "/"), regexp_extract(
           col("_metadata.file_path"),
           java.util.regex.Pattern.quote(dirName) + "/(.*)", 1))
-        conform(spark.read.option("basePath", dir).parquet(grp: _*)
+        conform(readSnapDir(spark, dir, grp, lines, inferSchema)
           .withColumn("_k", keyCol)
           .withColumn("_pos", col("_metadata.row_index"))) }
       .reduce(_.unionAll(_))
@@ -794,14 +882,13 @@ object SnapshotStore {
     if (dvDirs.isEmpty) base
     else {
       // NB: reading a dir whose own name starts with '_' makes Spark's
-      // DataSource log a benign "All paths were ignored" warning during
-      // schema inference (the hidden-file filter sees the root segment);
-      // the relation itself loads every row — SnapshotStoreSpec and the
-      // q318 oracle pin that. The underscore is deliberate: it keeps DV
-      // files invisible to any directory-level DATA listing (the same
-      // convention as _bloom and Delta's _delta_log).
-      val dv = dvDirs.map(dir => spark.read.parquet(dir))
-        .reduce(_.unionAll(_))
+      // DataSource log a benign "All paths were ignored" warning (the
+      // hidden-file filter sees the root segment); the relation itself
+      // loads every row — SnapshotStoreSpec and the q318 oracle pin
+      // that. The underscore is deliberate: it keeps DV files invisible
+      // to any directory-level DATA listing (the same convention as
+      // _bloom and Delta's _delta_log).
+      val dv = readDv(spark, dvDirs)
         .select(col("k").as("_dvk"), col("pos").as("_dvpos"))
       base.join(dv, base("_k") === col("_dvk") &&
         base("_pos") === col("_dvpos"), "left_anti")
@@ -983,7 +1070,7 @@ object SnapshotStore {
     // path's anti-join is idempotent and immune; a census is not).
     val suppressed = refs.toSeq.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (dir, kvs) =>
-        spark.read.parquet(dir).where(col("k").isin(kvs.map(_._1): _*)) }
+        readDv(spark, Seq(dir)).where(col("k").isin(kvs.map(_._1): _*)) }
       .reduce(_.unionAll(_))
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -1580,7 +1667,7 @@ object SnapshotStore {
         else {
           val keyScan = allFiles.groupBy(p => splitAtSnapDir(p)._1)
             .toSeq.sortBy(_._1).map { case (dir, grp) =>
-              spark.read.option("basePath", dir).parquet(grp: _*)
+              readSnapDir(spark, dir, grp, lines)
                 .select(keyCols.map(k =>
                   col(physOf(colmap, k)).as(k)) :+
                   col("_metadata.file_path").as("_fp"): _*) }
@@ -1738,6 +1825,10 @@ object SnapshotStore {
   case class DvStats(version: Int, filesTotal: Int, filesWithDv: Int,
                      filesRewritten: Int, rowsDeleted: Long)
 
+  /** Every DV parquet's schema: canonical file key, in-file row position. */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "k STRING, pos BIGINT")
+
   /** DV parquet files above this row count stop funneling through one
     * task (overridable for specs via `graft.dv.singleFileCap`).
     */
@@ -1759,7 +1850,7 @@ object SnapshotStore {
       if (rows <= dvSingleFileCap) dv.coalesce(1)
       else dv.repartition(
         math.min(200L, rows / dvSingleFileCap + 1).toInt, col("k"))
-    shaped.write.mode("overwrite").parquet(dvDir)
+    stagingWriter(shaped).parquet(dvDir)
   }
 
   /** Point DELETE (`column IN values`) via deletion vectors: ZERO data
@@ -1812,8 +1903,7 @@ object SnapshotStore {
             val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
             val carried =
               if (oldDirs.isEmpty) None
-              else Some(oldDirs.map(dir => spark.read.parquet(dir))
-                .reduce(_.unionAll(_))
+              else Some(readDv(spark, oldDirs)
                 .where(col("k").isin(touched.toSeq: _*)))
             val full = carried.fold(newDv)(newDv.unionAll).distinct()
               .localCheckpoint()
@@ -1956,8 +2046,7 @@ object SnapshotStore {
             val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
             val carried =
               if (oldDirs.isEmpty) None
-              else Some(oldDirs.map(dir => spark.read.parquet(dir))
-                .reduce(_.unionAll(_))
+              else Some(readDv(spark, oldDirs)
                 .where(col("k").isin(touched.toSeq: _*)))
             val full = carried.fold(newDv)(newDv.unionAll).distinct()
               .localCheckpoint()
@@ -2158,8 +2247,7 @@ object SnapshotStore {
           val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
           val carried =
             if (oldDirs.isEmpty) None
-            else Some(oldDirs.map(dir => spark.read.parquet(dir))
-              .reduce(_.unionAll(_))
+            else Some(readDv(spark, oldDirs)
               .where(col("k").isin(touched.toSeq: _*)))
           val full = carried.fold(newDv)(newDv.unionAll).distinct()
             .localCheckpoint()
@@ -2521,8 +2609,7 @@ object SnapshotStore {
         def dvOf(refs: Map[String, String]): Option[DataFrame] = {
           val dirs = tKeys.flatMap(refs.get).distinct.sorted
           if (dirs.isEmpty) None
-          else Some(dirs.map(dir => spark.read.parquet(dir))
-            .reduce(_.unionAll(_)).where(col("k").isin(tKeys: _*)))
+          else Some(readDv(spark, dirs).where(col("k").isin(tKeys: _*)))
         }
         val dvW = dvOf(refsW).get // touched ⇒ ref present in w
         val delta = dvOf(refsV).fold(dvW)(old =>
@@ -3980,7 +4067,8 @@ object SnapshotStore {
       // census stage), keeping the whole probe metadata-only
       val conf = s.sparkContext.hadoopConfiguration
       val scanned = touched.map(p =>
-        footerStatsOf(conf, p, Set.empty).rows).sum
+        footerStatsOf(org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new Path(p), conf), Set.empty).rows).sum
       (label, stats.size.toLong, touched.size.toLong, scanned,
         countOf(s, t, ver),
         cs.map(_.filesCarried.toLong).getOrElse(0L),

@@ -87,6 +87,20 @@ object bridge {
       isStreaming = true)
   }
 
+  /** MEASURED in-memory bytes of `df`'s cache: the column buffers' own
+    * size accumulator, summed as the buffers were built. None unless
+    * `df` is cached and every partition of its buffers is loaded — a
+    * plan's size ESTIMATE is never returned (an explode's estimate does
+    * not grow with its fan-out).
+    */
+  def cachedBytes(df: org.apache.spark.sql.DataFrame): Option[Long] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filter(_.isCachedColumnBuffersLoaded)
+      .map(_.sizeInBytesStats.value.longValue)
+  }
+
   /** Register a SQL function on an ALREADY-RUNNING session (the
     * extensions path requires configuring the session builder up front;
     * this covers notebooks/tests attaching to an existing one).

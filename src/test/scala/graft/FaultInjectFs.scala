@@ -9,8 +9,8 @@ import org.apache.hadoop.util.Progressable
   * that, while armed, fails the CREATE of any `*.manifest` path with a
   * plain IOException — a stand-in for disk-full/permission/transient
   * faults at the snapshot store's exclusive-create commit point. Data
-  * staging (parquet part files, _SUCCESS, DV side files) passes
-  * through untouched, so the fault lands exactly where the store's
+  * staging (parquet part files, DV side files) passes through
+  * untouched, so the fault lands exactly where the store's
   * race-vs-failure classification must decide. Registered per test via
   * `conf.set("fs.faultfs.impl", classOf[FaultInjectFs].getName)`.
   */

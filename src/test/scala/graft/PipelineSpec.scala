@@ -144,4 +144,67 @@ class PipelineSpec extends SparkSpec {
     assert(updated.getAs[String]("user_name") === "ann2")
     assert(updated.getAs[Double]("completion_ratio") === 0.9)
   }
+
+  /** `key` set to `value` for `body` only, restored after. */
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** 40 fixture courses with distinct ids, over six categories. */
+  private val catalogPage: Seq[String] =
+    (0 until 10).flatMap { i =>
+      CourseFixture.records.zipWithIndex.map { case (r, k) =>
+        r.replaceFirst("""\{"id": 10\d""", s"""{"id": ${1000 + 10 * i + k}""")
+          .replace(""""title": "Development", "url": "/dev/"""",
+            s""""title": "Development ${i % 3}", "url": "/dev/${i % 3}/"""")
+          .replace(""""title": "IT Operations", "url": "/it/"""",
+            s""""title": "IT Operations ${i % 3}", "url": "/it/${i % 3}/"""")
+      }
+    }
+
+  test("Pagination.toDF sizes its frame by the bodies' bytes") {
+    import graft.sources.Pagination
+    // a small page set is one partition, not one per core
+    val small = Pagination.toDF(spark, CourseFixture.records, CourseFixture.schema)
+    assert(small.rdd.getNumPartitions === 1)
+    assert(small.count() === 4)
+    // a lowered target: ceil(bytes / target) partitions, rows intact
+    val bytes = catalogPage.map(_.getBytes("UTF-8").length.toLong).sum
+    val target = bytes / 6
+    val want = ((bytes + target - 1) / target).toInt
+    assert(want > spark.sparkContext.defaultParallelism && want < catalogPage.size)
+    withConf("spark.sql.files.maxPartitionBytes", target.toString) {
+      val df = Pagination.toDF(spark, catalogPage, CourseFixture.schema)
+      assert(df.rdd.getNumPartitions === want)
+      assert(df.select($"id").as[Long].collect().sorted.toSeq ===
+        (0 until 10).flatMap(i => (0 until 4).map(k => 1000L + 10 * i + k)))
+    }
+  }
+
+  test("fan-out sized by the measured parse cache: one partition, and " +
+       "the 13 relations and dimension ids equal the unsized fan-out's") {
+    def fanout(): (Map[String, Seq[String]], Map[String, Int]) = {
+      val raw = spark.createDataset(catalogPage).toDF("body")
+      assert(raw.rdd.getNumPartitions > 1)
+      val m = CatalogPipeline.fanoutManaged(spark, raw)
+      try (m.relations.view.mapValues(
+            _.collect().map(_.toString).toSeq.sorted).toMap,
+          Seq("courses", "topics", "images").map(n =>
+            n -> m.relations(n).rdd.getNumPartitions).toMap)
+      finally m.release()
+    }
+    val (sized, sizedParts) = fanout()
+    // a 1-byte target asks for more partitions than the cache has, and
+    // coalesce never adds any: the relations keep the input's split
+    val (unsized, unsizedParts) =
+      withConf("spark.sql.files.maxPartitionBytes", "1")(fanout())
+    assert(sizedParts.values.toSet === Set(1), s"sized: $sizedParts")
+    assert(unsizedParts.values.forall(_ > 1), s"unsized: $unsizedParts")
+    assert(sized.keySet.size === 13 && sized.keySet === unsized.keySet)
+    sized.keys.foreach(n => assert(sized(n) === unsized(n), s"relation $n"))
+    assert(sized("categories").size === 6 && sized("courses").size === 40)
+  }
 }

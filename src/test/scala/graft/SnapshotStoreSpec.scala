@@ -1631,4 +1631,140 @@ class SnapshotStoreSpec extends SparkSpec {
       === SnapshotStore.read(spark, t4).select("id", "s")
         .as[(Long, String)].collect().toSet)
   }
+
+  test("manifest-schema read ≡ inferred-schema read (widened, colmap, " +
+       "NULL partition dir, DV, zero files); read launches no job; no " +
+       "_SUCCESS; the listing walk ≡ listFiles") {
+    val sc = spark.sparkContext
+    val f = new Path(freshTable("mschema")).getFileSystem(sc.hadoopConfiguration)
+    // 1. widened: carried narrow files must read the new column as NULL
+    val tw = freshTable("mschema-widen")
+    SnapshotStore.publish(spark.range(0, 40)
+      .select(col("id"), concat(lit("s"), col("id")).as("s")).repartition(4), tw)
+    SnapshotStore.mergeUpsert(spark, tw,
+      Seq((3L, "u3", 30), (100L, "n100", 1000)).toDF("id", "s", "extra"), Seq("id"))
+    val extra = SnapshotStore.read(spark, tw).select("id", "extra")
+      .as[(Long, Option[Int])].collect().toMap
+    assert(extra(3L) === Some(30) && extra(100L) === Some(1000))
+    assert(extra(10L).isEmpty, "a carried file must read the widened column as NULL")
+    // 2. colmap: rename + drop, then a re-add that must not resurrect
+    //    the dropped column's old bytes
+    val tc = freshTable("mschema-colmap")
+    SnapshotStore.publish(Seq((1L, "a1", 10), (2L, "a2", 20)).toDF("id", "a", "b"), tc)
+    SnapshotStore.renameColumn(spark, tc, "a", "a2")
+    SnapshotStore.dropColumn(spark, tc, "b")
+    SnapshotStore.mergeUpsert(spark, tc,
+      Seq((3L, "x3", 33)).toDF("id", "a2", "b"), Seq("id"))
+    assert(SnapshotStore.read(spark, tc).select("id", "a2", "b")
+      .as[(Long, String, Option[Int])].collect().toSet ===
+      Set((1L, "a1", None), (2L, "a2", None), (3L, "x3", Some(33))))
+    // 3. hive partitions with a NULL partition dir; the merge stages a
+    //    dir holding ONLY the NULL partition
+    val tp = freshTable("mschema-part")
+    SnapshotStore.publish(spark.range(0, 60).select(col("id"),
+      when(col("id") % 3 === 2, lit(null)).otherwise(col("id") % 3)
+        .cast("int").as("p"),
+      concat(lit("x"), col("id")).as("s")), tp, partitionBy = Seq("p"))
+    SnapshotStore.mergeUpsert(spark, tp,
+      Seq((2L, Option.empty[Int], "u2")).toDF("id", "p", "s"), Seq("id"))
+    // 4. a deletion vector
+    val td = freshTable("mschema-dv")
+    SnapshotStore.publish(spark.range(0, 50).toDF("id")
+      .withColumn("s", concat(lit("d"), col("id"))).repartition(3), td)
+    SnapshotStore.dvDelete(spark, td, "id", Seq(4L, 17L, 33L))
+    assert(SnapshotStore.read(spark, td).count() === 47)
+    // 5. zero-file versions: an empty publish, and a delete of every row
+    val tz = freshTable("mschema-empty")
+    SnapshotStore.publish(Seq((1L, "a")).toDF("id", "s").where(lit(false)), tz)
+    SnapshotStore.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), tz)
+    SnapshotStore.deleteBetween(spark, tz, "id", 0L, 10L)
+    assert(SnapshotStore.statsOf(spark, tz, 1).isEmpty &&
+      SnapshotStore.statsOf(spark, tz, 3).isEmpty, "zero-file versions expected")
+
+    val tables = Seq(tw, tc, tp, td, tz)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).toSeq.sorted
+    for (t <- tables; v <- SnapshotStore.versions(spark, t)) {
+      val got = SnapshotStore.read(spark, t, Some(v))
+      val twin = SnapshotStore.readInferred(spark, t, Some(v))
+      assert(got.schema === twin.schema, s"$t v$v: schema")
+      assert(rows(got) === rows(twin), s"$t v$v: rows")
+    }
+
+    // read builds its frame without a Spark job (no schema inference);
+    // the inferred twin is the probe's positive control. Jobs are keyed
+    // by a thread-local property; a sentinel job flushes the bus.
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val probe = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("snapspec.probe")))
+          // a job's result stage is named after its call site
+          .foreach(tag => seen.add(tag -> e.stageInfos.maxBy(_.stageId).name))
+    }
+    def jobsOf(tag: String)(body: => Unit): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      seen.clear()
+      sc.setLocalProperty("snapspec.probe", tag)
+      try body finally sc.setLocalProperty("snapspec.probe", "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("snapspec.probe", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._1 == "sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(2)
+      assert(seen.asScala.exists(_._1 == "sentinel"), "sentinel job never arrived")
+      seen.asScala.toSeq.collect { case (`tag`, site) => site }
+    }
+    sc.addSparkListener(probe)
+    try {
+      assert(jobsOf("read") { tables.foreach(t => SnapshotStore.read(spark, t)) }
+        === Nil, "read must not launch a job before the caller's action")
+      val inferred = jobsOf("inferred") { SnapshotStore.readInferred(spark, tw) }
+      assert(inferred.nonEmpty && inferred.forall(_.startsWith("parquet at")),
+        s"the twin infers, one job per snap dir: $inferred")
+      // a staged write can also be named `parquet at` (a shuffle-free
+      // publish's is); any other `parquet at` job is a read's inference
+      val writeSites = jobsOf("publish") {
+        SnapshotStore.publish(spark.range(5).toDF("id"), freshTable("mschema-site"))
+      }.toSet
+      val merged = jobsOf("merge") {
+        SnapshotStore.mergeUpsert(spark, tp,
+          Seq((5L, Option(2), "u5")).toDF("id", "p", "s"), Seq("id"))
+      }
+      assert(merged.nonEmpty &&
+        !merged.exists(s => s.startsWith("parquet at") && !writeSites(s)),
+        s"mergeUpsert's key scan must read with the manifest schema: $merged")
+    } finally sc.removeSparkListener(probe)
+
+    // staged dirs carry no _SUCCESS marker
+    tables.foreach { t =>
+      assert(!SnapshotStore.walkFiles(f, new Path(t))
+        .exists(_.getPath.getName == "_SUCCESS"), s"_SUCCESS staged under $t")
+    }
+
+    // the listStatus walk lists exactly what listFiles lists, on a
+    // partitioned layout with _bloom and _dv side files
+    val tl = freshTable("mschema-listing")
+    SnapshotStore.publish(spark.range(0, 60).select(col("id"),
+      when(col("id") % 3 === 2, lit(null)).otherwise(col("id") % 3)
+        .cast("int").as("p")), tl, bloomCols = Seq("id"), partitionBy = Seq("p"))
+    SnapshotStore.dvDelete(spark, tl, "id", Seq(5L, 7L))
+    def listFiles(dir: Path): Seq[Path] = {
+      val it = f.listFiles(dir, true)
+      val buf = Seq.newBuilder[Path]
+      while (it.hasNext) buf += it.next().getPath
+      buf.result().sortBy(_.toString)
+    }
+    val all = listFiles(new Path(tl)).map(_.toString)
+    assert(all.exists(_.contains("/_bloom/")) && all.exists(_.contains("/_dv-")),
+      s"layout lacks side files: $all")
+    assert(SnapshotStore.walkFiles(f, new Path(tl)).map(_.getPath.toString) === all)
+    f.listStatus(new Path(tl)).map(_.getPath).filter(_.getName.startsWith("snap-v"))
+      .foreach { dir =>
+        val old = listFiles(dir).filter(p => p.getName.startsWith("part-") &&
+          p.getName.endsWith(".parquet") && !p.getParent.getName.startsWith("_"))
+        assert(SnapshotStore.listParquet(f, dir).map(_.getPath) === old, s"$dir")
+      }
+    assert(SnapshotStore.listParquet(f, new Path(tl, "snap-v00001")).size >= 3)
+  }
 }
