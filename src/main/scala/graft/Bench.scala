@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *    (default 3) and reported as the MIN, so round-over-round deltas
   *    outrank JIT/GC noise. Passes are PASS-MAJOR (pass 1 runs every
   *    query, then pass 2, ...) so that shared intermediates released at
-  *    pass boundaries — the dup-cluster label memo below — are priced
+  *    pass boundaries — the `graft.Session` memos — are priced
   *    exactly once per pass by whichever query computes them first,
   *    mirroring how a production session would share them;
   *  - r15 measurement fix: the separate UNTIMED warm-up sweep is now
@@ -25,14 +25,15 @@ import org.apache.spark.sql.SparkSession
   *    warm-up; with min-of-3 the reported number still comes from the
   *    warm passes 2..3, so the statistic is unchanged;
   *  - a query that throws is reported as -1 with its message in the
-  *    `errors` object and a stderr warning — a failure can never shrink
+  *    `errors` object (query name → message) and a stderr warning, and
+  *    counted in the numeric `n_errors` — a failure can never shrink
   *    the total (it is excluded from the sum, never counted as ~0 s);
   *  - `spark.catalog.clearCache()` runs after every query run so
   *    `.cache()`d subplans (q45 shingles, catalog fan-out) are
   *    re-materialized each run instead of pinning across the session
-  *    and flattering later passes. `Graph.clearLabelCache()` runs at
-  *    PASS boundaries (not per query): the label frame is a shared
-  *    cross-query intermediate by design — q71/q90/q198/q199 price the
+  *    and flattering later passes. `Session.clear()` runs at PASS
+  *    boundaries (not per query): the session memos hold shared
+  *    cross-query intermediates by design — q71/q90/q198/q199 price the
   *    CC fixpoint once per pass, never zero times;
   *  - a fixed CPU-bound CALIBRATION probe (1e9 iterations of the
   *    splitmix64 finalizer, nominally ~1 s, min of 3) is emitted with
@@ -111,19 +112,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(passes >= 1,
       s"SPARK_GRAFT_BENCH_PASSES must be >= 1 (got $passes) — " +
       "a zero-pass run would crash on empty.min")
     val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Probes FIRST (r15): a budget kill late in the run can no longer
     // take the calibration numbers down with it.
     val probeSec = calibrationProbe()
@@ -145,13 +139,6 @@ object Bench {
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     val times = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     names.foreach { case (n, _) => times(n) = Nil }
-    def clearSharedMemos(): Unit = {
-      ops.Graph.clearLabelCache(); ops.Similarity.clearKmeansCache()
-      ops.Similarity.clearNnGraphCache()
-      ops.Corpus.clearLrCache()
-      sources.SnapshotStore.clearCdcCache()
-      ops.IndexMaintain.clearIndexFixtureCache()
-    }
     def errJson = errors.map { case (k, v) =>
       "\"" + JsonUtil.escape(k) + "\":\"" + JsonUtil.escape(v) + "\"" }
       .mkString("{", ",", "}")
@@ -170,7 +157,7 @@ object Bench {
         .mkString("{", ",", "}")
       val partialJson = if (partial) s""","partial":true,"passes_done":$passesDone""" else ""
       java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_FULL.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$errJson,"passes":$passes,"calibration":$calib,"sf":"$sfDir"$partialJson}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$errJson,"n_errors":${errors.size},"passes":$passes,"calibration":$calib,"sf":"$sfDir"$partialJson}""")
     }
     if (warmup) {
       names.foreach { case (n, fn) =>
@@ -179,7 +166,7 @@ object Bench {
         }
         spark.catalog.clearCache()
       }
-      clearSharedMemos()
+      Session.clear()
     }
     // timed passes, PASS-MAJOR (see protocol note above). A failed query
     // is decided after its first failure — remaining passes would burn
@@ -199,7 +186,7 @@ object Bench {
           writeFull(partial = true, passesDone = p - 1)
         }
       }
-      clearSharedMemos()
+      Session.clear()
     }
     val results = names.map { case (name, _) =>
       name -> (if (errors.contains(name) || times(name).isEmpty) -1.0
@@ -223,9 +210,11 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     def line(qJson: String, eJson: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qJson,"errors":$eJson,"passes":$passes,"calibration":$calib,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qJson,"errors":$eJson,"n_errors":${errors.size},"passes":$passes,"calibration":$calib,"sf":"$sfDir"}"""
+    // `errors` keeps one shape (query name → message); when the messages
+    // do not fit it is emptied, and `n_errors` still counts them
     val candidates = Seq(line(qs, errJson), line("{}", errJson),
-      line("{}", s"""{"n_errors":"${errors.size}"}"""))
+      line("{}", "{}"))
     println(candidates.find(_.length <= 1950).getOrElse(candidates.last))
     spark.stop()
   }

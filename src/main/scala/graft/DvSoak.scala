@@ -175,14 +175,7 @@ object DvSoak {
     val sfDirs = args(0).split(",").toSeq
     val workDir = args(1)
     val passes = sys.env.getOrElse("SPARK_GRAFT_SOAK_PASSES", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val secs = sfDirs.map { sfDir =>
       val key = sfDir.replaceAll("[^A-Za-z0-9.]", "_")

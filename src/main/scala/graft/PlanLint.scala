@@ -163,13 +163,13 @@ object PlanLint {
         // machinery's offsets cumulation (Windows.prefixSum step 2).
         // Its input is the per-(group, bucket) TOTALS aggregate — at
         // most |groups| × nBuckets (default 1024) rows AT ANY SCALE by
-        // construction — recognizable by the `__pfx_bt` totals column
-        // in the window child's output. Every other empty-partition
-        // window still flags (r15: the q164/q174/q175/q271/q277/q132/
-        // q291 global windows were converted to this machinery, so the
-        // rule now ENFORCES that no unbounded global window returns).
-        case w: WindowExec if w.partitionSpec.isEmpty &&
-            !w.child.output.exists(_.name == "__pfx_bt") =>
+        // construction. It is matched on plan structure (see
+        // [[prefixOffsets]]), so a column merely NAMED `__pfx_bt` buys
+        // no exemption. Every other empty-partition window still flags
+        // (r15: the q164/q174/q175/q271/q277/q132/q291 global windows
+        // were converted to this machinery, so the rule ENFORCES that no
+        // unbounded global window returns).
+        case w: WindowExec if w.partitionSpec.isEmpty && !prefixOffsets(w) =>
           out += Finding("global-window", w.nodeName,
             "empty PARTITION BY — the whole input sorts through one task")
         case w: WindowExec if w.partitionSpec.forall(e =>
@@ -922,6 +922,41 @@ object PlanLint {
     case h: SortAggregateExec => h.aggregateExpressions.exists(
       _.mode == org.apache.spark.sql.catalyst.expressions.aggregate.Final)
     case _ => false
+  }
+
+  /** True for Windows.prefixSum's offsets window: its child's
+    * `__pfx_bt` attribute is, by ExprId, an aggregate RESULT of the
+    * final aggregate under it — reached through sorts, exchanges,
+    * projects that pass the attribute through, and AQE/codegen wrappers.
+    */
+  private def prefixOffsets(w: WindowExec): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute,
+      AttributeSet, ExprId}
+    import org.apache.spark.sql.execution.ProjectExec
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    def producedBy(p: SparkPlan, id: ExprId): Boolean = p match {
+      case agg: BaseAggregateExec if isFinalAgg(agg) =>
+        val results = AttributeSet(agg.aggregateAttributes)
+        agg.resultExpressions.exists {
+          case a: Alias => a.exprId == id && a.references.nonEmpty &&
+            a.references.subsetOf(results)
+          case _ => false
+        }
+      case pr: ProjectExec =>
+        pr.projectList.exists {
+          case a: Attribute => a.exprId == id
+          case _ => false
+        } && producedBy(pr.child, id)
+      case a: AdaptiveSparkPlanExec => producedBy(a.initialPlan, id)
+      case q: QueryStageExec => producedBy(q.plan, id)
+      case _ if (p.nodeName == "Sort" || p.nodeName == "Exchange" ||
+                 p.nodeName == "InputAdapter" || p.nodeName == "AQEShuffleRead" ||
+                 p.nodeName.startsWith("WholeStageCodegen")) &&
+          p.children.size == 1 => producedBy(p.children.head, id)
+      case _ => false
+    }
+    w.child.output.find(_.name == "__pfx_bt").exists(a => producedBy(w.child, a.exprId))
   }
 
   /** True when `p`'s input chain (through sorts/exchanges/projects/

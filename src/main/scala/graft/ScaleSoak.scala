@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *    to the vectors' autocorrelation (≈ random for these embeddings).
   *
   * Measurement mirrors Bench: noop sink, untimed warm-up, min of
-  * `passes` timed pass-major sweeps, label-memo cleared at pass
+  * `passes` timed pass-major sweeps, session memos cleared at pass
   * boundaries. Output: one JSON line per run plus SOAK.json with
   * per-query base/soak seconds and the scaling exponent
   * log(t_soak/t_base)/log(factor) — 1.0 = linear, ≤~1.1 passes the
@@ -137,14 +137,7 @@ object ScaleSoak {
     val wanted: Set[String] =
       if (args.length > 3) args(3).split(",").toSet else defaultQueries.toSet
     val passes = sys.env.getOrElse("SPARK_GRAFT_SOAK_PASSES", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     val okMarker = java.nio.file.Paths.get(soakDir, "_SOAK_OK")
     if (!java.nio.file.Files.exists(okMarker)) {
@@ -164,11 +157,7 @@ object ScaleSoak {
           System.err.println(s"[soak] $n FAILED at $dir: ${e.getMessage}") }
         spark.catalog.clearCache()
       }
-      ops.Graph.clearLabelCache(); ops.Similarity.clearKmeansCache()
-    ops.Similarity.clearNnGraphCache()
-      ops.Corpus.clearLrCache()
-    sources.SnapshotStore.clearCdcCache()
-    ops.IndexMaintain.clearIndexFixtureCache()
+      Session.clear()
       (1 to passes).foreach { _ =>
         names.foreach { case (n, fn) =>
           val t0 = System.nanoTime()
@@ -178,11 +167,7 @@ object ScaleSoak {
           } catch { case _: Throwable => () }
           spark.catalog.clearCache()
         }
-        ops.Graph.clearLabelCache(); ops.Similarity.clearKmeansCache()
-    ops.Similarity.clearNnGraphCache()
-      ops.Corpus.clearLrCache()
-    sources.SnapshotStore.clearCdcCache()
-    ops.IndexMaintain.clearIndexFixtureCache()
+        Session.clear()
       }
       times.view.mapValues(_.min).toMap
     }

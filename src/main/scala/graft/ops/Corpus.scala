@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Session
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1380,35 +1381,23 @@ object Corpus {
     w
   }
 
-  /** Session-scoped memo of the trained LR weight frame (the
-    * Similarity.kmeansFor discipline): q209 and q244 train the IDENTICAL
-    * fixed-seed model, so one session prices the 4-epoch loop once.
-    * Bench/ScaleSoak clear it at pass boundaries via [[clearLrCache]];
-    * ActionAudit bounds stay worst-case-fresh-session.
+  /** The trained LR weight frame, memoized per session in
+    * [[graft.Session]]: q209 and q244 train the IDENTICAL fixed-seed
+    * model, so one session prices the 4-epoch loop once.
     */
-  private val lrMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
-  /** Session-scoped memo of the SCORED corpus under the memoized
-    * weights — the lrMemo discipline one step further (r15, guide §5):
-    * eight census queries (q209/q244/q250/q257/q264/q281/q282/q293)
-    * score the IDENTICAL corpus under the IDENTICAL weight frame, and
-    * each re-ran the tokenize→hash→aggregate feature pass to do it.
-    * One session prices that pass once; the memoized frame is a slim
-    * (doc_id, y, s) localCheckpoint, cleared with [[clearLrCache]] at
-    * bench/soak pass boundaries like every session memo.
-    */
-  private val lrScoresMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
-  def clearLrCache(): Unit = { lrMemo.clear(); lrScoresMemo.clear() }
-
   private def lrWeightsFor(s: SparkSession, d: String): DataFrame =
-    lrMemo.getOrElseUpdate((System.identityHashCode(s), d),
+    Session.memo(s, ("lrWeights", d))(
       trainQualityLr(s, documents(s, d), LrEpochs))
 
+  /** The SCORED corpus under the memoized weights, memoized the same
+    * way: eight census queries (q209/q244/q250/q257/q264/q281/q282/q293)
+    * score the IDENTICAL corpus under the IDENTICAL weight frame, and
+    * each re-ran the tokenize→hash→aggregate feature pass to do it. One
+    * session prices that pass once; the memoized frame is a slim
+    * (doc_id, y, s) localCheckpoint.
+    */
   private def lrScoresFor(s: SparkSession, d: String): DataFrame =
-    lrScoresMemo.getOrElseUpdate((System.identityHashCode(s), d),
+    Session.memo(s, ("lrScores", d))(
       lrScores(lrFeatures(documents(s, d)), lrWeightsFor(s, d))
         .localCheckpoint())
 

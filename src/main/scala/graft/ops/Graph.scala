@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Session
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -145,30 +146,18 @@ object Graph {
   // output = every doc labeled with its cluster keeper and cluster size —
   // `doc_id != cluster_id` IS the "drop this duplicate" predicate, and
   // `cluster_size` the dedup audit count.
-  /** Session-scoped memo of the CC label frames: q71, q90, q198 (and the
-    * q199 funnel's labels) all consume the same iterative clustering, so
-    * the fixpoint loop is priced ONCE per (session, dir) instead of once
-    * per query. The cached frame is an EAGER localCheckpoint — a few
+  /** (doc_id, cluster_id) for EVERY doc (singletons label themselves) —
+    * the label frame q71 reports and q90's funnel consumes. q71, q90,
+    * q198 (and the q199 funnel's labels) all consume the same iterative
+    * clustering, so the frame is memoized per (session, dir) in
+    * [[graft.Session]] and the fixpoint loop is priced ONCE per session,
+    * not once per query. The frame is an EAGER localCheckpoint — a few
     * fixed-width (long, long) rows per doc, persisted outside the SQL
     * cache manager, so `spark.catalog.clearCache()` between queries does
-    * not evict it; Bench clears it explicitly at PASS boundaries (see
-    * [[clearLabelCache]]) so within a pass exactly one query pays the
-    * loop and min-of-passes stays honest.
-    */
-  private val labelCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
-  /** Drop all memoized label frames (block release is left to the
-    * ContextCleaner once the frames are unreferenced).
-    */
-  def clearLabelCache(): Unit = labelCache.clear()
-
-  /** (doc_id, cluster_id) for EVERY doc (singletons label themselves) —
-    * the label frame q71 reports and q90's funnel consumes. Memoized per
-    * (session, dir); see [[labelCache]].
+    * not evict it; `Session.clear()` does.
     */
   def dupClusterLabels(s: SparkSession, d: String): DataFrame =
-    labelCache.getOrElseUpdate((System.identityHashCode(s), d),
+    Session.memo(s, ("ccLabels", d))(
       dupClusterLabelsUncached(s, d).localCheckpoint(true))
 
   private def dupClusterLabelsUncached(s: SparkSession, d: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Session
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -232,14 +233,6 @@ object IndexMaintain {
 
   private def m10(c: Column): Column = pmod(c, lit(10))
 
-  /** (vecTable, idxTable, metaTable) after the live run — per-session
-    * memo (the cdcFixtureFor discipline; Bench/ScaleSoak clear it at
-    * pass boundaries so every pass prices the full live loop). */
-  private val fixtureMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), (String, String, String)]
-
-  def clearIndexFixtureCache(): Unit = fixtureMemo.clear()
-
   private def freshDirs(s: SparkSession, names: Seq[String], d: String)
       : Seq[String] = names.map { n =>
     val p = SnapshotStore.fixturePath(n, d)
@@ -251,11 +244,13 @@ object IndexMaintain {
   /** q343 fixture: vec table v1 = classes ≠ 3; commit 2 deletes class
     * 7, commit 3 inserts class 3 — the q342 chain split across two
     * commits and driven by the LIVE subscriber (AvailableNow, one
-    * version per trigger), publishing index versions 2 and 3.
+    * version per trigger), publishing index versions 2 and 3. Returns
+    * (vecTable, idxTable, metaTable) after the live run; memoized per
+    * (session, dir) in [[graft.Session]], like the q344 fixture.
     */
   private def q343Fixture(s: SparkSession, d: String)
       : (String, String, String) =
-    fixtureMemo.getOrElseUpdate((System.identityHashCode(s), d, "q343"), {
+    Session.memo(s, ("indexFixture", d, "q343")) {
       val Seq(vec, idx, meta, ckpt) = freshDirs(s,
         Seq("annidxsrc", "annidx", "annidxmeta", "annidxckpt"), d)
       val emb = embFrame(s, d)
@@ -273,7 +268,7 @@ object IndexMaintain {
         Seq("vec_id"), "op", 3)
       IndexMaintainer.start(s, cfg, ckpt).awaitTermination()
       (vec, idx, meta)
-    })
+    }
 
   // ─── q343: the index AS A TABLE — durable, versioned, subscribed ────
   // Census: recall of the PUBLISHED final index version vs the
@@ -381,7 +376,7 @@ object IndexMaintain {
     */
   private def q344Fixture(s: SparkSession, d: String)
       : (String, String, String) =
-    fixtureMemo.getOrElseUpdate((System.identityHashCode(s), d, "q344"), {
+    Session.memo(s, ("indexFixture", d, "q344")) {
       val Seq(vec, idx, meta, ckpt) = freshDirs(s,
         Seq("annpolsrc", "annpol", "annpolmeta", "annpolckpt"), d)
       val emb = embFrame(s, d)
@@ -400,7 +395,7 @@ object IndexMaintain {
         Seq("vec_id"), "op", 3)
       IndexMaintainer.start(s, cfg, ckpt).awaitTermination()
       (vec, idx, meta)
-    })
+    }
 
   // ─── q344: the health policy FIRING INSIDE the live subscription ────
   // One row per published index version, assembled from the PUBLISHED

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Session
 import graft.Tables._
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
@@ -1281,23 +1282,13 @@ object Similarity {
     embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
 
-  /** Session-scoped codebook memo (the Graph.dupClusterLabels
-    * discipline): q206 and q207 train the IDENTICAL M=1 model, so one
-    * session prices that training once; the memoized frame is a
-    * localCheckpoint, alive until [[clearKmeansCache]] (Bench/ScaleSoak
-    * call it at pass boundaries so min-of-passes stays honest).
-    * ActionAudit bounds stay worst-case-fresh-session, as with the CC
-    * loop — memo reuse only ever lowers the measured count.
+  /** Trained codebooks, memoized per session in [[graft.Session]]:
+    * q206 and q207 train the IDENTICAL M=1 model, so one session prices
+    * that training once. The memoized frame is a localCheckpoint.
     */
-  private val kmeansMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, Int, Int, Int, Int), DataFrame]
-
-  def clearKmeansCache(): Unit = kmeansMemo.clear()
-
   private def kmeansFor(s: SparkSession, d: String, mCount: Int, w: Int,
                         k: Int, iters: Int): DataFrame =
-    kmeansMemo.getOrElseUpdate(
-      (System.identityHashCode(s), d, mCount, w, k, iters),
+    Session.memo(s, ("kmeans", d, mCount, w, k, iters))(
       kmeansCodebooks(embFrame(s, d), mCount, w, k, iters))
 
   /** DuckDB twin of [[kmeansCodebooks]]: unrolled MATERIALIZED CTEs, one
@@ -1872,8 +1863,7 @@ object Similarity {
     */
   private[graft] def docClusterAssign(s: SparkSession,
                                       d: String): DataFrame =
-    kmeansMemo.getOrElseUpdate(
-      (System.identityHashCode(s), s"docclusters:$d", 1, 16, 5, 2),
+    Session.memo(s, ("kmeans", s"docclusters:$d", 1, 16, 5, 2))(
       docClusterAssignUncached(s, d).localCheckpoint())
 
   /** 16-dim hashed-tf document features (vec_id, e) — the q212/q213/
@@ -1905,8 +1895,7 @@ object Similarity {
   /** Trained document-cluster codebook (k=5, 2 rounds over the 16-dim
     * tf features), memoized per session like the embedding codebooks. */
   private def docClusterCents(s: SparkSession, d: String): DataFrame =
-    kmeansMemo.getOrElseUpdate(
-      (System.identityHashCode(s), s"doccents:$d", 1, 16, 5, 2),
+    Session.memo(s, ("kmeans", s"doccents:$d", 1, 16, 5, 2))(
       kmeansCodebooks(docTfFeatures(s, d), 1, 16, 5, 2))
 
   private def docClusterAssignUncached(s: SparkSession,
@@ -2774,44 +2763,27 @@ object Similarity {
                                         keys: DataFrame): DataFrame =
     nnDescentGraph(s, d, None, Some(keys))
 
-  /** Session-scoped memo of the trained k-NN graph (the kmeansFor
-    * discipline): q317's census and q322's beam serving walk the
-    * IDENTICAL graph, so one session prices the NN-descent rounds once;
-    * Bench/ScaleSoak clear it at pass boundaries. */
-  private val nnGraphMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), DataFrame]
-
-  /** Session memo for MEMBER-restricted trainings, keyed by the
-    * predicate's CANONICAL SQL form (`member.expr.sql`) — derived, not
-    * caller-supplied, so two callers with the same predicate share one
-    * training and a key can never alias two different predicates (the
-    * r13 judge's footgun: a reused label would silently have returned
-    * the wrong graph). q334's survivor retrain, q340's fired rebuild
-    * and q342's retrain control all train the IDENTICAL
-    * `vec_id % 10 <> 7` graph — one session prices it once, the same
-    * discipline as [[nnGraphFor]]/the q328 fixture memo. Cleared with
-    * the full-graph memo at Bench/ScaleSoak pass boundaries, so
-    * min-of-passes stays honest. (Two textually different but logically
-    * equivalent predicates train twice — correct, merely unshared.)
-    */
-  private val nnMemberGraphMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String), DataFrame]
-
-  def clearNnGraphCache(): Unit = {
-    nnGraphMemo.clear()
-    nnMemberGraphMemo.clear()
-  }
-
+  /** The trained k-NN graph, memoized per session in [[graft.Session]]:
+    * q317's census and q322's beam serving walk the IDENTICAL graph, so
+    * one session prices the NN-descent rounds once. */
   private[graft] def nnGraphFor(s: SparkSession, d: String): DataFrame =
-    nnGraphMemo.getOrElseUpdate((System.identityHashCode(s), d),
-      nnDescentGraph(s, d))
+    Session.memo(s, ("nn", d))(nnDescentGraph(s, d))
 
+  /** A MEMBER-restricted training, memoized per session and keyed by
+    * the predicate's rendered form — derived, not caller-supplied, so
+    * two callers with the same predicate share one training and a key
+    * can never alias two different predicates (a reused label would
+    * silently return the wrong graph). q334's survivor retrain, q340's
+    * fired rebuild and q342's retrain control all train the IDENTICAL
+    * `vec_id % 10 <> 7` graph — one session prices it once. (Two
+    * textually different but logically equivalent predicates train
+    * twice — correct, merely unshared.)
+    */
   private[graft] def nnMemberGraphFor(s: SparkSession, d: String,
                                       member: Column): DataFrame =
-    nnMemberGraphMemo.getOrElseUpdate(
-      // Column.toString renders the full node tree incl. literals
-      // (`!(=(pmod(vec_id, 10), 7))`) — the derived canonical key
-      (System.identityHashCode(s), d, member.toString),
+    // Column.toString renders the full node tree incl. literals
+    // (`!(=(pmod(vec_id, 10), 7))`) — the derived canonical key
+    Session.memo(s, ("nnMember", d, member.toString))(
       nnDescentGraph(s, d, Some(member)))
 
   def q317NnDescentKnn(s: SparkSession, d: String): DataFrame = {

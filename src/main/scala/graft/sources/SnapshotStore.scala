@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Session, Tables}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -329,7 +329,12 @@ object SnapshotStore {
     // min = max = the dir's value. Partition pruning thereby IS min/max
     // pruning: readBetween/readPoint compose it with data-column stats
     // and blooms with zero extra machinery.
-    val written = spark.read.parquet(dataDir.toString)
+    // The written frame's schema spares a schema-inference job; the
+    // partition columns stay out of it, discovered from the dir names.
+    val partCols = partitionBy.map(_.toLowerCase).toSet
+    val written = spark.read.schema(org.apache.spark.sql.types.StructType(
+        df.schema.fields.filterNot(fl => partCols(fl.name.toLowerCase))))
+      .parquet(dataDir.toString)
     val aggs = (count(lit(1)).as("n") +: statCols.flatMap(c => Seq(
       min(col(c)).cast("long").as(s"min_$c"),
       max(col(c)).cast("long").as(s"max_$c")))) ++
@@ -829,11 +834,20 @@ object SnapshotStore {
   }
 
   /** The union of deletion-vector dirs, read under the DV's fixed
-    * (k, pos) schema — no inference job per dir.
+    * (k, pos) schema — no inference job per dir. The reader gets each
+    * dir's part files, not the dir: a `_dv-<hex>` root is a hidden path
+    * to Spark's file listing, which warns "All paths were ignored" on
+    * every such read.
     */
   private def readDv(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(dir => spark.read.schema(DvSchema).parquet(dir))
-      .reduce(_.unionAll(_))
+    dirs.map { dir =>
+      val p = new Path(dir)
+      val parts = walkFiles(fs(spark, p), p).map(_.getPath).collect {
+        case f if f.getName.startsWith("part-") &&
+            f.getName.endsWith(".parquet") => f.toString
+      }
+      spark.read.schema(DvSchema).parquet(parts: _*)
+    }.reduce(_.unionAll(_))
 
   /** [[loadFiles]] with the row's canonical file key and in-file row
     * position retained as `_k`/`_pos` — the handle [[dvDelete]] needs to
@@ -2336,22 +2350,13 @@ object SnapshotStore {
   // derived relationally by the twin from the bucket layout, and
   // n_rows_v1/v2/v3 pin time travel across micro-batch versions.
   /** The q328/q329 two-wave CDC fixture, staged ONCE per (session, SF
-    * dir) — the kmeansFor/nnGraphFor memo discipline: q328 censuses the
-    * counters and q329 consumes the change feed of the SAME immutable
-    * 3-version table, so the suite prices the publish + waves once.
-    * Cleared at bench/soak pass boundaries like every session memo.
+    * dir) through [[graft.Session]]: q328 censuses the counters and q329
+    * consumes the change feed of the SAME immutable 3-version table, so
+    * the suite prices the publish + waves once.
     */
-  private val cdcFixtureMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, Int, CdcApplyStats, CdcApplyStats,
-                           CdcApplyStats)]
-  def clearCdcCache(): Unit = {
-    cdcFixtureMemo.clear()
-    clusterFixtureMemo.clear()
-  }
-
   private def cdcFixtureFor(s: SparkSession, d: String)
       : (String, Int, CdcApplyStats, CdcApplyStats, CdcApplyStats) =
-    cdcFixtureMemo.getOrElseUpdate((System.identityHashCode(s), d), {
+    Session.memo(s, ("cdcFixture", d)) {
       // the on-disk path must honor the memo key's dataset dir: a
       // session touching two SF dirs between cache clears would
       // otherwise leave the first dir's memo entry pointing at a table
@@ -2408,7 +2413,7 @@ object SnapshotStore {
                   col("b"), lit("U").as("op"))))
       val st2 = applyCdcVersion(s, table, b2, Seq("doc_id"), "op", 3)
       (table, v1Files, st1, st2, replay)
-    })
+    }
 
   def q328StreamingCdcIngest(s: SparkSession, d: String): DataFrame = {
     val (table, v1Files, st1, st2, replay) = cdcFixtureFor(s, d)
@@ -4024,12 +4029,11 @@ object SnapshotStore {
   // carried exactly the clustered ones, and produced the bbox layout
   // the binning promises. Scale: the decision is one manifest parse;
   // the rewrite reads only the appended files' rows.
-  private val clusterFixtureMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, ClusterStats, ClusterStats)]
-
+  // Staged once per (session, SF dir) through graft.Session, like the
+  // CDC fixture.
   private def clusterFixtureFor(s: SparkSession, d: String)
       : (String, ClusterStats, ClusterStats) =
-    clusterFixtureMemo.getOrElseUpdate((System.identityHashCode(s), d), {
+    Session.memo(s, ("clusterFixture", d)) {
       val t = fixturePath("layoutfix", d)
       val tableP = new Path(t)
       fs(s, tableP).delete(tableP, true)
@@ -4046,7 +4050,7 @@ object SnapshotStore {
         Seq("o_orderkey"), "op", 4)
       val st5 = autoCluster(s, t, "o_orderkey", 4)
       (t, st2, st5)
-    })
+    }
 
   def q346IncrementalCluster(s: SparkSession, d: String): DataFrame = {
     val (t, st2, st5) = clusterFixtureFor(s, d)

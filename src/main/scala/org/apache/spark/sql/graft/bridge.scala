@@ -101,6 +101,13 @@ object bridge {
       .map(_.sizeInBytesStats.value.longValue)
   }
 
+  /** The session's random UUID, unique per session (`newSession()`
+    * included) — `graft.Session`'s memo key. `sessionUUID` is
+    * private[sql] on the classic session.
+    */
+  def sessionUUID(spark: SparkSession): String =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
+
   /** Register a SQL function on an ALREADY-RUNNING session (the
     * extensions path requires configuring the session builder up front;
     * this covers notebooks/tests attaching to an existing one).

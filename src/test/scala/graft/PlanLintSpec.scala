@@ -103,6 +103,28 @@ class PlanLintSpec extends SparkSpec {
       .exists(_.rule == "exact-percentile"))
   }
 
+  test("the prefix-sum exemption is matched on plan structure, not on " +
+       "the __pfx_bt name") {
+    val li = Tables.lineitem(spark, sfDir)
+    val byKey = org.apache.spark.sql.expressions.Window.orderBy($"l_orderkey")
+    def globalWindow(df: org.apache.spark.sql.DataFrame) =
+      lint(df).exists(_.rule == "global-window")
+    // the real machinery: a GLOBAL prefix sum's offsets window sits on
+    // the final aggregate that produces __pfx_bt — exempt
+    assert(!globalWindow(graft.ops.Windows.prefixSum(li, Nil,
+      $"l_orderkey".divide(256).cast("long"), Seq($"l_orderkey", $"l_linenumber"),
+      $"l_quantity".cast("long"), "cum")))
+    // a plain column that merely carries the name — flagged
+    assert(globalWindow(li.withColumn("__pfx_bt", $"l_quantity")
+      .withColumn("x", sum($"__pfx_bt").over(byKey))))
+    // an aggregate's GROUPING key under the name, not an aggregate
+    // result — flagged
+    assert(globalWindow(li.groupBy($"l_orderkey".as("__pfx_bt"))
+      .agg(count(lit(1)).as("n"))
+      .withColumn("x", sum($"n").over(
+        org.apache.spark.sql.expressions.Window.orderBy($"__pfx_bt")))))
+  }
+
   test("clean and residual-filter plans pass") {
     val li = Tables.lineitem(spark, sfDir)
     // plain partial+final aggregation: clean

@@ -1734,6 +1734,20 @@ class SnapshotStoreSpec extends SparkSpec {
       assert(merged.nonEmpty &&
         !merged.exists(s => s.startsWith("parquet at") && !writeSites(s)),
         s"mergeUpsert's key scan must read with the manifest schema: $merged")
+      // a bloom publish reads its staged dir back for the stats+bloom
+      // scan under the written schema: no inference job, partitions
+      // still discovered from the dir names
+      val tb = freshTable("mschema-bloom")
+      val bloomed = jobsOf("bloom") {
+        SnapshotStore.publish(spark.range(0, 60).select(col("id"),
+          (col("id") % 3).cast("int").as("p")), tb,
+          bloomCols = Seq("id"), partitionBy = Seq("p"))
+      }
+      assert(bloomed.nonEmpty && !bloomed.exists(s =>
+        s.startsWith("parquet at SnapshotStore.scala") && !writeSites(s)),
+        s"a bloom publish must not infer its staged dir's schema: $bloomed")
+      assert(SnapshotStore.statsOf(spark, tb, 1).exists(_._2.contains("p")),
+        "partition columns still contribute per-file stats")
     } finally sc.removeSparkListener(probe)
 
     // staged dirs carry no _SUCCESS marker
