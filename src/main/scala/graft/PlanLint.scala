@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
   ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec,
   CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -18,8 +20,11 @@ import org.apache.spark.sql.execution.window.WindowExec
   *
   *  - `cartesian` / `nested-loop`: a join with no equi-key — quadratic
   *    work; at 100 TB this is the difference between minutes and never.
-  *    (Legitimate when one side is O(1) rows — broadcast query sets —
-  *    which is why findings are allowlisted per query, not globally.)
+  *    Exempt when the plan itself bounds a side: a nested-loop join's
+  *    build side, or either side of a cartesian product, whose logical
+  *    `maxRows` is at most [[MaxBoundedBuildRows]] (a global aggregate
+  *    is 1 row, a `Limit` and a `LocalRelation` bound themselves), so the
+  *    loop is one streamed pass over the other side.
   *  - `expand`: the multi-distinct Expand — every input row replicated
   *    once per distinct aggregate before the shuffle (the q27/q28 trap).
   *  - `unpushed-filter`: a Filter sitting DIRECTLY on a parquet scan
@@ -148,10 +153,11 @@ object PlanLint {
     def walk(p: SparkPlan): Unit = {
       p match {
         case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
-        case j: CartesianProductExec =>
+        case j: CartesianProductExec if !j.children.exists(boundedBuild) =>
           out += Finding("cartesian", j.nodeName,
             "join with no condition at all — O(n×m)")
-        case j: BroadcastNestedLoopJoinExec =>
+        case j: BroadcastNestedLoopJoinExec
+            if !boundedBuild(if (j.buildSide == BuildLeft) j.left else j.right) =>
           out += Finding("nested-loop", j.nodeName,
             s"no equi-key (${j.joinType}); every streamed row scans the " +
               "whole build side")
@@ -212,398 +218,182 @@ object PlanLint {
     out.result()
   }
 
+  /** The largest row count a join without an equi-key may read from its
+    * build side and still be exempt from `nested-loop`/`cartesian`.
+    */
+  val MaxBoundedBuildRows: Long = 1024L
+
+  /** True when the plan bounds `p`'s rows by [[MaxBoundedBuildRows]]: the
+    * logical `maxRows` of the first node below the exchange and codegen
+    * wrappers that has a `logicalLink`.
+    */
+  private def boundedBuild(p: SparkPlan): Boolean = p.logicalLink match {
+    case Some(l) => l.maxRows.exists(_ <= MaxBoundedBuildRows)
+    case None => p match {
+      case a: AdaptiveSparkPlanExec => boundedBuild(a.initialPlan)
+      case e: Exchange => boundedBuild(e.child)
+      case _ if unwrap(p) ne p => boundedBuild(unwrap(p))
+      case _ => false
+    }
+  }
+
   /** Per-query lint exceptions — INTENTIONAL plan shapes, each with the
-    * reason it is sound at scale (shared by PlanLintSpec and Verify's
-    * enforcement pass):
-    *  - nested-loop with an O(1) broadcast side: the ANN/score queries
-    *    join the corpus against a ≤5-row broadcast query set (q49-family,
-    *    q111, q131) or a 1-row global-stats frame (q44, q69, q74, q82/q99
-    *    clip bounds, q83, q91, q102, q104) — the "build side" is constant-
-    *    sized, so the loop is a single streamed pass, the broadcast's
-    *    whole point.
-    *  - cartesian: same 1-row-frame pattern where no condition exists at
-    *    all (crossJoin with global stats).
-    *  - global-window: q132's ntile stands in for repartitionByRange
-    *    (documented there); q102/q75-style global ranks are over
-    *    pre-aggregated frames orders of magnitude smaller than the fact
-    *    input.
-    *  - expand: q16/q29's set-op census uses grouping sets ON PURPOSE
-    *    (its Expand is over the deduped key set, not the fact table).
-    *  - no-partial-agg: aggregates over first/last or listagg that Spark
-    *    plans as SortAggregate final-only when the input is already
-    *    clustered (q121's 25-row nation frame; q85's count frame).
+    * reason it is sound at scale. They are applied only through
+    * [[violations]] (PlanLintSpec and Verify's enforcement pass), which
+    * also fails an allowance that matches no finding.
+    *  - nested-loop / cartesian: a join without an equi-key whose bounded
+    *    side the PLAN cannot prove. Every join whose side the plan bounds
+    *    (a global aggregate, a `Limit`, a `LocalRelation`, a `Range`: see
+    *    [[MaxBoundedBuildRows]]) is exempt by the rule itself and needs no
+    *    entry. What is left is a side bounded only by a predicate (the ANN
+    *    probe panels, `vec_id < n`), by a grouping key's domain (|days|,
+    *    |langs|, |variants|), by a generator (an hourly spine) or by a
+    *    checkpoint that hides a bounded frame.
+    *  - global-window: global ranks over pre-aggregated frames orders of
+    *    magnitude smaller than the fact input.
+    *  - expand: operators implemented BY Expand (UNPIVOT, sliding
+    *    windows, ROLLUP/CUBE/GROUPING SETS), whose replication is the
+    *    requested output.
     *  - exact-percentile: queries whose exact form IS the oracle contract
     *    and whose sketch twin exists and is pinned against it as data
-    *    (q82→q99, q77→q96, q166/q172/q173/q186/q190→the `sketch=true`
-    *    knob exercised in InsightsSpec and pinned by q197).
-    *  - low-cardinality-window: per-lang/per-segment ranked sampling over
-    *    the documents dim where the documented scale path is the A-ES
-    *    weighted sample (q102) or hash split (q72); each scaladoc names it.
+    *    (q82→q99, q77→q96, q166/q172/q173/q190→the `sketch=true` knob
+    *    exercised in InsightsSpec and pinned by q197).
+    *  - low-cardinality-window: a window over a calendar-sized grid.
     */
-  val queryAllow: Map[String, Set[String]] = Map(
-    "q44_lang_id" -> Set("nested-loop", "cartesian"),
-    // q103: the CMS sketch collapses to a 1-row frame crossJoined back
-    "q103_cms_heavy_hitters" -> Set("nested-loop", "cartesian"),
-    // q226: the 1-row exact-tercile frame crossJoined back (the scalar-
-    // broadcast idiom; approx_percentile is the documented 100 TB knob)
-    "q226_curriculum_plan" -> Set("nested-loop", "cartesian", "exact-percentile"),
-    // q319 capstone: inherits q209's broadcast weight join, q226's
-    // 1-row percentile-cut crossJoins and q216's 64-row log-ratio
-    // broadcast — every cartesian is a 1-row or ≤64-row bounded build
-    "q319_pretrain_funnel" -> Set("nested-loop", "cartesian",
-                                  "exact-percentile"),
-    // q228: the 325-row weight-grid build (range×range) + the 1-row n
-    // frame crossJoined back each epoch — all O(1)-sized sides
-    "q228_softmax_langid" -> Set("nested-loop", "cartesian"),
-    // q38: the surrogate-key window over a DIMENSION (≤4M keys, documented
-    // in ops/Merge.scala) + a 1-row max-id frame cross
-    "q38_surrogate_keys" -> Set("global-window", "nested-loop", "cartesian"),
+  private val queryAllow: Map[String, Set[String]] = Map(
+    // ANN probe panels: the exact-recall side broadcasts the probe vectors
+    // `vec_id < n` (n = 3 for q158, 5 for q49/q104/q111/q131/q207/q208/
+    // q227/q236/q302, 8 for q345, 10 for the graph serves, the 10 minus
+    // `vec_id % 10 = 7` for q334/q342/q343/q348). A predicate bounds the
+    // panel, so the plan's maxRows is undefined; q104/q111/q131 score the
+    // panel's quantized/projected codes
+    "q49_cosine_topk" -> Set("nested-loop"),
+    "q104_quantized_topk" -> Set("nested-loop"),
+    "q111_pq_topk" -> Set("nested-loop"),
+    "q131_jl_projection" -> Set("nested-loop"),
+    "q158_hybrid_rrf" -> Set("nested-loop"),
+    "q207_kmeans_ivf_recall" -> Set("nested-loop"),
+    "q208_pq_learned_recall" -> Set("nested-loop"),
+    "q227_ivf_snapshot_probe" -> Set("nested-loop"),
+    "q236_ivfpq_residual" -> Set("nested-loop"),
+    "q302_sign_ann" -> Set("nested-loop"),
+    "q317_nndescent_knn" -> Set("nested-loop"),
+    "q322_nn_beam_serve" -> Set("nested-loop"),
+    "q324_nn_incremental_insert" -> Set("nested-loop"),
+    "q334_nn_incremental_delete" -> Set("nested-loop"),
+    "q342_index_follows_table" -> Set("nested-loop"),
+    "q343_durable_index" -> Set("nested-loop"),
+    "q345_filtered_ann" -> Set("nested-loop"),
+    "q347_filtered_graph_serve" -> Set("nested-loop"),
+    "q348_index_asof_serve" -> Set("nested-loop"),
+    // q89: the planted-FK branch's `o_custkey = -1` constant-folds into a
+    // filter on the broadcast side, leaving an anti join against a
+    // per-partition `LocalLimit 1`, which bounds no global row count
+    "q89_constraint_audit" -> Set("nested-loop"),
+    // q182: dominance is inherently non-equi; the build side is the
+    // post-prune candidate set (partition-local skylines, a
+    // mapPartitions result the plan cannot bound)
+    "q182_skyline" -> Set("nested-loop"),
+    // q187: the trailing-window association is a |days|×|days| range
+    // join against broadcast daily frames, grouped by day: bounded by
+    // the calendar, not by the plan
+    "q187_rolling_hll" -> Set("nested-loop"),
+    // q194: label≠label is inherently non-equi; the anchors are the
+    // `vec_id % 50 = 0` sample, a predicate bound the plan cannot see
+    "q194_negative_sampling" -> Set("nested-loop"),
+    // q202: the spine crosses the |types| frame with the exploded
+    // |hours| sequence (a generator, unbounded in the plan), and the
+    // LOCF window runs over that GRID — |hours| rows per type at any
+    // scale, never the fact (reduced in the one hash-agg below the join;
+    // q144 principle)
+    "q202_locf_gap_fill" -> Set("nested-loop", "low-cardinality-window"),
+    // q293: the (i, j, k) PAV lattice is built from ≤10-row bin frames
+    // read back from a checkpoint, which hides their bound from the plan
+    "q293_isotonic_calibration" -> Set("cartesian"),
+    // q297: the |langs|-row prior/default frame (grouped by lang)
+    // crossJoined onto the token stream — the scoring fanout IS the
+    // classifier's semantics
+    "q297_naive_bayes" -> Set("nested-loop"),
+    // q298: the 1-row base frame is a filter over the checkpointed
+    // variant table, so the plan cannot bound it
+    "q298_markov_attribution" -> Set("nested-loop"),
+    // q313: the variant-stats frame is grouped by variant (2 models)
+    // and crosses the eval-token frame — the ablation's semantics
+    "q313_dedup_ablation" -> Set("nested-loop"),
+    // q38: the surrogate-key window over a DIMENSION (≤4M keys,
+    // documented in ops/Merge.scala)
+    "q38_surrogate_keys" -> Set("global-window"),
     // q327: vocab cut/rank windows are global over the vocab-CANDIDATE
-    // dimension (bounded by corpus char diversity, never the corpus);
-    // the 1-row totals frame crossJoins back (scalar-broadcast idiom)
-    "q327_unigram_lm" -> Set("global-window", "nested-loop", "cartesian"),
-    // q53: sliding windows DUPLICATE rows by construction (each event in
-    // size/slide windows) — that Expand is the operator's semantics
-    "q53_sliding_window" -> Set("expand"),
-    // q85: closed-form rank census crosses a 1-row total frame
-    "q85_rank_family" -> Set("nested-loop", "cartesian"),
+    // dimension (bounded by corpus char diversity, never the corpus)
+    "q327_unigram_lm" -> Set("global-window"),
     // q144: the share-of-total window is global ON PURPOSE — its input is
     // the 5-row aggregate, not the fact table (documented in the query)
     "q144_percent_of_total" -> Set("global-window"),
+    // q176/q178: the ACF and CUSUM windows run over the |days| series,
+    // never the fact
+    "q176_acf" -> Set("global-window"),
+    "q178_cusum_changepoint" -> Set("global-window"),
+    // q250: the cumulative-negatives scan runs over the micro-score
+    // HISTOGRAM (≤ distinct quantized scores, ≤1e6 for any model at
+    // 6 dp), already reduced by the hash agg below it — q144 principle
+    "q250_auc_census" -> Set("global-window"),
+    // q262: the risk-set / prefix-sum / zero-flag windows run over the
+    // ≤(horizon+1)-row duration GRID, never the fact (q144 principle)
+    "q262_kaplan_meier" -> Set("global-window"),
+    // q264: the conformal-rank window runs over the micro-score
+    // HISTOGRAM (q250's shape)
+    "q264_conformal_gate" -> Set("global-window"),
+    // q274: the rank window runs over the ≤K-row top-vocab frame
+    "q274_zipf_fit" -> Set("global-window"),
+    // q290/q305: the remainder-rank window runs over the enum-sized
+    // |langs| / |strata| frame
+    "q290_quota_apportion" -> Set("global-window"),
+    "q305_neyman_sample" -> Set("global-window"),
+    // q310: the BH rank window sorts the 35-row hypothesis frame; the
+    // midrank window runs over the value DOMAIN per type, never the fact
+    "q310_bh_screen" -> Set("global-window"),
+    // q53: sliding windows DUPLICATE rows by construction (each event in
+    // size/slide windows) — that Expand is the operator's semantics
+    "q53_sliding_window" -> Set("expand"),
     // q88: UNPIVOT is implemented BY Expand — n_cols rows per input row
     // is the requested output
     "q88_unpivot" -> Set("expand"),
-    // q89: the planted-FK branch's `o_custkey = -1` constant-folds into a
-    // filter on the broadcast side, leaving an anti join against a ≤1-row
-    // build (plan-read in round 5) + a 1-row n_checked cross
-    "q89_constraint_audit" -> Set("nested-loop", "cartesian"),
-    "q49_cosine_topk" -> Set("nested-loop"),
-    // q158: q49's broadcast 3-row query set + a 1-row corpus-size frame
-    "q158_hybrid_rrf" -> Set("nested-loop", "cartesian"),
-    "q51_label_centroids" -> Set("nested-loop", "cartesian"),
-    "q59_ann_ivf" -> Set("nested-loop", "cartesian"),
-    "q62_ann_lsh_planes8" -> Set("nested-loop"),
-    "q63_embedding_neardup_p8" -> Set("nested-loop"),
-    "q65_ann_lsh_multitable" -> Set("nested-loop"),
-    "q66_ann_ivf_nprobe2" -> Set("nested-loop", "cartesian"),
-    // q227: the ≤8-row folded-codebook frame crossJoined for assignment
-    // + the broadcast 5-row query side of the exact-recall census
-    "q227_ivf_snapshot_probe" -> Set("nested-loop", "cartesian"),
-    // q236: 1-row folded-codebook frames crossJoined for assignment and
-    // lookup-table builds (coarse + residual-PQ, the q207/q208 shapes)
-    "q236_ivfpq_residual" -> Set("nested-loop", "cartesian"),
-    "q69_repetition_quality" -> Set("nested-loop", "cartesian"),
-    "q74_tfidf" -> Set("nested-loop", "cartesian"),
-    "q83_unigram_score" -> Set("nested-loop", "cartesian"),
-    // q153: same shape as q83 — the 1-row vocab-size frame crosses back
-    "q153_bigram_score" -> Set("nested-loop", "cartesian"),
-    // q231: the 1-row corpus-token-total frame crossJoined back into the
-    // vocab freq table (q83's scalar-broadcast shape)
-    "q231_ccnet_buckets" -> Set("nested-loop", "cartesian"),
-    // q244: 1-row decile-cuts frame crossJoined back; exact percentile
-    // over the per-doc frame (approx_percentile is the 100 TB knob)
-    "q244_calibration_census" ->
-      Set("nested-loop", "cartesian", "exact-percentile"),
-    // q245: two 1-row count frames crossJoined into the census row
-    "q245_detector_eval" -> Set("nested-loop", "cartesian"),
-    // q247: the 1-row (T, U) totals frame crossJoined back
-    "q247_pmi_cooccurrence" -> Set("nested-loop", "cartesian"),
-    // q238: the 1-row checksum/counter frames crossJoined into one row
-    "q238_cdc_summary_maintain" -> Set("nested-loop", "cartesian"),
-    "q91_domain_mix" -> Set("nested-loop", "cartesian"),
-    "q102_weighted_sample" -> Set("nested-loop", "cartesian", "global-window"),
-    "q104_quantized_topk" -> Set("nested-loop", "cartesian"),
-    "q111_pq_topk" -> Set("nested-loop", "cartesian"),
-    // q206–q208: the k-means trainer crossJoins the 1-row folded
-    // codebook (the ivfAssigned idiom) and the exact-recall twin is
-    // q49's broadcast 5-query BNLJ — all bounded builds, never a
-    // data-sized cartesian. (r15: the ≤8-row seed ranking window became
-    // a single-row aggregate + posexplode, so the global-window
-    // allowance is gone from the whole trainer family.)
-    "q206_kmeans_codebook" -> Set("nested-loop", "cartesian"),
-    "q207_kmeans_ivf_recall" -> Set("nested-loop", "cartesian"),
-    // q317: inherits the trainer's 1-row folded-codebook crossJoin and
-    // ≤8-row seed window; the probe-recall exact side is q49's
-    // broadcast 10-query BNLJ; the global census is a 1-row crossJoin —
-    // all bounded builds, never a data-sized cartesian
-    "q317_nndescent_knn" -> Set("nested-loop", "cartesian"),
-    // q322: the graph trainer's bounded builds + a 4-row entry-point
-    // crossJoin and the broadcast 10-probe scoring BNLJ
-    "q322_nn_beam_serve" -> Set("nested-loop", "cartesian"),
-    // q324: the trainer's bounded builds + a 4-row entry crossJoin, the
-    // broadcast 10-probe exact side, and the 1-row maintained-graph
-    // stat crossJoin — batch-side scoring is plain equi-joins
-    "q324_nn_incremental_insert" -> Set("nested-loop", "cartesian"),
-    // q334: q324's shapes inverted — trainer's bounded builds, the
-    // broadcast survivor-probe exact side, the 1-row maintained-graph
-    // stat crossJoin; all repair joins are damage-restricted equi-joins
-    "q334_nn_incremental_delete" -> Set("nested-loop", "cartesian"),
-    // q342: q324 + q334's shapes chained (the 4-entry placement
-    // crossJoin, the broadcast survivor-probe exact side, the 1-row
-    // stat crossJoin); every feed-driven membership is a semi/anti
-    // equi-join
-    "q342_index_follows_table" -> Set("nested-loop", "cartesian"),
-    // q343: q342's census shapes over the PUBLISHED index (the same
-    // broadcast probe panel + 1-row stat/lineage crossJoins); the live
-    // subscriber's maintenance joins are all semi/anti equi-joins
-    "q343_durable_index" -> Set("nested-loop", "cartesian"),
-    // q348: q322's bounded serve shapes replayed twice over the
-    // published index versions (4-entry crossJoins + broadcast probe
-    // scoring BNLJs)
-    "q348_index_asof_serve" -> Set("nested-loop", "cartesian"),
-    // q325: q322's bounded builds + the probe × 8-centroid broadcast
-    // cell ranking and the 1-row stat crossJoins — never data-sized
-    // q331: q322's bounded builds + the 32-row layer crossJoin, the
-    // 1-row layer-entry crossJoin, and the bounded ranking windows
-    "q331_nn_hnsw_serve" -> Set("nested-loop", "cartesian",
-                                "global-window"),
-    // q336: q331's bounded builds × 3 nested layers (≤64-row crossJoins,
-    // 64-row global ranking window, 1-row entry crossJoins)
-    "q336_nn_hnsw_multilevel" -> Set("nested-loop", "cartesian",
-                                     "global-window"),
-    // q341: q336's serve shapes on the clustered synthesis (the blend's
-    // 16-row anchor broadcast adds one more bounded crossJoin)
-    "q341_nn_hnsw_clustered" -> Set("nested-loop", "cartesian",
-                                    "global-window"),
-    "q325_nn_ivf_entry_serve" -> Set("nested-loop", "cartesian"),
-    // q345: the probe × 8-centroid broadcast cell ranking, the 2-row
-    // filter-tier cross and the broadcast 8-probe scoring BNLJ — all
-    // bounded; candidates/filters are cell/key equi- and semi-joins
-    "q345_filtered_ann" -> Set("nested-loop", "cartesian"),
-    // q347: q322's bounded serve shapes (4-entry crossJoin, broadcast
-    // 10-probe scoring BNLJ) + the 2-row filter-tier cross; the filter
-    // itself is a key equi-join on the visited set
-    "q347_filtered_graph_serve" -> Set("nested-loop", "cartesian"),
-    "q208_pq_learned_recall" -> Set("nested-loop", "cartesian"),
-    // q219: q207's probe shapes reused as a miner (1-row folded
-    // codebook cross); the anchor↔candidate join itself is a cid
-    // equi-join, never a cartesian
-    "q219_hard_negatives" -> Set("nested-loop", "cartesian"),
-    // q209: the LR trainer crossJoins the 1-row corpus-count frame into
-    // the 65-row weight update — broadcast algebra, the q85/q103 idiom
-    "q209_quality_classifier" -> Set("nested-loop", "cartesian"),
-    // q211: the 1-row Σ-weights/total frame crosses the per-lang counts
-    "q211_temperature_mix" -> Set("nested-loop", "cartesian"),
-    // q216: the 1-row distribution-totals frame crosses the 64-row
-    // bucket table (scalar-broadcast idiom)
-    "q216_dsir_select" -> Set("nested-loop", "cartesian"),
-    // q218: q216's cross plus the 1-row corpus-totals frame crossing the
-    // per-source aggregate
-    "q218_source_gate" -> Set("nested-loop", "cartesian"),
-    // q217: the ≤5-row broadcast codebook crosses the piece frame (the
-    // assignPieces idiom kept as rows for the argmin AND runner-up)
-    "q217_cluster_silhouette" -> Set("nested-loop", "cartesian"),
-    // q212/q213: same trainer shapes as q206 over document tf vectors
-    // (+ q213's 1-row min-cluster-size cross)
-    "q212_doc_clusters" -> Set("nested-loop", "cartesian"),
-    "q213_cluster_balanced_sample" -> Set("nested-loop", "cartesian"),
-    "q131_jl_projection" -> Set("nested-loop"),
-    // q132/q291 (r15): the fact-sized ntile(64) layouts converted to
-    // Windows.ntileScaled — entries dropped, the rule enforces it.
-    // Insights batch (q162-q180): every flagged nested-loop is a ≤10-row
-    // derived frame (grand total, min/max pair, decile cuts, marginal
-    // count) crossJoined back — broadcast algebra, not a data-sized scan.
-    // Every flagged global window runs over an already-REDUCED frame
-    // (|customers|, distinct value domain, |days| series), never the
-    // fact; each query's scaladoc names the sketch path that removes
-    // even that (q164 -> approx_percentile cut-points, q174 -> binned
-    // ECDF). Same precedent as q144/q85.
-    // q182: dominance is inherently non-equi; the BNLJ runs over the
-    // POST-PRUNE candidate set (partition-local skylines), never the
-    // full point set — that asymmetry is the operator's whole design
-    "q182_skyline" -> Set("nested-loop"),
-    // q187: the trailing-window association is a |days|×|days| range
-    // join (~30×30 here, |calendar| at any scale) against BROADCAST
-    // daily frames — the fact is touched once, in the daily sketch agg
-    "q187_rolling_hll" -> Set("nested-loop"),
-    // q193: the 1-row (min, max) boundary frame crosses back
-    "q193_temporal_split" -> Set("nested-loop", "cartesian"),
-    // q194: label≠label is inherently non-equi; the BROADCAST side is the
-    // small anchor sample, so the pair generation is map-side and linear
-    // in the corpus — the intended plan, not an accident
-    "q194_negative_sampling" -> Set("nested-loop"),
-    // q195: the 1-row min-class-size frame crosses back
-    "q195_class_balance" -> Set("nested-loop", "cartesian"),
-    "q163_basket_affinity" -> Set("nested-loop", "cartesian"),
-    // q164 (r15): ntile(4)×3 converted to Windows.ntileScaled — the
-    // global-window allowance is gone; the rule now enforces it.
-    "q167_chisq_independence" -> Set("nested-loop", "cartesian"),
-    "q168_benford_screen" -> Set("nested-loop", "cartesian"),
-    "q169_entropy_profile" -> Set("nested-loop", "cartesian"),
-    "q171_triangle_count" -> Set("nested-loop", "cartesian"),
-    // q174/q175 (r15): cumulative ECDF / Gini rank converted to the
-    // scalable prefix sum; only the 1-row totals crossJoin remains
-    "q174_ks_test" -> Set("nested-loop", "cartesian"),
-    "q176_acf" -> Set("global-window"),
-    "q178_cusum_changepoint" -> Set("global-window", "nested-loop",
-      "cartesian"),
-    "q179_decayed_engagement" -> Set("nested-loop", "cartesian"),
-    "q16_setop_census" -> Set("expand"),
-    "q29_setop_fused" -> Set("expand"),
+    // q24–q26: ROLLUP / CUBE / GROUPING SETS are implemented BY Expand —
+    // one row per grouping set is the requested output
     "q24_rollup" -> Set("expand"),
     "q25_cube" -> Set("expand"),
     "q26_grouping_sets" -> Set("expand"),
     // exact-percentile allowances: each exact form IS the oracle contract
     // and each names its live sketch twin — q77/q137 → q96 (the
     // approx_percentile pin), q82/q90 → q99 (clipBounds sketch knob),
-    // q96/q99/q197 CONTAIN both paths (they are the pins themselves),
+    // q96/q99 CONTAIN both paths (they are the pins themselves),
     // q166/q172/q173/q190/q196 → the `sketch = true` knob on the same
     // function (InsightsSpec agreement cases; q197 pins q190's form)
     "q77_percentiles" -> Set("exact-percentile"),
     "q137_percentile_inverse" -> Set("exact-percentile"),
     "q96_approx_percentiles" -> Set("exact-percentile"),
-    "q82_length_clip" -> Set("nested-loop", "cartesian", "exact-percentile"),
-    "q90_pipeline_funnel" -> Set("nested-loop", "cartesian",
-      "exact-percentile"),
-    "q99_sketch_clip" -> Set("nested-loop", "cartesian", "exact-percentile"),
+    "q82_length_clip" -> Set("exact-percentile"),
+    "q90_pipeline_funnel" -> Set("exact-percentile"),
+    "q99_sketch_clip" -> Set("exact-percentile"),
     "q166_iqr_outliers" -> Set("exact-percentile"),
     "q172_interpurchase_gaps" -> Set("exact-percentile"),
-    "q173_psi_drift" -> Set("nested-loop", "cartesian", "exact-percentile"),
-    "q190_equidepth_hist" -> Set("nested-loop", "cartesian",
-      "exact-percentile"),
-    "q196_cohens_kappa" -> Set("nested-loop", "cartesian",
-      "exact-percentile"),
-    // q197: q190's crossJoin-the-tiny-frames shape (cuts, total, mult)
-    "q197_equidepth_sketch" -> Set("nested-loop", "cartesian"),
-    // q202: the spine generator crosses the |types| frame with the
-    // |hours| frame (both calendar/enum-sized), and the LOCF window runs
-    // over that GRID — |hours| rows per type at any scale, never the
-    // fact (reduced in the one hash-agg below the join; q144 principle)
-    "q202_locf_gap_fill" -> Set("nested-loop", "cartesian",
-      "low-cardinality-window"),
-    // q248: the 1-row (N, avgdl) corpus-stats frame crosses the
-    // query-term postings (scalar-broadcast idiom); everything else is
-    // broadcast equi-joins + the partial-stepped top_k_by
-    "q248_bm25_topk" -> Set("nested-loop", "cartesian"),
-    // q256: same 1-row BM25 stats cross as q248; its windows run over
-    // the per-(query, grade) COUNT frame (≤4 rows/query — q144 principle)
-    "q256_ranking_quality" -> Set("nested-loop", "cartesian"),
-    // q250: the cumulative-negatives scan runs over the micro-score
-    // HISTOGRAM (≤ distinct quantized scores, ≤1e6 for any model at
-    // 6 dp), already reduced by the hash agg below it — q144 principle
-    "q250_auc_census" -> Set("global-window"),
-    // q257: the 1-row decile-cut array crosses the score histogram.
-    // r15: the cuts read the memoized (checkpointed) scored frame, so
-    // the lint can no longer SEE the per-doc reduction below the
-    // checkpoint — same exact-percentile contract as q244 (the exact
-    // form is the oracle contract; approx_percentile is the 100 TB knob)
-    "q257_pr_sweep" -> Set("nested-loop", "cartesian", "exact-percentile"),
-    // q259: the 1-row mean / v / stats frames crossJoined back into the
-    // corpus pass each power-iteration round (the k-means folded-state
-    // idiom — every build side is exactly one row)
-    "q259_pca_power" -> Set("nested-loop", "cartesian"),
-    // q260: the 1-row N1+(··) bigram-type total crossJoined into the
-    // bigram-type model frame (q231's scalar-broadcast shape)
-    "q260_kneser_ney" -> Set("nested-loop", "cartesian"),
-    // q262: the risk-set / prefix-sum / zero-flag windows run over the
-    // ≤(horizon+1)-row duration GRID, never the fact (q144 principle)
-    "q262_kaplan_meier" -> Set("global-window"),
-    // q264: the conformal-rank window runs over the micro-score
-    // HISTOGRAM (q250's shape); q̂ and k ride 1-row crossJoins
-    "q264_conformal_gate" -> Set("nested-loop", "cartesian",
-                                 "global-window"),
-    // q266: each round crossJoins the 1-row folded ≤k-center selection
-    // (the centsRow idiom); nothing data-sized ever builds
-    "q266_kcenter_coreset" -> Set("nested-loop", "cartesian"),
-    // q267: the 1-row (components, weight) census frame crossJoined
-    // into the 3-row per-round summary
-    "q267_boruvka_forest" -> Set("nested-loop", "cartesian"),
-    // q268: the 1-row N frame crosses the ≤65-row feature stats
-    // (scalar-broadcast idiom)
-    "q268_feature_attribution" -> Set("nested-loop", "cartesian"),
-    // q269: the 1-row trigram total crossJoined into the path counts
-    "q269_journey_paths" -> Set("nested-loop", "cartesian"),
-    // q271 (r15): the midrank cumulation converted to the scalable
-    // prefix sum — no allowance needed; entry dropped.
-    // q270: the 1-row L1-normalization totals crossJoined back each
-    // half-step (PageRank's scalar-broadcast shape)
-    "q270_hits" -> Set("nested-loop", "cartesian"),
-    // q272: the 1-row corpus token total crossJoined into the
-    // vocab-sized per-source frame (q231 shape)
-    "q272_js_drift" -> Set("nested-loop", "cartesian"),
-    // q274: the rank window runs over the ≤K-row top-vocab frame
-    "q274_zipf_fit" -> Set("global-window"),
-    // q275: the 1-row full-mean frame crossJoined into the B-row
-    // replicate census; the exact percentile runs over B = 32 rows
-    "q275_poisson_bootstrap" -> Set("nested-loop", "cartesian",
-                                    "exact-percentile"),
-    // q277: the ECDF window runs over the cents HISTOGRAM (q271 shape);
-    // the 1-row totals frame crossJoins back
-    "q277_ks_test" -> Set("nested-loop", "cartesian"), // r15: ECDF → prefix sum
-    // q278: the 1-row pool-mean frame crossJoins the |labels|-row census
-    "q278_mmd_drift" -> Set("nested-loop", "cartesian"),
+    "q173_psi_drift" -> Set("exact-percentile"),
+    "q190_equidepth_hist" -> Set("exact-percentile"),
+    "q196_cohens_kappa" -> Set("exact-percentile"),
+    // q244/q282/q319: exact decile / p10-p90 / length cuts whose exact
+    // form is the oracle contract (approx_percentile is the 100 TB
+    // knob). q257: the cuts read the memoized (checkpointed) scored
+    // frame, so the lint cannot SEE the per-doc reduction below the
+    // checkpoint — same contract
+    "q244_calibration_census" -> Set("exact-percentile"),
+    "q282_suspect_labels" -> Set("exact-percentile"),
+    "q319_pretrain_funnel" -> Set("exact-percentile"),
+    "q257_pr_sweep" -> Set("exact-percentile"),
     // q280: percentile_disc over the per-user REDUCED latency frame
     "q280_conversion_latency" -> Set("exact-percentile"),
-    // q281: the 1-row reference-group frame crossJoins the |sources| rows
-    "q281_disparate_impact" -> Set("nested-loop", "cartesian"),
-    // q282: the 1-row p10/p90 cut frame crossJoins the scored rows
-    // (q244's shape; approx_percentile is the 100 TB knob)
-    "q282_suspect_labels" -> Set("nested-loop", "cartesian",
-                                 "exact-percentile"),
-    // q284: the 1-row reach count crossJoins the top-20 distance rows
-    "q284_bellman_ford" -> Set("nested-loop", "cartesian"),
-    // q285: the 1-row moment stats crossJoin the deci-bucket histogram
-    "q285_geometry_census" -> Set("nested-loop", "cartesian"),
-    // q286: the 1-row transition total / chain-rate frames crossJoin
-    // the |states|²-sized term frame (q231 shape)
-    "q286_entropy_rate" -> Set("nested-loop", "cartesian"),
     // q288: exact per-segment fences ARE the oracle contract;
-    // approx_percentile is the documented 100 TB knob (q226's note)
+    // approx_percentile is the documented 100 TB knob
     "q288_robust_means" -> Set("exact-percentile"),
-    // q290: the 1-row total/leftover frames crossJoin the |langs| rows;
-    // the remainder-rank window runs over that enum-sized frame
-    "q290_quota_apportion" -> Set("nested-loop", "cartesian",
-                                  "global-window"),
-    // q293: the (i, j, k) PAV lattice is built from ≤10-row bin frames
-    // (theta joins over the DECILE state, never the docs); the 1-row
-    // cut array crosses the scored rows (q244's shape)
-    "q293_isotonic_calibration" -> Set("nested-loop", "cartesian",
-                                       "exact-percentile"),
-    // q295: each peel round's 1-row edge-count frame crossJoined into
-    // its census row (scalar-broadcast idiom, 4 fixed rounds)
-    "q295_kcore" -> Set("nested-loop", "cartesian"),
-    // q297: the |langs|-row prior/default frame crossJoined onto the
-    // token stream (the scoring fanout IS the classifier's semantics);
-    // the 1-row vocab/doc-count frames cross the |langs|-row priors
-    "q297_naive_bayes" -> Set("nested-loop", "cartesian"),
-    // q296: three 1-row census frames (degree stats, edge stats,
-    // triangle count) crossJoined into the single output row
-    "q296_topology_census" -> Set("nested-loop", "cartesian"),
-    // q298: the 5-row variant frame crosses the ≤30-row transition
-    // frame; 1-row base/total frames cross the 4-row removal census
-    "q298_markov_attribution" -> Set("nested-loop", "cartesian"),
-    // q299: the 1-row calendar-span frame crosses the |types| frame to
-    // build the day spine (scalar-broadcast idiom)
-    "q299_holt_backtest" -> Set("nested-loop", "cartesian"),
-    // q302: the exact-recall twin is q49's broadcast 5-query BNLJ; the
-    // candidate path itself is four band equi-joins
-    "q302_sign_ann" -> Set("nested-loop", "cartesian"),
-    // q303: the LR trainer's 1-row n frame + the 1-row median-cuts frame
-    // crossJoined back (q209/q244 shapes); exact medians per q244's note
-    "q303_dataset_cartography" -> Set("nested-loop", "cartesian",
-                                      "exact-percentile"),
-    // q306: per-scheme 1-row candidate/found/size frames crossJoined
-    // into each census row (scalar-broadcast idiom)
-    "q306_blocking_quality" -> Set("nested-loop", "cartesian"),
-    // q305: 1-row Σweights/leftover frames cross the |strata| rows; the
-    // remainder-rank window runs over that enum-sized frame (q290 shape)
-    "q305_neyman_sample" -> Set("nested-loop", "cartesian",
-                                "global-window"),
-    // q310: the BH rank window sorts the 35-row hypothesis frame; the
-    // 1-row k* frame crosses back (q271's shapes); the midrank window
-    // runs over the value DOMAIN per type, never the fact
-    "q310_bh_screen" -> Set("nested-loop", "cartesian", "global-window"),
-    // q311: the 1-row window-total frame crossJoined into the ≤25-row
-    // census (scalar-broadcast idiom)
-    "q311_sequential_rules" -> Set("nested-loop", "cartesian"),
-    // q313: the 2-row variant-stats frame crosses the eval-token frame
-    // (the scoring fanout is the ablation's semantics — 2 models);
-    // 1-row/2-row stats frames cross the 2-row census
-    "q313_dedup_ablation" -> Set("nested-loop", "cartesian"),
-    // q314: the 1-row totals frame crosses the 64-row bucket profile
-    "q314_feature_hash_audit" -> Set("nested-loop", "cartesian"),
-    // q316: the 1-row corpus-count frame crosses the size histogram
-    "q316_cluster_size_census" -> Set("nested-loop", "cartesian"),
   )
 
   /** Per-query ACTION bounds for [[ActionAudit]]'s runtime check in
@@ -848,6 +638,19 @@ object PlanLint {
   )
   def actionBound(name: String): Int =
     actionBounds.getOrElse(name, defaultActionBound)
+
+  /** What the registered query `name`'s plan fails: every finding its
+    * [[queryAllow]] entry does not allow, and a `dead-allowance` finding
+    * for each allowed rule that matched no finding (an unused allowance
+    * would wave through the next real violation of its rule).
+    */
+  def violations(name: String, df: DataFrame): Seq[Finding] = {
+    val found = lint(df)
+    val allow = queryAllow.getOrElse(name, Set.empty)
+    found.filterNot(f => allow(f.rule)) ++
+      (allow -- found.map(_.rule)).toSeq.sorted.map(rule =>
+        Finding("dead-allowance", rule, "allowed but matched no finding"))
+  }
 
   /** Throw (with every finding listed) unless the plan is clean modulo
     * the allowlisted rules.

@@ -1122,6 +1122,15 @@ object Warehouse {
       |  (SELECT count(*) FROM supp_v WHERE s_nat IS NULL) AS n_null_keys
       |FROM (SELECT 1) one""".stripMargin
 
+  /** Where the summary table `name` of dataset dir `d` is written: under
+    * the JVM's temp dir, so JVMs with their own `java.io.tmpdir` never
+    * overwrite each other's summaries (the `SnapshotStore.fixturePath`
+    * rule).
+    */
+  private[graft] def summaryDir(d: String, name: String): String =
+    sys.props("java.io.tmpdir") + "/graft_mv/" +
+      java.lang.Integer.toHexString(d.hashCode) + "/" + name
+
   // ─── q181: materialized-summary rewrite (aggregate navigation) ────────
   // Builds the lineitem daily summary, registers it with the
   // [[graft.plans.SummaryRewrite]] optimizer rule, then runs a plain
@@ -1142,8 +1151,7 @@ object Warehouse {
     */
   private def registerLineitemSummary(s: SparkSession, d: String): Unit = {
     graft.plans.SummaryRewrite.ensureRule(s)
-    val sumDir = "/tmp/graft_mv/" +
-      java.lang.Integer.toHexString(d.hashCode) + "/lineitem_daily"
+    val sumDir = summaryDir(d, "lineitem_daily")
     lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_linestatus"), col("l_shipdate"))
       .agg(sum(col("l_quantity")).as("sum_qty"),
@@ -1236,8 +1244,7 @@ object Warehouse {
 
   def q183SummaryRefresh(s: SparkSession, d: String): DataFrame = {
     graft.plans.SummaryRewrite.ensureRule(s)
-    val sumDir = "/tmp/graft_mv/" +
-      java.lang.Integer.toHexString(d.hashCode) + "/lineitem_daily_incr"
+    val sumDir = summaryDir(d, "lineitem_daily_incr")
     val li = lineitem(s, d)
     val dims = Seq("l_returnflag", "l_linestatus", "l_shipdate")
     val merged = mergePartials(
@@ -1303,8 +1310,7 @@ object Warehouse {
   // parquet, not the fact; the DuckDB oracle recomputes from raw tables.
   def registerSupplierSummary(s: SparkSession, d: String): Unit = {
     graft.plans.SummaryRewrite.ensureRule(s)
-    val sumDir = "/tmp/graft_mv/" +
-      java.lang.Integer.toHexString(d.hashCode) + "/lineitem_by_supp"
+    val sumDir = summaryDir(d, "lineitem_by_supp")
     lineitem(s, d)
       .groupBy(col("l_suppkey"))
       .agg(sum(col("l_extendedprice")).as("sum_price"),

@@ -104,15 +104,11 @@ object Windows {
     * partition holds ~N/nBuckets rows — the parallelism knob a cluster
     * deployment ties to executor count.
     *
-    * Mechanics: a 1-row (min, max) bounds frame joins back on a
-    * CONSTANT-VALUED key (pmod(key, 1) ≡ 0 — written as an expression
-    * over the column, not a literal, because `lit(1) = lit(1)` constant-
-    * folds and the join degrades to a nested loop; this form plans as a
-    * BroadcastHashJoin with the same cost as the usual 1-row crossJoin,
-    * but lint-clean), then
+    * Mechanics: a 1-row (min, max) bounds frame is crossJoined back, then
     * bucket = floor((key − min) · nBuckets / (max − min + 1)) ∈
     * [0, nBuckets), monotone in `key` — the range-alignment contract.
-    * `key` must be non-null and |key − min| < 2^53 (the double mantissa;
+    * `key` must be non-null — a NULL key fails the query with
+    * [[PrefixKeyNull]] — and |key − min| < 2^53 (the double mantissa;
     * every id column here is far below it). The extra bounds scan is a
     * column-pruned min/max aggregate — parquet answers it from footer
     * stats.
@@ -120,19 +116,34 @@ object Windows {
   def prefixSumScaled(df: DataFrame, group: Seq[String], key: Column,
                       order: Seq[Column], value: Column, out: String,
                       nBuckets: Int = DefaultBuckets): DataFrame = {
-    val bounds = df
-      .agg(min(key.cast("long")).as("__pfx_mn"), max(key.cast("long")).as("__pfx_mx"))
-      .withColumn("__pfx_one", pmod(col("__pfx_mn"), lit(1L)))
-    val withB = df.withColumn("__pfx_one", pmod(key.cast("long"), lit(1L)))
-      .join(broadcast(bounds), "__pfx_one")
+    val bounds = df.agg(
+        min(key.cast("long")).as("__pfx_mn"), max(key.cast("long")).as("__pfx_mx"),
+        count(lit(1)).as("__pfx_n"), count(key).as("__pfx_keyed"))
+      .select(nonNullKeys(col("__pfx_mn"), col("__pfx_n"), col("__pfx_keyed"))
+        .as("__pfx_mn"), col("__pfx_mx"))
+    val withB = df.crossJoin(broadcast(bounds))
       .withColumn("__pfx_rb",
         floor((key.cast("long") - col("__pfx_mn")).cast("double") * nBuckets /
               (col("__pfx_mx") - col("__pfx_mn") + lit(1L)).cast("double"))
           .cast("long"))
-      .drop("__pfx_one", "__pfx_mn", "__pfx_mx")
+      .drop("__pfx_mn", "__pfx_mx")
     prefixSum(withB, group, col("__pfx_rb"), order, value, out)
       .drop("__pfx_rb")
   }
+
+  /** Named error of the scaled helpers' non-null key contract. */
+  private[graft] val PrefixKeyNull = "PREFIX_KEY_NULL"
+
+  /** The bucket bound `v`, or [[PrefixKeyNull]] raised when the bounds
+    * row counted fewer `keyed` rows (every key non-null) than `rows`:
+    * evaluated once, in the one-row bounds aggregate that every input row
+    * reads its bucket bounds from. Every plan branch that reads `v` thus
+    * reads the row count too, so the branches' bounds aggregates stay
+    * identical and share one exchange. */
+  private def nonNullKeys(v: Column, rows: Column, keyed: Column): Column =
+    when(rows > keyed, raise_error(concat(lit(s"$PrefixKeyNull: "),
+      (rows - keyed).cast("string"), lit(" rows have a NULL bucket key"))))
+      .otherwise(v)
 
   /** [[densePos]] with the input-scaled bucket of [[prefixSumScaled]]. */
   def densePosScaled(df: DataFrame, group: Seq[String], key: Column,
@@ -154,8 +165,8 @@ object Windows {
     * tile = pos — exactly ntile's degenerate case. The dead q=0
     * division in the other branch is never selected; non-ANSI div
     * yields null, not an error.) Output type is LONG (callers of the
-    * window form all cast). `key` must be non-null and range-aligned
-    * with `order` — the [[prefixSum]] contract.
+    * window form all cast). `key` must be range-aligned with `order` —
+    * the [[prefixSum]] contract — and non-null ([[PrefixKeyNull]]).
     */
   def ntileScaled(df: DataFrame, key: Column, order: Seq[Column], n: Int,
                   out: String, nBuckets: Int = DefaultBuckets): DataFrame =
@@ -173,18 +184,16 @@ object Windows {
                        nBuckets: Int = DefaultBuckets): DataFrame = {
     val aggs = axes.zipWithIndex.flatMap { case ((k, _, _), i) =>
       Seq(min(k.cast("long")).as(s"__nt_mn$i"),
-          max(k.cast("long")).as(s"__nt_mx$i")) } :+
-      count(lit(1)).as("__nt_nn")
-    val bounds = df.agg(aggs.head, aggs.tail: _*)
-      .withColumn("__nt_one", pmod(col("__nt_nn"), lit(1L)))
-    // constant-valued join key written over the column (the
-    // prefixSumScaled idiom): plans as a BroadcastHashJoin, lint-clean
-    var cur = df
-      .withColumn("__nt_one", pmod(axes.head._1.cast("long"), lit(1L)))
-      .join(broadcast(bounds), "__nt_one")
+          max(k.cast("long")).as(s"__nt_mx$i")) } ++
+      Seq(count(lit(1)).as("__nt_nn"), count(when(
+          axes.map(_._1.isNotNull).reduce(_ && _), lit(1))).as("__nt_keyed"))
+    val bounds = axes.indices.foldLeft(df.agg(aggs.head, aggs.tail: _*)) {
+      (b, i) => b.withColumn(s"__nt_mn$i", nonNullKeys(col(s"__nt_mn$i"),
+        col("__nt_nn"), col("__nt_keyed")))
+    }.drop("__nt_keyed")
+    var cur = df.crossJoin(broadcast(bounds))
       .withColumn("__nt_q", expr(s"__nt_nn div $n"))
       .withColumn("__nt_r", col("__nt_nn") - col("__nt_q") * n)
-      .drop("__nt_one")
     axes.zipWithIndex.foreach { case ((k, order, out), i) =>
       val withB = cur.withColumn("__nt_rb",
         floor((k.cast("long") - col(s"__nt_mn$i")).cast("double") * nBuckets /

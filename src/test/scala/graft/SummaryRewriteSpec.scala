@@ -189,8 +189,8 @@ class SummaryRewriteSpec extends SparkSpec with BeforeAndAfterEach {
       .contains("lineitem_daily_incr"),
       "q183's query was not answered from the refreshed summary")
     // and the merged summary equals a from-scratch rebuild, group for group
-    val incr = spark.read.parquet("/tmp/graft_mv/" +
-      java.lang.Integer.toHexString(sfDir.hashCode) + "/lineitem_daily_incr")
+    val incr = spark.read.parquet(
+      graft.ops.Warehouse.summaryDir(sfDir, "lineitem_daily_incr"))
     val direct = li.groupBy(col("l_returnflag"), col("l_linestatus"),
         col("l_shipdate"))
       .agg(sum(col("l_quantity")).as("sum_qty"),

@@ -123,6 +123,27 @@ class WindowsScaleSpec extends SparkSpec {
       "ntileScaledMulti diverged from the ntile windows")
   }
 
+  test("a NULL bucket key fails the scaled helpers by name") {
+    // the helpers bucket every row by its key's place in the (min, max)
+    // range, so a NULL key has no bucket; it must fail the query, not
+    // lose its row. For ntileScaledMulti the NULL sits in the SECOND axis.
+    val df = spark.range(0, 50).select(col("id"), (col("id") % 3).as("g"),
+      when(col("id") =!= 17, col("id")).as("k"))
+    def failsByName(out: org.apache.spark.sql.DataFrame): Unit = {
+      val err = intercept[Throwable](out.collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+          .exists(e => String.valueOf(e.getMessage).contains(Windows.PrefixKeyNull)),
+        s"a NULL key must fail by name, got $err")
+    }
+    failsByName(Windows.prefixSumScaled(df, Seq("g"), col("k"), Seq(col("id")),
+      col("id"), "cum", nBuckets = 8))
+    failsByName(Windows.densePosScaled(df, Seq("g"), col("k"), Seq(col("id")),
+      "pos", nBuckets = 8))
+    failsByName(Windows.ntileScaledMulti(df, Seq(
+      (col("id"), Seq(col("id")), "a"),
+      (col("k"), Seq(col("k"), col("id")), "b")), 4, nBuckets = 8))
+  }
+
   test("hexBucket is range-aligned with lexicographic hash order") {
     val hashed = Tables.documents(spark, sfDir)
       .select(md5(concat(lit("x:"), col("doc_id").cast("string"))).as("h"))
