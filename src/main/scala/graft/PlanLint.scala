@@ -652,11 +652,9 @@ object PlanLint {
         Finding("dead-allowance", rule, "allowed but matched no finding"))
   }
 
-  /** Throw (with every finding listed) unless the plan is clean modulo
-    * the allowlisted rules.
-    */
-  def assertClean(df: DataFrame, allow: Set[String] = Set.empty): Unit = {
-    val bad = lint(df).filterNot(f => allow.contains(f.rule))
+  /** Throw (with every finding listed) unless the plan is clean. */
+  def assertClean(df: DataFrame): Unit = {
+    val bad = lint(df)
     if (bad.nonEmpty)
       throw new AssertionError(
         s"plan lint failed:\n${bad.mkString("\n")}\n--- plan ---\n" +
