@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.StructType
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -102,13 +103,14 @@ object SnapshotStore {
   private def relPath(p: String, dataDirName: String): String =
     p.substring(p.indexOf(dataDirName) + dataDirName.length + 1)
 
-  // `-ac<hex>` / `-cl<hex>` are WRITER-UNIQUE staging suffixes
-  // ([[autoCompactDv]] / [[autoCluster]]): each maintenance rewrite
-  // stages into its own sibling snap dir, so a lost commit race never
-  // clobbers (at stage time) nor deletes (at cleanup time) a winner's
-  // files. A suffixed dir is a first-class snap dir: it is its own
-  // basePath (hive partition discovery stays clean), its own
-  // stats/bloom root, and vacuum/GC treat it like any other.
+  // `-w<hex>` / `-ac<hex>` / `-cl<hex>` are WRITER-UNIQUE staging
+  // suffixes ([[uniqueDir]]: the data writers, [[autoCompactDv]],
+  // [[autoCluster]]): each incremental write stages into its own sibling
+  // snap dir, so a lost commit race never clobbers (at stage time) nor
+  // deletes (at cleanup time) a winner's files. A suffixed dir is a
+  // first-class snap dir: it is its own basePath (hive partition
+  // discovery stays clean), its own stats/bloom root, and vacuum/GC
+  // treat it like any other.
   private val SnapSegRe = "snap-v\\d{5}(?:-(?:ac|cl|w)[0-9a-f]{8})?".r
 
   /** Canonical file key starting at the file's OWN snap dir —
@@ -174,24 +176,25 @@ object SnapshotStore {
         !p.getParent.getName.startsWith("_")
     }
 
-  /** Stage `df` under the version's data dir and build the manifest body
-    * (count + per-file integral-column min/max stats). ONE column-pruned
-    * scan over the freshly written files computes both: only the stat
-    * columns' chunks are read (parquet projection), so at 100 TB the
-    * stats pass touches a few percent of the written bytes — the price
-    * of making every later predicate read skip-capable. `_metadata
+  /** Stage `df` as version `v` of `table` (its shared `snap-vNNNNN` dir)
+    * and build that version's manifest: count plus per-file
+    * integral-column min/max stats, from one column-pruned scan over the
+    * freshly written files (or their footers, see [[stageFiles]]): only
+    * the stat columns' chunks are read (parquet projection), so at 100 TB
+    * the stats pass touches a few percent of the written bytes — the
+    * price of making every later predicate read skip-capable. `_metadata
     * .file_path` keys the per-file aggregation; stats are keyed by the
     * path RELATIVE to the version's data dir (see [[relPath]]),
     * sidestepping URI-form mismatches between the scan and the listing
     * while staying collision-free under hive partition dirs.
     */
-  private def stageBody(df: DataFrame, dataDir: Path,
-                        bloomCols: Seq[String] = Nil,
-                        bloomBits: Long = 1L << 20,
-                        partitionBy: Seq[String] = Nil): String = {
-    val (count0, fileLines) =
-      stageFiles(df, dataDir, bloomCols, bloomBits, partitionBy)
-    s"count=$count0\nschema=${df.schema.toDDL}\n" + fileLines.mkString("\n")
+  private def stageVersion(df: DataFrame, table: String, v: Int,
+                           bloomCols: Seq[String] = Nil,
+                           bloomBits: Long = 1L << 20,
+                           partitionBy: Seq[String] = Nil): Manifest = {
+    val (count0, fileLines) = stageFiles(df, new Path(table, f"snap-v$v%05d"),
+      bloomCols, bloomBits, partitionBy)
+    Manifest(v, count0, s"schema=${df.schema.toDDL}", fileLines)
   }
 
   /** Per-file (row count, integral min/max) recovered from the parquet
@@ -291,9 +294,9 @@ object SnapshotStore {
     df.write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
-  /** [[stageBody]]'s engine, returning (row count, manifest file lines)
-    * so a MERGE can splice freshly staged lines together with lines
-    * carried over from the previous version.
+  /** [[stageVersion]]'s engine, returning (row count, manifest file
+    * lines) so a MERGE can splice freshly staged lines together with
+    * lines carried over from the previous version.
     */
   private def stageFiles(df: DataFrame, dataDir: Path,
                          bloomCols: Seq[String] = Nil,
@@ -396,6 +399,166 @@ object SnapshotStore {
     }.sorted
   }
 
+  // ─── the write core: one manifest type, one commit, one retry loop ────
+
+  /** One version's manifest, parsed once. On disk: line 1 `version=N`,
+    * line 2 `count=M`, line 3 the schema line (`schema=DDL`, optionally
+    * `\tcolmap=…`, see [[colmapOfLine]]), then one line per data file
+    * (`path`, an optional stats field, an optional `dv:<dir>` ref). A
+    * writer derives the next version's manifest from the latest one by
+    * `copy` and hands it to [[commit]]; [[render]] is the one place the
+    * format is written.
+    */
+  private case class Manifest(version: Int, count: Long, schemaLine: String,
+                              fileLines: Seq[String]) {
+    lazy val schema: StructType = StructType.fromDDL(ddlOfLine(schemaLine))
+    lazy val colmap: Map[String, String] = colmapOfLine(schemaLine)
+    lazy val files: Seq[String] = fileLines.map(pathOf)
+    lazy val partitionCols: Seq[String] = partitionColsOf(fileLines)
+
+    /** Physical name of logical column `name`. */
+    def phys(name: String): String = physOf(colmap, name)
+
+    /** Per-file stats: file path → column → (min, max). Fields after the
+      * path hold at most one stats field (col=lo..hi,…) and at most one
+      * deletion-vector ref (dv:<dir>), in any order; a file without a
+      * stats field maps to empty.
+      */
+    lazy val stats: Seq[(String, Map[String, (Long, Long)])] =
+      fileLines.map { line =>
+        val parts = line.split('\t')
+        val st = parts.drop(1)
+          .filterNot(p => p.isEmpty || p.startsWith("dv:")).headOption match {
+          case None => Map.empty[String, (Long, Long)]
+          case Some(field) => field.split(',').map { kv =>
+            val Array(c, range) = kv.split("=", 2)
+            val Array(lo, hi) = range.split("\\.\\.", 2)
+            c -> (lo.toLong, hi.toLong)
+          }.toMap
+        }
+        parts(0) -> st
+      }
+
+    /** Deletion-vector refs: canonical file key → absolute DV parquet dir
+      * holding that file's suppressed (k, pos) rows.
+      */
+    lazy val dvRefs: Map[String, String] = fileLines.flatMap { l =>
+      val parts = l.split('\t')
+      parts.drop(1).find(_.startsWith("dv:"))
+        .map(ref => snapKey(parts(0)) -> ref.stripPrefix("dv:"))
+    }.toMap
+
+    /** Snap dirs this manifest pins: each data file's dir and each DV
+      * ref's enclosing dir — a line saying `dv:…/snap-v00002/_dv-…` keeps
+      * snap-v00002 alive after version 2's own manifest expires.
+      */
+    def referencedDirs: Seq[String] = fileLines.flatMap { l =>
+      val parts = l.split('\t')
+      snapDirNameOf(parts(0)) +: parts.drop(1).filter(_.startsWith("dv:"))
+        .map(r => snapDirNameOf(r.stripPrefix("dv:"))).toSeq
+    }
+
+    def render: String = s"version=$version\ncount=$count\n$schemaLine\n" +
+      fileLines.mkString("\n")
+  }
+
+  private object Manifest {
+    def parse(version: Int, lines: Seq[String]): Manifest =
+      Manifest(version, lines(1).stripPrefix("count=").toLong, lines(2),
+        lines.drop(3).filter(_.nonEmpty))
+  }
+
+  /** A manifest file line's data-file path. */
+  private def pathOf(fileLine: String): String = fileLine.split('\t')(0)
+
+  /** The manifest of `version` (default: the latest committed). The one
+    * place a missing version is named: an empty table fails with "no
+    * committed snapshots", an expired or never-committed version with
+    * the list of versions that survive.
+    */
+  private def manifestOf(spark: SparkSession, table: String,
+                         version: Option[Int]): Manifest = {
+    def committed: Seq[Int] = {
+      val vs = versions(spark, table)
+      require(vs.nonEmpty, s"no committed snapshots under $table")
+      vs
+    }
+    val v = version.getOrElse(committed.last)
+    val p = new Path(manifestDir(table), f"v$v%05d.manifest")
+    val lines = try {
+      val in = fs(spark, p).open(p)
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    } catch {
+      case e: java.io.FileNotFoundException =>
+        val have = committed
+        require(have.contains(v),
+          s"version $v not committed (have: ${have.mkString(",")})")
+        throw e
+    }
+    Manifest.parse(v, lines)
+  }
+
+  /** THE commit point of every writer: `m` exclusive-created as
+    * `_snapshots/vNNNNN.manifest` (overwrite=false — atomic on HDFS and
+    * POSIX). False means another writer committed that version first;
+    * any other I/O failure propagates as itself.
+    */
+  private def commit(spark: SparkSession, table: String,
+                     m: Manifest): Boolean = {
+    val dir = manifestDir(table)
+    val f = fs(spark, dir)
+    f.mkdirs(dir)
+    try {
+      commitTestHook()
+      val out = f.create(new Path(dir, f"v${m.version}%05d.manifest"), false)
+      out.write(m.render.getBytes(UTF_8))
+      out.close()
+      true
+    } catch {
+      case e: java.io.IOException if isCommitRace(e) => false
+    }
+  }
+
+  /** One attempt of an [[optimistic]] writer, against the latest
+    * manifest: [[NoOp]] commits nothing; [[Commit]] carries the next
+    * manifest, the writer-unique dirs staged for it and the result.
+    */
+  private sealed trait Step[+R]
+  private final case class NoOp[R](result: R) extends Step[R]
+  private final case class Commit[R](next: Manifest, staged: Seq[Path],
+                                     result: R) extends Step[R]
+
+  /** Optimistic concurrency for every incremental writer: run `step`
+    * against the latest manifest and commit what it returns. On a lost
+    * race the base advanced, so the staged dirs are dropped (they are
+    * writer-unique — no winner's file can live under them) and the step
+    * reruns against the new latest; the 8th lost race fails as
+    * "`what` lost 8 commit races".
+    */
+  private def optimistic[R](spark: SparkSession, table: String, what: String)(
+      step: Manifest => Step[R]): R = {
+    @annotation.tailrec
+    def attempt(lost: Int): R = step(manifestOf(spark, table, None)) match {
+      case NoOp(r) => r
+      case Commit(next, staged, r) =>
+        if (commit(spark, table, next)) r
+        else {
+          val f = fs(spark, new Path(table))
+          staged.foreach(d => f.delete(d, true))
+          require(lost + 1 < 8, s"$what lost ${lost + 1} commit races")
+          attempt(lost + 1)
+        }
+    }
+    attempt(0)
+  }
+
+  /** A writer-unique dir under `parent`: `stem` plus 8 hex digits —
+    * `snap-vNNNNN-w…`/`-ac…`/`-cl…` data dirs and `_dv-…` DV dirs.
+    */
+  private def uniqueDir(parent: Path, stem: String): Path =
+    new Path(parent, stem + java.util.UUID.randomUUID.toString.take(8))
+
   // ─── CONCURRENT-WRITER CONFLICT MATRIX ───────────────────────────────
   // Every writer commits by exclusive-create of the version manifest
   // and, on a lost race, RECOMPUTES against the new latest (optimistic
@@ -404,8 +567,8 @@ object SnapshotStore {
   //  (1) staging isolation — the loser's staged bytes can never mix
   //      with or destroy the winner's: every incremental writer stages
   //      into a writer-unique dir (`-w`/`-ac`/`-cl` suffixed snap dirs;
-  //      dvDelete's `_dv-<uuid>`), and its lost-race cleanup deletes
-  //      only that dir;
+  //      dvDelete's `_dv-<uuid>`), and its lost-race cleanup
+  //      ([[optimistic]]) deletes only that dir;
   //  (2) contract stability under re-base — the writer's semantics are
   //      defined relative to "the table now", so recomputing from the
   //      winner's result is still the operator's contract.
@@ -443,65 +606,31 @@ object SnapshotStore {
               bloomBits: Long = 1L << 20,
               partitionBy: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
-    val tableP = new Path(table)
-    val f = fs(spark, tableP)
     var v = versions(spark, table).lastOption.getOrElse(0) + 1
-    var committed = -1
-    while (committed < 0) {
-      val dataDir = new Path(tableP, f"snap-v$v%05d")
-      val body = stageBody(df, dataDir, bloomCols, bloomBits, partitionBy)
-      val manifest = new Path(manifestDir(table), f"v$v%05d.manifest")
-      f.mkdirs(manifestDir(table))
-      try {
-        // overwrite=false ⇒ exclusive create: THE atomic commit point
-        commitTestHook()
-        val out = f.create(manifest, false)
-        out.write(s"version=$v\n$body".getBytes(UTF_8))
-        out.close()
-        committed = v
-      } catch {
-        case e: java.io.IOException if isCommitRace(e) =>
-          // lost the race: re-publish as the next version. The staged
-          // dir is left in place — a same-version publish WINNER may
-          // have interleaved its own stage into this shared dir, so
-          // deleting it here could destroy committed files; orphaned
-          // loser files are gcOrphans' age-fenced job. (Replace-publish
-          // is single-writer by contract — see the conflict matrix.)
-          v = versions(spark, table).lastOption.getOrElse(v) + 1
-      }
-    }
-    committed
+    // lost the race: re-publish as the next version. The staged dir is
+    // left in place — a same-version publish WINNER may have interleaved
+    // its own stage into this shared dir, so deleting it here could
+    // destroy committed files; orphaned loser files are gcOrphans'
+    // age-fenced job. (Replace-publish is single-writer by contract —
+    // see the conflict matrix.)
+    while (!commit(spark, table,
+        stageVersion(df, table, v, bloomCols, bloomBits, partitionBy)))
+      v = versions(spark, table).lastOption.getOrElse(v) + 1
+    v
   }
 
   /** Idempotent publish at a FIXED version — the exactly-once building
     * block for streaming. Returns true iff THIS call committed; false
     * means the version already exists (a replayed micro-batch after a
     * crash between sink commit and checkpoint advance — the standard
-    * foreachBatch dup window) and nothing was written.
+    * foreachBatch dup window) and nothing was written. A lost concurrent
+    * replay race also returns false and leaves the staged dir: the
+    * winner staged the identical content into it, and foreachBatch
+    * replays are engine-serialized anyway.
     */
-  def publishVersion(df: DataFrame, table: String, version: Int): Boolean = {
-    val spark = df.sparkSession
-    val tableP = new Path(table)
-    val f = fs(spark, tableP)
-    if (versions(spark, table).contains(version)) return false
-    val dataDir = new Path(tableP, f"snap-v$version%05d")
-    val body = stageBody(df, dataDir)
-    val manifest = new Path(manifestDir(table), f"v$version%05d.manifest")
-    f.mkdirs(manifestDir(table))
-    try {
-      commitTestHook()
-      val out = f.create(manifest, false)
-      out.write(s"version=$version\n$body".getBytes(UTF_8))
-      out.close()
-      true
-    } catch {
-      // lost a concurrent replay race: the OTHER attempt committed this
-      // exact batch — report not-committed; the staged dir stays (the
-      // winner staged the identical content into it, and foreachBatch
-      // replays are engine-serialized anyway)
-      case e: java.io.IOException if isCommitRace(e) => false
-    }
-  }
+  def publishVersion(df: DataFrame, table: String, version: Int): Boolean =
+    !versions(df.sparkSession, table).contains(version) &&
+      commit(df.sparkSession, table, stageVersion(df, table, version))
 
   /** EXACTLY-ONCE streaming sink: each micro-batch publishes as version
     * batchId+1 via [[publishVersion]]. Structured Streaming's foreachBatch
@@ -521,12 +650,6 @@ object SnapshotStore {
       }
       .start()
 
-  /** Retention: drop all but the newest `keepLast` snapshots — data
-    * dirs AND manifests (Delta VACUUM + log cleanup in one). Kept
-    * versions stay time-travelable; expired reads fail loudly with the
-    * surviving version list. Safe order: manifest first (the version
-    * disappears from readers atomically), then the data dir.
-    */
   // ─── named refs (branches/tags) ───────────────────────────────────────
   // A ref decouples "committed" from "visible": versions commit freely
   // (staging, audits, experiments) while readers following a ref see
@@ -614,6 +737,12 @@ object SnapshotStore {
     (v, ok)
   }
 
+  /** Retention: drop all but the newest `keepLast` snapshots — data
+    * dirs AND manifests (Delta VACUUM + log cleanup in one). Kept
+    * versions stay time-travelable; expired reads fail loudly with the
+    * surviving version list. Safe order: manifest first (the version
+    * disappears from readers atomically), then the data dir.
+    */
   def vacuum(spark: SparkSession, table: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
     val all = versions(spark, table)
@@ -630,21 +759,12 @@ object SnapshotStore {
     // being time-travelable either way.
     val kept = (all.takeRight(keepLast) ++ all.filter(refRoots.contains))
       .distinct
-    // both data files AND deletion-vector refs pin their snap dir: a
-    // retained manifest whose file line says dv:…/snap-v00002/_dv keeps
-    // snap-v00002 alive even after version 2's own manifest expires
-    val referenced = kept.flatMap { v =>
-      manifestLines(spark, table, v).drop(3).filter(_.nonEmpty)
-        .flatMap { l =>
-          val parts = l.split('\t')
-          snapDirNameOf(parts(0)) +: parts.drop(1)
-            .filter(_.startsWith("dv:"))
-            .map(r => snapDirNameOf(r.stripPrefix("dv:"))).toSeq
-        }
-    }.toSet
+    // both data files AND deletion-vector refs pin their snap dir
+    val referenced = kept
+      .flatMap(v => manifestOf(spark, table, Some(v)).referencedDirs).toSet
     val f = fs(spark, new Path(table))
-    // a version's data can live in `snap-vNNNNN` or in a suffixed
-    // `snap-vNNNNN-ac<hex>` staging-unique dir (autoCompactDv) — expire
+    // a version's data can live in `snap-vNNNNN` or in a writer-unique
+    // `snap-vNNNNN-w<hex>`/`-ac<hex>`/`-cl<hex>` staging dir — expire
     // every dir of the version that no retained manifest references
     val onDisk = f.listStatus(new Path(table)).toSeq
       .filter(_.isDirectory).map(_.getPath.getName)
@@ -731,15 +851,7 @@ object SnapshotStore {
     // a later merge carried its files forward)
     val vs = versions(spark, table)
     val committed = vs.map(v => f"snap-v$v%05d").toSet ++
-      vs.flatMap { v =>
-        manifestLines(spark, table, v).drop(3).filter(_.nonEmpty)
-          .flatMap { l =>
-            val parts = l.split('\t')
-            snapDirNameOf(parts(0)) +: parts.drop(1)
-              .filter(_.startsWith("dv:"))
-              .map(r => snapDirNameOf(r.stripPrefix("dv:"))).toSeq
-          }
-      }
+      vs.flatMap(v => manifestOf(spark, table, Some(v)).referencedDirs)
     val cutoff = System.currentTimeMillis() - minAgeMs
     f.listStatus(tableP).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("snap-v")
@@ -759,10 +871,8 @@ object SnapshotStore {
       d.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** A committed version's schema (driver-side manifest parse). */
-  def schemaOf(spark: SparkSession, table: String, version: Int)
-      : org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      ddlOfLine(manifestLines(spark, table, version)(2)))
+  def schemaOf(spark: SparkSession, table: String, version: Int): StructType =
+    manifestOf(spark, table, Some(version)).schema
 
   /** Read a committed snapshot (default: latest). Reads exactly the
     * manifest's file list — never a directory scan of the table root.
@@ -783,14 +893,8 @@ object SnapshotStore {
 
   private def readWith(spark: SparkSession, table: String,
                        version: Option[Int], inferSchema: Boolean): DataFrame = {
-    val committed = versions(spark, table)
-    require(committed.nonEmpty, s"no committed snapshots under $table")
-    val v = version.getOrElse(committed.last)
-    require(committed.contains(v),
-      s"version $v not committed (have: ${committed.mkString(",")})")
-    val lines = manifestLines(spark, table, v)
-    val files = lines.drop(3).filter(_.nonEmpty).map(_.split('\t')(0))
-    loadFiles(spark, files, lines, inferSchema)
+    val m = manifestOf(spark, table, version)
+    loadFiles(spark, m.files, m, inferSchema)
   }
 
   /** Load a version's (possibly pruned) file list. Files are grouped by
@@ -803,11 +907,12 @@ object SnapshotStore {
     * source versions, bounded in practice by [[compact]] (which
     * rewrites everything into one dir, collapsing the references).
     */
-  private def loadFiles(spark: SparkSession, files: Seq[String],
-                        lines: List[String],
+  private def loadFiles(spark: SparkSession, files: Seq[String], m: Manifest,
                         inferSchema: Boolean = false): DataFrame =
-    if (files.isEmpty) emptyFrame(spark, lines)
-    else loadFilesWithPos(spark, files, lines, inferSchema).drop("_k", "_pos")
+    if (files.isEmpty) // empty snapshot / all files pruned
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    else loadFilesWithPos(spark, files, m, inferSchema).drop("_k", "_pos")
 
   /** Scan of one snap dir's `files` under the manifest's schema: the
     * LOGICAL fields mapped to their PHYSICAL names through the colmap,
@@ -820,14 +925,12 @@ object SnapshotStore {
     * [[readInferred]] only.
     */
   private def readSnapDir(spark: SparkSession, dir: String, files: Seq[String],
-                          lines: List[String],
+                          m: Manifest,
                           inferSchema: Boolean = false): DataFrame = {
-    val colmap = colmapOfLine(lines(2))
     val partCols = partitionColsOf(files).map(_.toLowerCase).toSet
-    val phys = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructType.fromDDL(ddlOfLine(lines(2)))
-        .fields.map(fl => fl.copy(name = physOf(colmap, fl.name)))
-        .filterNot(fl => partCols.contains(fl.name.toLowerCase)))
+    val phys = StructType(m.schema.fields
+      .map(fl => fl.copy(name = m.phys(fl.name)))
+      .filterNot(fl => partCols.contains(fl.name.toLowerCase)))
     val reader = spark.read.option("basePath", dir)
     (if (inferSchema) reader else reader.schema(phys))
       .parquet(files: _*)
@@ -859,20 +962,17 @@ object SnapshotStore {
     * no join).
     */
   private def loadFilesWithPos(spark: SparkSession, files: Seq[String],
-                               lines: List[String],
+                               m: Manifest,
                                inferSchema: Boolean = false): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType
-      .fromDDL(ddlOfLine(lines(2)))
-    val colmap = colmapOfLine(lines(2))
     // a column the file group predates (schema evolution: mergeUpsert
     // widens the manifest schema while CARRYING old files verbatim)
     // reads as NULL — the Delta/Iceberg add-column contract; files
     // never rewrite for a metadata change. Files store PHYSICAL names;
     // the colmap resolves each LOGICAL schema field to the file column
     // (identity when the table never renamed/dropped).
-    def conform(df: DataFrame) = df.select(schema.fields.toIndexedSeq
+    def conform(df: DataFrame) = df.select(m.schema.fields.toIndexedSeq
       .map { fl =>
-        val phys = physOf(colmap, fl.name)
+        val phys = m.phys(fl.name)
         (if (df.columns.contains(phys)) col(phys) else lit(null))
           .cast(fl.dataType).as(fl.name) } ++
       Seq(col("_k"), col("_pos")): _*)
@@ -885,23 +985,16 @@ object SnapshotStore {
         val keyCol = concat(lit(dirName + "/"), regexp_extract(
           col("_metadata.file_path"),
           java.util.regex.Pattern.quote(dirName) + "/(.*)", 1))
-        conform(readSnapDir(spark, dir, grp, lines, inferSchema)
+        conform(readSnapDir(spark, dir, grp, m, inferSchema)
           .withColumn("_k", keyCol)
           .withColumn("_pos", col("_metadata.row_index"))) }
       .reduce(_.unionAll(_))
-    val dvDirs = {
-      val refs = dvRefsOf(lines.drop(3).filter(_.nonEmpty))
-      files.flatMap(p => refs.get(snapKey(p))).distinct.sorted
-    }
+    val dvDirs = files.flatMap(p => m.dvRefs.get(snapKey(p))).distinct.sorted
     if (dvDirs.isEmpty) base
     else {
-      // NB: reading a dir whose own name starts with '_' makes Spark's
-      // DataSource log a benign "All paths were ignored" warning (the
-      // hidden-file filter sees the root segment); the relation itself
-      // loads every row — SnapshotStoreSpec and the q318 oracle pin
-      // that. The underscore is deliberate: it keeps DV files invisible
-      // to any directory-level DATA listing (the same convention as
-      // _bloom and Delta's _delta_log).
+      // DV dirs start with '_' so no directory-level DATA listing ever
+      // sees their files (the convention of _bloom and Delta's
+      // _delta_log); [[readDv]] hands the reader their part files
       val dv = readDv(spark, dvDirs)
         .select(col("k").as("_dvk"), col("pos").as("_dvpos"))
       base.join(dv, base("_k") === col("_dvk") &&
@@ -909,43 +1002,12 @@ object SnapshotStore {
     }
   }
 
-  private def emptyFrame(spark: SparkSession, lines: List[String]): DataFrame = {
-    // empty snapshot / all files pruned: schema comes from the manifest
-    val ddl = ddlOfLine(lines(2))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(ddl))
-  }
-
   /** Per-file stats of a committed version: file path → column →
     * (min, max). Files whose line has no stats suffix map to empty.
     */
   def statsOf(spark: SparkSession, table: String,
               version: Int): Seq[(String, Map[String, (Long, Long)])] =
-    manifestLines(spark, table, version).drop(3).filter(_.nonEmpty).map { line =>
-      val parts = line.split('\t')
-      // fields after the path: at most one stats field (col=lo..hi,…)
-      // and at most one deletion-vector ref (dv:<dir>) — order-free
-      val stats = parts.drop(1)
-        .filterNot(p => p.isEmpty || p.startsWith("dv:")).headOption match {
-        case None => Map.empty[String, (Long, Long)]
-        case Some(field) => field.split(',').map { kv =>
-          val Array(c, range) = kv.split("=", 2)
-          val Array(lo, hi) = range.split("\\.\\.", 2)
-          c -> (lo.toLong, hi.toLong)
-        }.toMap
-      }
-      parts(0) -> stats
-    }
-
-  /** Deletion-vector refs of a manifest's file lines: canonical file
-    * key → absolute DV parquet dir holding that file's suppressed
-    * (k, pos) rows. */
-  private def dvRefsOf(fileLines: Seq[String]): Map[String, String] =
-    fileLines.flatMap { l =>
-      val parts = l.split('\t')
-      parts.drop(1).find(_.startsWith("dv:"))
-        .map(ref => snapKey(parts(0)) -> ref.stripPrefix("dv:"))
-    }.toMap
+    manifestOf(spark, table, Some(version)).stats
 
   /** A stat-pruned read: `df` contains exactly the rows of the snapshot
     * with `column` BETWEEN lo AND hi, but only `filesKept` of
@@ -962,19 +1024,13 @@ object SnapshotStore {
 
   def readBetween(spark: SparkSession, table: String, version: Option[Int],
                   column: String, lo: Long, hi: Long): PrunedRead = {
-    val committed = versions(spark, table)
-    require(committed.nonEmpty, s"no committed snapshots under $table")
-    val v = version.getOrElse(committed.last)
-    require(committed.contains(v),
-      s"version $v not committed (have: ${committed.mkString(",")})")
-    val lines = manifestLines(spark, table, v)
-    val phys = physOf(colmapOfLine(lines(2)), column) // stats key physically
-    val all = statsOf(spark, table, v)
-    val kept = all.collect {
+    val m = manifestOf(spark, table, version)
+    val phys = m.phys(column) // stats key physically
+    val kept = m.stats.collect {
       case (p, st) if st.get(phys).forall { case (mn, mx) => mx >= lo && mn <= hi } => p
     }
-    val base = loadFiles(spark, kept, lines)
-    PrunedRead(base.where(col(column).between(lo, hi)), all.size, kept.size)
+    val base = loadFiles(spark, kept, m)
+    PrunedRead(base.where(col(column).between(lo, hi)), m.stats.size, kept.size)
   }
 
   /** Point-lookup read through the per-file BLOOM index (+ min/max
@@ -992,17 +1048,12 @@ object SnapshotStore {
   def readPoint(spark: SparkSession, table: String, version: Option[Int],
                 column: String, values: Seq[Long]): PrunedRead = {
     require(values.nonEmpty, "readPoint needs at least one probe value")
-    val committed = versions(spark, table)
-    require(committed.nonEmpty, s"no committed snapshots under $table")
-    val v = version.getOrElse(committed.last)
-    require(committed.contains(v),
-      s"version $v not committed (have: ${committed.mkString(",")})")
+    val m = manifestOf(spark, table, version)
     import spark.implicits._
     val hashes = values.toDF("v").select(xxhash64(col("v")))
       .as[Long].collect()
     val f = fs(spark, new Path(table))
-    val linesV = manifestLines(spark, table, v)
-    val phys = physOf(colmapOfLine(linesV(2)), column) // stats/bloom keys
+    val phys = m.phys(column) // stats/bloom keys
     // bloom side files live under the _bloom dir of the snap dir each
     // file LIVES in — for carried-over references that is the ORIGINAL
     // version's dir, where publish wrote them
@@ -1024,14 +1075,13 @@ object SnapshotStore {
         hashes.exists(bloom.mightContainLong)
       }
     }
-    val all = statsOf(spark, table, v)
-    val kept = all.collect {
+    val kept = m.stats.collect {
       case (p, st) if st.get(phys).forall { case (mn, mx) =>
             values.exists(x => x >= mn && x <= mx) } &&
           bloomKeeps(p) => p
     }
-    val base = loadFiles(spark, kept, linesV)
-    PrunedRead(base.where(col(column).isin(values: _*)), all.size, kept.size)
+    val base = loadFiles(spark, kept, m)
+    PrunedRead(base.where(col(column).isin(values: _*)), m.stats.size, kept.size)
   }
 
   /** OPTIMIZE: republish the latest snapshot's data as `numFiles` files
@@ -1062,12 +1112,11 @@ object SnapshotStore {
     * without a dv ref are omitted (amplification zero).
     */
   def dvAmplification(spark: SparkSession, table: String,
-                      version: Option[Int] = None): Seq[DvAmp] = {
-    val committed = versions(spark, table)
-    require(committed.nonEmpty, s"no committed snapshots under $table")
-    val v = version.getOrElse(committed.last)
-    val fileLines = manifestLines(spark, table, v).drop(3).filter(_.nonEmpty)
-    val refs = dvRefsOf(fileLines)
+                      version: Option[Int] = None): Seq[DvAmp] =
+    dvAmplificationOf(spark, manifestOf(spark, table, version))
+
+  private def dvAmplificationOf(spark: SparkSession, m: Manifest): Seq[DvAmp] = {
+    val refs = m.dvRefs
     if (refs.isEmpty) return Seq.empty
     val conf = spark.sparkContext.hadoopConfiguration
     def footerRows(p: String): Long = {
@@ -1088,8 +1137,7 @@ object SnapshotStore {
       .reduce(_.unionAll(_))
       .groupBy(col("k")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    fileLines.map(_.split('\t')(0))
-      .filter(p => refs.contains(snapKey(p)))
+    m.files.filter(p => refs.contains(snapKey(p)))
       .map { p =>
         val k = snapKey(p)
         DvAmp(k, p, footerRows(p), suppressed.getOrElse(k, 0L))
@@ -1113,68 +1161,32 @@ object SnapshotStore {
     * commit/retry as [[deleteBetween]].
     */
   def autoCompactDv(spark: SparkSession, table: String,
-                    thresholdBp: Long): AutoCompactStats = {
-    var attempt = 0
-    var out: Option[AutoCompactStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val amp = dvAmplification(spark, table, Some(v))
-      val over = amp.filter(a =>
+                    thresholdBp: Long): AutoCompactStats =
+    optimistic(spark, table, "autoCompactDv") { m =>
+      val over = dvAmplificationOf(spark, m).filter(a =>
         a.rows > 0 && a.suppressed * 10000L >= thresholdBp * a.rows)
-      val lines = manifestLines(spark, table, v)
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      if (over.isEmpty) {
-        out = Some(AutoCompactStats(v, fileLines.size, 0, 0L))
-      } else {
+      if (over.isEmpty)
+        NoOp(AutoCompactStats(m.version, m.fileLines.size, 0, 0L))
+      else {
         val overKeys = over.map(_.fileKey).toSet
-        val (rewriteLines, carryLines) = fileLines.partition(l =>
-          overKeys.contains(snapKey(l.split('\t')(0))))
+        val (rewriteLines, carryLines) = m.fileLines.partition(l =>
+          overKeys.contains(snapKey(pathOf(l))))
         // live rows of the offending files — DVs applied by loadFiles,
         // so the rewrite IS the materialization
-        val live = loadFiles(spark, rewriteLines.map(_.split('\t')(0)),
-          lines)
-        val newV = v + 1
-        // writer-unique staging dir (the dvDelete `_dv-<uuid>`
-        // discipline, applied to data files): a concurrent winner of
-        // version newV can never share this dir, so neither the
-        // overwrite-mode stage nor the lost-race cleanup below can
-        // touch files that are not ours
-        val dataDir = new Path(new Path(table), f"snap-v$newV%05d-ac" +
-          java.util.UUID.randomUUID.toString.take(8))
+        val live = loadFiles(spark, rewriteLines.map(pathOf), m)
+        val newV = m.version + 1
+        val dataDir = uniqueDir(new Path(table), f"snap-v$newV%05d-ac")
         val (stagedCount, stagedLines) = stageFiles(
-          toPhysical(live, colmapOfLine(lines(2))), dataDir,
-          partitionBy = partitionColsOf(fileLines))
-        val body = s"count=${countOf(spark, table, v)}\n${lines(2)}\n" +
-          (carryLines ++ stagedLines).mkString("\n")
-        val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-        val f = fs(spark, manifest)
-        f.mkdirs(manifestDir(table))
-        try {
-          commitTestHook()
-          val outS = f.create(manifest, false)
-          outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-          outS.close()
-          out = Some(AutoCompactStats(newV, fileLines.size,
+          toPhysical(live, m.colmap), dataDir, partitionBy = m.partitionCols)
+        Commit(m.copy(version = newV, fileLines = carryLines ++ stagedLines),
+          Seq(dataDir), AutoCompactStats(newV, m.fileLines.size,
             rewriteLines.size, stagedCount))
-        } catch {
-          case e: java.io.IOException if isCommitRace(e) =>
-            // lost the race: the staging dir is writer-unique, so
-            // dropping it wholesale is race-free — no winner's staged
-            // or committed file can live under it
-            f.delete(dataDir, true)
-            attempt += 1
-            require(attempt < 8, s"autoCompactDv lost $attempt commit races")
-        }
       }
     }
-    out.get
-  }
 
   /** Manifest-declared row count (metadata read, no data scan). */
   def countOf(spark: SparkSession, table: String, version: Int): Long =
-    manifestLines(spark, table, version)(1).stripPrefix("count=").toLong
+    manifestOf(spark, table, Some(version)).count
 
   // ─── incremental layout maintenance (autoCluster) ─────────────────────
   // Z-order/sort layout jobs (q132's lever) are full-table rewrites; a
@@ -1223,27 +1235,18 @@ object SnapshotStore {
                   buckets: Int): ClusterStats = {
     require(buckets >= 1 && buckets <= 1024,
       s"buckets must be in [1, 1024], got $buckets")
-    var attempt = 0
-    var out: Option[ClusterStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
+    val st = optimistic(spark, table, "autoCluster") { m =>
       val epoch = refOf(spark, table, LayoutEpochRef).getOrElse(0)
-      val lines = manifestLines(spark, table, v)
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      require(partitionColsOf(fileLines).isEmpty,
+      require(m.partitionCols.isEmpty,
         "autoCluster does not compose with hive-partitioned layouts yet")
       def dirVer(l: String): Int =
-        "snap-v(\\d{5})".r.findFirstMatchIn(snapDirNameOf(l.split('\t')(0)))
+        "snap-v(\\d{5})".r.findFirstMatchIn(snapDirNameOf(pathOf(l)))
           .get.group(1).toInt
-      val (carryLines, newLines) = fileLines.partition(l => dirVer(l) <= epoch)
-      if (newLines.isEmpty) {
-        out = Some(ClusterStats(v, epoch, fileLines.size, 0, 0, 0L))
-      } else {
-        val colmap = colmapOfLine(lines(2))
-        val live = loadFiles(spark, newLines.map(_.split('\t')(0)), lines)
-          .localCheckpoint()
+      val (carryLines, newLines) = m.fileLines.partition(l => dirVer(l) <= epoch)
+      if (newLines.isEmpty)
+        NoOp(ClusterStats(m.version, epoch, m.fileLines.size, 0, 0, 0L))
+      else {
+        val live = loadFiles(spark, newLines.map(pathOf), m).localCheckpoint()
         val keyL = col(keyCol).cast("long")
         val mm = live.agg(min(keyL), max(keyL)).head()
         require(!mm.isNullAt(0),
@@ -1253,55 +1256,31 @@ object SnapshotStore {
         val width = math.max(1L, (mx - mn + buckets.toLong) / buckets)
         val binCol = expr(
           s"(CAST($keyCol AS BIGINT) - $mn) DIV $width")
-        val newV = v + 1
+        val newV = m.version + 1
         // one staged file per non-empty bin (≤ buckets driver-side
         // values): deterministic layout, tight per-file key stats.
         // Every bin gets its OWN writer-unique `-cl` snap dir — a
         // first-class data dir (its own basePath), so reads never see
-        // foreign subdir segments and the lost-race cleanup stays
-        // race-free per dir.
+        // foreign subdir segments.
         val bins = live.select(binCol.as("b")).distinct()
-          .collect().map(_.getLong(0)).sorted
-        var rowsClustered = 0L
-        val stagedLines = Seq.newBuilder[String]
-        val binDirs = Seq.newBuilder[Path]
-        bins.foreach { b =>
-          val dirB = new Path(new Path(table), f"snap-v$newV%05d-cl" +
-            java.util.UUID.randomUUID.toString.take(8))
-          binDirs += dirB
-          val (cnt, ls) = stageFiles(
-            toPhysical(live.where(binCol === b), colmap).coalesce(1), dirB)
-          rowsClustered += cnt
-          stagedLines ++= ls
+          .collect().map(_.getLong(0)).sorted.toSeq
+        val binDirs =
+          bins.map(_ => uniqueDir(new Path(table), f"snap-v$newV%05d-cl"))
+        val staged = bins.zip(binDirs).map { case (b, dirB) =>
+          stageFiles(toPhysical(live.where(binCol === b), m.colmap).coalesce(1),
+            dirB)
         }
-        val staged = stagedLines.result()
-        val body = s"count=${countOf(spark, table, v)}\n${lines(2)}\n" +
-          (carryLines ++ staged).mkString("\n")
-        val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-        val f = fs(spark, manifest)
-        f.mkdirs(manifestDir(table))
-        try {
-          commitTestHook()
-          val outS = f.create(manifest, false)
-          outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-          outS.close()
-          // epoch advances AFTER the commit; a crash in between leaves
-          // the old epoch — the next run re-clusters newV's files
-          // (wasteful, never wrong)
-          setRef(spark, table, LayoutEpochRef, newV)
-          out = Some(ClusterStats(newV, epoch, carryLines.size,
-            newLines.size, staged.size, rowsClustered))
-        } catch {
-          case e: java.io.IOException if isCommitRace(e) =>
-            // writer-unique staging dirs: dropping them wholesale is
-            // race-free
-            binDirs.result().foreach(dirB => f.delete(dirB, true))
-            attempt += 1
-            require(attempt < 8, s"autoCluster lost $attempt commit races")
-        }
+        val stagedLines = staged.flatMap(_._2)
+        Commit(m.copy(version = newV, fileLines = carryLines ++ stagedLines),
+          binDirs, ClusterStats(newV, epoch, carryLines.size, newLines.size,
+            stagedLines.size, staged.map(_._1).sum))
       }
     }
-    out.get
+    // the epoch advances AFTER the commit; a crash in between leaves the
+    // old epoch — the next run re-clusters this version's files
+    // (wasteful, never wrong)
+    if (st.filesRewritten > 0) setRef(spark, table, LayoutEpochRef, st.version)
+    st
   }
 
   // ─── column mapping (Delta 'name' mode): rename/drop without rewrite ──
@@ -1310,9 +1289,10 @@ object SnapshotStore {
   // files always store PHYSICAL names; the DDL is LOGICAL. Absent map =
   // identity (every pre-existing table, and every fresh publish). The
   // suffix rides the schema line, so the many writers that carry
-  // `lines(2)` verbatim (dvDelete, applyCdcVersion, autoCompactDv, …)
-  // propagate the mapping for free; writers that REBUILD the schema
-  // line (mergeUpsert/mergeMoR widening) extend it explicitly. A full
+  // `Manifest.schemaLine` verbatim (dvDelete, applyCdcVersion,
+  // autoCompactDv, …) propagate the mapping for free; writers that
+  // REBUILD the schema line (mergeUpsert/mergeMoR widening) extend it
+  // explicitly. A full
   // rewrite (compact / replace-publish) re-baselines to identity —
   // every file is fresh, so no old physical name can resurrect.
   //
@@ -1429,53 +1409,20 @@ object SnapshotStore {
     */
   private def evolveSchema(spark: SparkSession, table: String, what: String,
                            touched: String)(
-      evolve: (org.apache.spark.sql.types.StructType, Map[String, String]) =>
-        (org.apache.spark.sql.types.StructType, Map[String, String]))
-      : SchemaEvoStats = {
-    var attempt = 0
-    var out: Option[SchemaEvoStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val lines = manifestLines(spark, table, v)
-      val schema = org.apache.spark.sql.types.StructType
-        .fromDDL(ddlOfLine(lines(2)))
-      val colmap = colmapOfLine(lines(2))
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      val partCols = partitionColsOf(fileLines).map(_.toLowerCase).toSet
-      require(!partCols.contains(physOf(colmap, touched).toLowerCase),
+      evolve: (StructType, Map[String, String]) =>
+        (StructType, Map[String, String]))
+      : SchemaEvoStats =
+    optimistic(spark, table, what) { m =>
+      val partCols = m.partitionCols.map(_.toLowerCase).toSet
+      require(!partCols.contains(m.phys(touched).toLowerCase),
         s"cannot $what: $touched is a hive partition column")
-      val (newSchema, newMap) = evolve(schema, colmap)
-      val newV = v + 1
-      val body = s"count=${countOf(spark, table, v)}\n" +
-        s"${schemaLineOf(newSchema.toDDL, newMap)}\n" +
-        fileLines.mkString("\n")
-      val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-      val f = fs(spark, manifest)
-      f.mkdirs(manifestDir(table))
-      try {
-        commitTestHook()
-        val outS = f.create(manifest, false)
-        outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-        outS.close()
-        out = Some(SchemaEvoStats(newV, fileLines.size))
-      } catch {
-        case e: java.io.IOException if isCommitRace(e) => // metadata-only: nothing staged
-          attempt += 1
-          require(attempt < 8, s"$what lost $attempt commit races")
-      }
+      val (newSchema, newMap) = evolve(m.schema, m.colmap)
+      val newV = m.version + 1
+      // metadata-only: nothing staged
+      Commit(m.copy(version = newV,
+          schemaLine = schemaLineOf(newSchema.toDDL, newMap)),
+        Nil, SchemaEvoStats(newV, m.fileLines.size))
     }
-    out.get
-  }
-
-  private def manifestLines(spark: SparkSession, table: String,
-                            v: Int): List[String] = {
-    val manifest = new Path(manifestDir(table), f"v$v%05d.manifest")
-    val in = fs(spark, manifest).open(manifest)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-    finally in.close()
-  }
 
   /** CHANGE DATA CAPTURE between two committed versions: full-outer join
     * on the key, classify each row insert/delete/update/unchanged. Non-key
@@ -1621,69 +1568,19 @@ object SnapshotStore {
                   keyCols: Seq[String],
                   bloomCols: Seq[String] = Nil): MergeStats = {
     require(keyCols.nonEmpty, "mergeUpsert needs at least one key column")
-    var attempt = 0
-    var out: Option[MergeStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val lines = manifestLines(spark, table, v)
-      val schema = org.apache.spark.sql.types.StructType
-        .fromDDL(ddlOfLine(lines(2)))
-      val colmap = colmapOfLine(lines(2))
-      // SCHEMA EVOLUTION: the source must cover every existing column
-      // (a missing one is almost always a typo — fail loudly, the Delta
-      // default) but may ADD new ones; the new manifest schema appends
-      // them in source order, rewritten files carry the full width, and
-      // CARRIED files stay narrow — loadFiles null-fills on read, so an
-      // add-column evolution rewrites exactly the files the merge
-      // touched anyway, zero extra bytes
-      // name matching is CASE-INSENSITIVE, matching Spark's default
-      // analyzer resolution (spark.sql.caseSensitive=false): a source
-      // column differing only in case is the SAME column (else it would
-      // widen the manifest with a case-variant twin that later reads
-      // resolve ambiguously), and a source carrying two case-variants
-      // of one name is rejected outright
-      val srcLower = source.columns.map(_.toLowerCase)
-      require(srcLower.distinct.length == srcLower.length,
-        s"source has case-only column collisions: ${source.columns
-          .groupBy(_.toLowerCase).filter(_._2.length > 1)
-          .values.map(_.mkString("/")).mkString(",")}")
-      require(schema.fieldNames.forall(n =>
-          srcLower.contains(n.toLowerCase)),
-        s"source is missing table columns ${schema.fieldNames
-          .filterNot(n => srcLower.contains(n.toLowerCase))
-          .mkString(",")}")
-      val existingLower = schema.fieldNames.map(_.toLowerCase).toSet
-      val newFields = source.schema.fields
-        .filterNot(f => existingLower.contains(f.name.toLowerCase))
-      val widened = org.apache.spark.sql.types.StructType(
-        schema.fields ++ newFields)
-      // mapping-active tables mint FRESH physical names for widened
-      // columns: a re-added dropped column (or an add reusing a
-      // renamed-away name) must never alias old files' bytes
-      val newColmap =
-        if (colmap.isEmpty) colmap
-        else colmap ++ newFields.map(f => f.name -> freshPhys(f.name))
-      val src = source.select(widened.fields.toIndexedSeq
-        .map(fl => col(fl.name).cast(fl.dataType).as(fl.name)): _*)
-      val dup = src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).count()
-      require(dup == 0,
-        "mergeUpsert source has duplicate keys — multi-match is ambiguous")
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      val allFiles = fileLines.map(_.split('\t')(0))
+    optimistic(spark, table, "mergeUpsert") { m =>
+      val (src, widened, newColmap) =
+        conformSource("mergeUpsert", m, source, keyCols)
       // touched-file discovery: key+path scan (parquet reads ONLY the
       // key columns) semi-joined with the source's keys; the distinct
       // file list is ≤ |files| rows — driver-bounded by construction
       val touchedKeys: Set[String] =
-        if (allFiles.isEmpty) Set.empty
+        if (m.files.isEmpty) Set.empty
         else {
-          val keyScan = allFiles.groupBy(p => splitAtSnapDir(p)._1)
+          val keyScan = m.files.groupBy(p => splitAtSnapDir(p)._1)
             .toSeq.sortBy(_._1).map { case (dir, grp) =>
-              readSnapDir(spark, dir, grp, lines)
-                .select(keyCols.map(k =>
-                  col(physOf(colmap, k)).as(k)) :+
+              readSnapDir(spark, dir, grp, m)
+                .select(keyCols.map(k => col(m.phys(k)).as(k)) :+
                   col("_metadata.file_path").as("_fp"): _*) }
             .reduce(_.unionAll(_))
           keyScan
@@ -1691,10 +1588,10 @@ object SnapshotStore {
             .select(col("_fp")).distinct()
             .collect().map(r => snapKey(r.getString(0))).toSet
         }
-      val (rewriteLines, carryLines) = fileLines.partition(l =>
-        touchedKeys.contains(snapKey(l.split('\t')(0))))
-      val rewriteFiles = rewriteLines.map(_.split('\t')(0))
-      val touchedDf = loadFiles(spark, rewriteFiles, lines)
+      val (rewriteLines, carryLines) = m.fileLines.partition(l =>
+        touchedKeys.contains(snapKey(pathOf(l))))
+      val rewriteFiles = rewriteLines.map(pathOf)
+      val touchedDf = loadFiles(spark, rewriteFiles, m)
       val touchedRows =
         if (rewriteFiles.isEmpty) 0L else touchedDf.count()
       val merged = touchedDf
@@ -1702,42 +1599,67 @@ object SnapshotStore {
         .unionByName(src, allowMissingColumns = true)
         .select(widened.fields.toIndexedSeq
           .map(fl => col(fl.name).cast(fl.dataType).as(fl.name)): _*)
-      val newV = v + 1
-      // writer-unique staging dir: a lost commit race can neither
-      // clobber nor delete another committer's files
-      val dataDir = new Path(new Path(table), f"snap-v$newV%05d-w" +
-        java.util.UUID.randomUUID.toString.take(8))
+      val newV = m.version + 1
+      val dataDir = uniqueDir(new Path(table), f"snap-v$newV%05d-w")
       // staged files store PHYSICAL names (no-op on identity tables);
       // partition cols from hive rel paths are already physical
       val (stagedCount, stagedLines) = stageFiles(
         toPhysical(merged, newColmap), dataDir,
-        bloomCols.map(physOf(newColmap, _)),
-        partitionBy = partitionColsOf(fileLines))
-      val total = countOf(spark, table, v) - touchedRows + stagedCount
-      val body = s"count=$total\n" +
-        s"${schemaLineOf(widened.toDDL, newColmap)}\n" +
-        (carryLines ++ stagedLines).mkString("\n")
-      val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-      val f = fs(spark, manifest)
-      f.mkdirs(manifestDir(table))
-      try {
-        commitTestHook()
-        val outS = f.create(manifest, false)
-        outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-        outS.close()
-        out = Some(MergeStats(newV, fileLines.size,
+        bloomCols.map(physOf(newColmap, _)), partitionBy = m.partitionCols)
+      Commit(Manifest(newV, m.count - touchedRows + stagedCount,
+          schemaLineOf(widened.toDDL, newColmap), carryLines ++ stagedLines),
+        Seq(dataDir), MergeStats(newV, m.fileLines.size,
           rewriteLines.size, carryLines.size))
-      } catch {
-        case e: java.io.IOException if isCommitRace(e) =>
-          // lost the race: the base ADVANCED — drop the stage and redo
-          // the whole merge against the new latest (serializable
-          // outcome, optimistic-concurrency style)
-          f.delete(dataDir, true)
-          attempt += 1
-          require(attempt < 8, s"mergeUpsert lost $attempt commit races")
-      }
     }
-    out.get
+  }
+
+  /** [[mergeUpsert]]'s and [[mergeMoR]]'s source, conformed to the table
+    * manifest `m`: returns the source cast to the widened schema, that
+    * schema, and its colmap.
+    *
+    * SCHEMA EVOLUTION: the source must cover every existing column (a
+    * missing one is almost always a typo — fail loudly, the Delta
+    * default) but may ADD new ones; the new manifest schema appends them
+    * in source order, rewritten files carry the full width, and CARRIED
+    * files stay narrow — loadFiles null-fills on read, so an add-column
+    * evolution rewrites exactly the files the merge touched anyway, zero
+    * extra bytes. Name matching is CASE-INSENSITIVE, matching Spark's
+    * default analyzer resolution (spark.sql.caseSensitive=false): a
+    * source column differing only in case is the SAME column (else it
+    * would widen the manifest with a case-variant twin that later reads
+    * resolve ambiguously), and a source carrying two case-variants of
+    * one name is rejected outright. The source must be key-unique
+    * (checked with one action; Delta errors on multi-match too).
+    */
+  private def conformSource(what: String, m: Manifest, source: DataFrame,
+                            keyCols: Seq[String])
+      : (DataFrame, StructType, Map[String, String]) = {
+    val srcLower = source.columns.map(_.toLowerCase)
+    require(srcLower.distinct.length == srcLower.length,
+      s"source has case-only column collisions: ${source.columns
+        .groupBy(_.toLowerCase).filter(_._2.length > 1)
+        .values.map(_.mkString("/")).mkString(",")}")
+    require(m.schema.fieldNames.forall(n => srcLower.contains(n.toLowerCase)),
+      s"source is missing table columns ${m.schema.fieldNames
+        .filterNot(n => srcLower.contains(n.toLowerCase))
+        .mkString(",")}")
+    val existingLower = m.schema.fieldNames.map(_.toLowerCase).toSet
+    val newFields = source.schema.fields
+      .filterNot(f => existingLower.contains(f.name.toLowerCase))
+    val widened = StructType(m.schema.fields ++ newFields)
+    // mapping-active tables mint FRESH physical names for widened
+    // columns: a re-added dropped column (or an add reusing a
+    // renamed-away name) must never alias old files' bytes
+    val newColmap =
+      if (m.colmap.isEmpty) m.colmap
+      else m.colmap ++ newFields.map(f => f.name -> freshPhys(f.name))
+    val src = source.select(widened.fields.toIndexedSeq
+      .map(fl => col(fl.name).cast(fl.dataType).as(fl.name)): _*)
+    val dup = src.groupBy(keyCols.map(col): _*)
+      .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).count()
+    require(dup == 0,
+      s"$what source has duplicate keys — multi-match is ambiguous")
+    (src, widened, newColmap)
   }
 
   /** Targeted DELETE (`DELETE WHERE column BETWEEN lo AND hi`) with
@@ -1755,59 +1677,30 @@ object SnapshotStore {
     */
   def deleteBetween(spark: SparkSession, table: String, column: String,
                     lo: Long, hi: Long,
-                    bloomCols: Seq[String] = Nil): MergeStats = {
-    var attempt = 0
-    var out: Option[MergeStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val lines = manifestLines(spark, table, v)
-      val colmap = colmapOfLine(lines(2))
-      val phys = physOf(colmap, column) // stats are keyed physically
-      val stats = statsOf(spark, table, v).toMap
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      val (rewriteLines, carryLines) = fileLines.partition { l =>
-        val p = l.split('\t')(0)
-        stats(p).get(phys).forall { case (mn, mx) => mx >= lo && mn <= hi }
+                    bloomCols: Seq[String] = Nil): MergeStats =
+    optimistic(spark, table, "deleteBetween") { m =>
+      val phys = m.phys(column) // stats are keyed physically
+      val stats = m.stats.toMap
+      val (rewriteLines, carryLines) = m.fileLines.partition { l =>
+        stats(pathOf(l)).get(phys)
+          .forall { case (mn, mx) => mx >= lo && mn <= hi }
       }
-      val rewriteFiles = rewriteLines.map(_.split('\t')(0))
-      val touchedDf = loadFiles(spark, rewriteFiles, lines)
+      val rewriteFiles = rewriteLines.map(pathOf)
+      val touchedDf = loadFiles(spark, rewriteFiles, m)
       val touchedRows =
         if (rewriteFiles.isEmpty) 0L else touchedDf.count()
       val survivors = touchedDf
         .where(!col(column).between(lo, hi) || col(column).isNull)
-      val newV = v + 1
-      // writer-unique staging dir: a lost commit race can neither
-      // clobber nor delete another committer's files
-      val dataDir = new Path(new Path(table), f"snap-v$newV%05d-w" +
-        java.util.UUID.randomUUID.toString.take(8))
+      val newV = m.version + 1
+      val dataDir = uniqueDir(new Path(table), f"snap-v$newV%05d-w")
       val (stagedCount, stagedLines) = stageFiles(
-        toPhysical(survivors, colmap), dataDir,
-        bloomCols.map(physOf(colmap, _)),
-        partitionBy = partitionColsOf(fileLines))
-      val total = countOf(spark, table, v) - touchedRows + stagedCount
-      val body = s"count=$total\nschema=${lines(2).stripPrefix("schema=")}\n" +
-        (carryLines ++ stagedLines).mkString("\n")
-      val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-      val f = fs(spark, manifest)
-      f.mkdirs(manifestDir(table))
-      try {
-        commitTestHook()
-        val outS = f.create(manifest, false)
-        outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-        outS.close()
-        out = Some(MergeStats(newV, fileLines.size,
+        toPhysical(survivors, m.colmap), dataDir, bloomCols.map(m.phys),
+        partitionBy = m.partitionCols)
+      Commit(m.copy(version = newV, count = m.count - touchedRows + stagedCount,
+          fileLines = carryLines ++ stagedLines),
+        Seq(dataDir), MergeStats(newV, m.fileLines.size,
           rewriteLines.size, carryLines.size))
-      } catch {
-        case e: java.io.IOException if isCommitRace(e) =>
-          f.delete(dataDir, true)
-          attempt += 1
-          require(attempt < 8, s"deleteBetween lost $attempt commit races")
-      }
     }
-    out.get
-  }
 
   // ─── deletion vectors: DELETE without rewriting data files ───────────
   // deleteBetween/mergeUpsert are correct but rewrite every touched
@@ -1857,15 +1750,64 @@ object SnapshotStore {
     * file they suppress — the read side's anti-join build is per-file
     * anyway, so co-clustering costs nothing and caps task memory.
     */
-  private def stageDv(dv: DataFrame, dvDir: String, rows: Long): Unit = {
+  private def stageDv(dv: DataFrame, dvDir: Path): Unit = {
     // the explicit partition count sizes each writer at ~cap rows and
     // keeps AQE from coalescing the keyed shuffle back into one task
+    val rows = dv.count()
     val shaped =
       if (rows <= dvSingleFileCap) dv.coalesce(1)
       else dv.repartition(
         math.min(200L, rows / dvSingleFileCap + 1).toInt, col("k"))
-    stagingWriter(shaped).parquet(dvDir)
+    stagingWriter(shaped).parquet(dvDir.toString)
   }
+
+  /** A DV write's plan against manifest `m`: the files it touches (by
+    * canonical key), the rows it newly suppresses, and the cumulative
+    * DV to stage — new positions UNION each touched file's positions
+    * from its current DV dir (one ref per file, cumulative).
+    */
+  private case class DvBuild(touched: Set[String], rows: Long,
+                             full: Option[DataFrame]) {
+    /** Stage the cumulative DV into `dvDir`; nothing when no file is touched. */
+    def stage(dvDir: Path): Unit = full.foreach(stageDv(_, dvDir))
+
+    /** `fileLines` with every touched file's dv ref replaced by `dvDir`. */
+    def withDvRef(fileLines: Seq[String], dvDir: Path): Seq[String] =
+      fileLines.map { l =>
+        val parts = l.split('\t')
+        if (touched.contains(snapKey(parts(0))))
+          (parts.filterNot(_.startsWith("dv:")) :+ s"dv:$dvDir").mkString("\t")
+        else l
+      }
+  }
+
+  /** The one DV builder ([[dvDelete]], [[mergeMoR]], [[applyCdcVersion]]):
+    * `matching` narrows the live rows of `files` (existing DVs applied,
+    * so re-suppressing a row is idempotent) to the rows to suppress.
+    * Their (k, pos) are checkpointed, and ONE collect of the per-file
+    * position counts (≤ |touched files| rows) yields both the touched
+    * set and the suppressed total.
+    */
+  private def buildDv(spark: SparkSession, m: Manifest, files: Seq[String])(
+      matching: DataFrame => DataFrame): DvBuild =
+    if (files.isEmpty) DvBuild(Set.empty, 0L, None)
+    else {
+      val newDv = matching(loadFilesWithPos(spark, files, m))
+        .select(col("_k").as("k"), col("_pos").as("pos"))
+        .localCheckpoint()
+      val perFile = newDv.groupBy(col("k")).agg(count(lit(1)).as("n"))
+        .collect()
+      val touched = perFile.map(_.getString(0)).toSet
+      if (touched.isEmpty) DvBuild(touched, 0L, None)
+      else {
+        val oldDirs = touched.flatMap(m.dvRefs.get).toSeq.distinct.sorted
+        val full = (if (oldDirs.isEmpty) newDv
+                    else newDv.unionAll(readDv(spark, oldDirs)
+                      .where(col("k").isin(touched.toSeq: _*))))
+          .distinct().localCheckpoint()
+        DvBuild(touched, perFile.map(_.getLong(1)).sum, Some(full))
+      }
+    }
 
   /** Point DELETE (`column IN values`) via deletion vectors: ZERO data
     * files rewrite. Stats/bloom pruning narrows the scan to candidate
@@ -1876,89 +1818,35 @@ object SnapshotStore {
   def dvDelete(spark: SparkSession, table: String, column: String,
                values: Seq[Long]): DvStats = {
     require(values.nonEmpty, "dvDelete needs at least one value")
-    var attempt = 0
-    var out: Option[DvStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val lines = manifestLines(spark, table, v)
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      val physC = physOf(colmapOfLine(lines(2)), column) // stats key
-      val stats = statsOf(spark, table, v).toMap
+    optimistic(spark, table, "dvDelete") { m =>
+      val physC = m.phys(column) // stats key
+      val stats = m.stats.toMap
       // candidate files by min/max (files without stats always kept —
       // stats are an optimization, never a correctness gate)
-      val candidates = fileLines.map(_.split('\t')(0)).filter { p =>
+      val candidates = m.files.filter { p =>
         stats(p).get(physC).forall { case (mn, mx) =>
           values.exists(x => x >= mn && x <= mx) }
       }
-      val newV = v + 1
-      val dataDir = new Path(new Path(table), f"snap-v$newV%05d")
-      // Writer-unique DV dir: on a lost commit race the cleanup below
-      // deletes ONLY this dir — never dataDir, which a concurrent winner
-      // of version newV may already own. The underscore prefix keeps it
-      // out of data-file listings; snapDirNameOf still resolves the ref
-      // to snap-v<newV> so vacuum reachability pins the enclosing dir.
-      val dvDir = new Path(dataDir,
-        "_dv-" + java.util.UUID.randomUUID.toString.take(8)).toString
-      val refs = dvRefsOf(fileLines)
-      val (touchedKeys, rowsDeleted) =
-        if (candidates.isEmpty) (Set.empty[String], 0L)
-        else {
-          val newDv = loadFilesWithPos(spark, candidates, lines)
-            .where(col(column).isin(values: _*))
-            .select(col("_k").as("k"), col("_pos").as("pos"))
-            .localCheckpoint()
-          // per-file touched set: ≤ |files| rows, driver-bounded
-          val touched = newDv.select(col("k")).distinct()
-            .collect().map(_.getString(0)).toSet
-          if (touched.isEmpty) (touched, 0L)
-          else {
-            val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
-            val carried =
-              if (oldDirs.isEmpty) None
-              else Some(readDv(spark, oldDirs)
-                .where(col("k").isin(touched.toSeq: _*)))
-            val full = carried.fold(newDv)(newDv.unionAll).distinct()
-              .localCheckpoint()
-            stageDv(full, dvDir, full.count())
-            (touched, newDv.count())
-          }
-        }
-      if (touchedKeys.isEmpty) {
-        // nothing matched: no new version, report against the current
-        out = Some(DvStats(v, fileLines.size, 0, 0, 0L))
-      } else {
-        val newLines = fileLines.map { l =>
-          val parts = l.split('\t')
-          if (touchedKeys.contains(snapKey(parts(0))))
-            (parts.filterNot(_.startsWith("dv:")) :+ s"dv:$dvDir")
-              .mkString("\t")
-          else l
-        }
-        val total = countOf(spark, table, v) - rowsDeleted
-        val body = s"count=$total\n${lines(2)}\n" + newLines.mkString("\n")
-        val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-        val f = fs(spark, manifest)
-        f.mkdirs(manifestDir(table))
-        try {
-          commitTestHook()
-          val outS = f.create(manifest, false)
-          outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-          outS.close()
-          out = Some(DvStats(newV, fileLines.size, touchedKeys.size, 0,
-            rowsDeleted))
-        } catch {
-          case e: java.io.IOException if isCommitRace(e) =>
-            // lost the race: drop only OUR staged DV dir — the winner's
-            // committed snap-v<newV> data/DV files are untouchable
-            f.delete(new Path(dvDir), true)
-            attempt += 1
-            require(attempt < 8, s"dvDelete lost $attempt commit races")
-        }
+      val newV = m.version + 1
+      // Writer-unique DV dir inside the SHARED snap-v<newV> dir: a lost
+      // race deletes ONLY this dir — never snap-v<newV>, which a
+      // concurrent winner of version newV may already own. The
+      // underscore prefix keeps it out of data-file listings;
+      // snapDirNameOf still resolves the ref to snap-v<newV> so vacuum
+      // reachability pins the enclosing dir.
+      val dvDir = uniqueDir(new Path(table, f"snap-v$newV%05d"), "_dv-")
+      val dv = buildDv(spark, m, candidates)(
+        _.where(col(column).isin(values: _*)))
+      if (dv.touched.isEmpty) // nothing matched: no new version
+        NoOp(DvStats(m.version, m.fileLines.size, 0, 0, 0L))
+      else {
+        dv.stage(dvDir)
+        Commit(m.copy(version = newV, count = m.count - dv.rows,
+            fileLines = dv.withDvRef(m.fileLines, dvDir)),
+          Seq(dvDir), DvStats(newV, m.fileLines.size, dv.touched.size, 0,
+            dv.rows))
       }
     }
-    out.get
   }
 
   /** Outcome of a merge-on-read MERGE: version plus the DV/append split
@@ -1991,119 +1879,37 @@ object SnapshotStore {
     * evolution follows [[mergeUpsert]]: the source must cover every
     * existing column (case-insensitively) and may append new ones —
     * carried files stay narrow and null-fill on read. Commit is the
-    * same exclusive-create manifest; on a lost race the merge recomputes
-    * against the new latest. Like mergeUpsert, race-loss cleanup assumes
-    * a single writer per table (the staged dir is keyed by version).
+    * same exclusive-create manifest; on a lost race the merge drops its
+    * writer-unique staged dir and recomputes against the new latest.
     */
   def mergeMoR(spark: SparkSession, table: String, source: DataFrame,
                keyCols: Seq[String],
                bloomCols: Seq[String] = Nil): MoRStats = {
     require(keyCols.nonEmpty, "mergeMoR needs at least one key column")
-    var attempt = 0
-    var out: Option[MoRStats] = None
-    while (out.isEmpty) {
-      val committed = versions(spark, table)
-      require(committed.nonEmpty, s"no committed snapshots under $table")
-      val v = committed.last
-      val lines = manifestLines(spark, table, v)
-      val schema = org.apache.spark.sql.types.StructType
-        .fromDDL(ddlOfLine(lines(2)))
-      val colmap = colmapOfLine(lines(2))
-      val srcLower = source.columns.map(_.toLowerCase)
-      require(srcLower.distinct.length == srcLower.length,
-        s"source has case-only column collisions: ${source.columns
-          .groupBy(_.toLowerCase).filter(_._2.length > 1)
-          .values.map(_.mkString("/")).mkString(",")}")
-      require(schema.fieldNames.forall(n =>
-          srcLower.contains(n.toLowerCase)),
-        s"source is missing table columns ${schema.fieldNames
-          .filterNot(n => srcLower.contains(n.toLowerCase))
-          .mkString(",")}")
-      val existingLower = schema.fieldNames.map(_.toLowerCase).toSet
-      val newFields = source.schema.fields
-        .filterNot(f => existingLower.contains(f.name.toLowerCase))
-      val widened = org.apache.spark.sql.types.StructType(
-        schema.fields ++ newFields)
-      val newColmap =
-        if (colmap.isEmpty) colmap
-        else colmap ++ newFields.map(f => f.name -> freshPhys(f.name))
-      val src = source.select(widened.fields.toIndexedSeq
-        .map(fl => col(fl.name).cast(fl.dataType).as(fl.name)): _*)
-      val dup = src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n")).where(col("n") > 1).limit(1).count()
-      require(dup == 0,
-        "mergeMoR source has duplicate keys — multi-match is ambiguous")
-      val fileLines = lines.drop(3).filter(_.nonEmpty)
-      val allFiles = fileLines.map(_.split('\t')(0))
-      val refs = dvRefsOf(fileLines)
-      val newV = v + 1
-      // writer-unique staging dir: a lost commit race can neither
-      // clobber nor delete another committer's files
-      val dataDir = new Path(new Path(table), f"snap-v$newV%05d-w" +
-        java.util.UUID.randomUUID.toString.take(8))
-      val dvDir = new Path(dataDir,
-        "_dv-" + java.util.UUID.randomUUID.toString.take(8)).toString
+    optimistic(spark, table, "mergeMoR") { m =>
+      val (src, widened, newColmap) =
+        conformSource("mergeMoR", m, source, keyCols)
+      val newV = m.version + 1
+      val dataDir = uniqueDir(new Path(table), f"snap-v$newV%05d-w")
+      val dvDir = uniqueDir(dataDir, "_dv-")
       // matched LIVE rows → suppressed positions. The key-only select
       // lets Catalyst prune the parquet scan to keyCols + metadata.
-      val (touchedKeys, rowsSuppressed, dvFrame) =
-        if (allFiles.isEmpty) (Set.empty[String], 0L, None)
-        else {
-          val newDv = loadFilesWithPos(spark, allFiles, lines)
-            .select(keyCols.map(col) :+ col("_k") :+ col("_pos"): _*)
-            .join(src.select(keyCols.map(col): _*), keyCols, "left_semi")
-            .select(col("_k").as("k"), col("_pos").as("pos"))
-            .localCheckpoint()
-          val touched = newDv.select(col("k")).distinct()
-            .collect().map(_.getString(0)).toSet
-          if (touched.isEmpty) (touched, 0L, None)
-          else {
-            val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
-            val carried =
-              if (oldDirs.isEmpty) None
-              else Some(readDv(spark, oldDirs)
-                .where(col("k").isin(touched.toSeq: _*)))
-            val full = carried.fold(newDv)(newDv.unionAll).distinct()
-              .localCheckpoint()
-            (touched, newDv.count(), Some(full))
-          }
-        }
+      val dv = buildDv(spark, m, m.files)(
+        _.select(keyCols.map(col) :+ col("_k") :+ col("_pos"): _*)
+          .join(src.select(keyCols.map(col): _*), keyCols, "left_semi"))
       // stage the appended data FIRST (stageFiles overwrites dataDir),
       // then the DV parquet beside it — both under the same atomic
       // commit and vacuum reachability as any version's files
       val (stagedCount, stagedLines) = stageFiles(
         toPhysical(src, newColmap), dataDir,
-        bloomCols.map(physOf(newColmap, _)),
-        partitionBy = partitionColsOf(fileLines))
-      dvFrame.foreach(dv => stageDv(dv, dvDir, dv.count()))
-      val carryLines = fileLines.map { l =>
-        val parts = l.split('\t')
-        if (touchedKeys.contains(snapKey(parts(0))))
-          (parts.filterNot(_.startsWith("dv:")) :+ s"dv:$dvDir")
-            .mkString("\t")
-        else l
-      }
-      val total = countOf(spark, table, v) - rowsSuppressed + stagedCount
-      val body = s"count=$total\n" +
-        s"${schemaLineOf(widened.toDDL, newColmap)}\n" +
-        (carryLines ++ stagedLines).mkString("\n")
-      val manifest = new Path(manifestDir(table), f"v$newV%05d.manifest")
-      val f = fs(spark, manifest)
-      f.mkdirs(manifestDir(table))
-      try {
-        commitTestHook()
-        val outS = f.create(manifest, false)
-        outS.write(s"version=$newV\n$body".getBytes(UTF_8))
-        outS.close()
-        out = Some(MoRStats(newV, fileLines.size, touchedKeys.size,
-          stagedLines.size, rowsSuppressed, stagedCount))
-      } catch {
-        case e: java.io.IOException if isCommitRace(e) =>
-          f.delete(dataDir, true)
-          attempt += 1
-          require(attempt < 8, s"mergeMoR lost $attempt commit races")
-      }
+        bloomCols.map(physOf(newColmap, _)), partitionBy = m.partitionCols)
+      dv.stage(dvDir)
+      Commit(Manifest(newV, m.count - dv.rows + stagedCount,
+          schemaLineOf(widened.toDDL, newColmap),
+          dv.withDvRef(m.fileLines, dvDir) ++ stagedLines),
+        Seq(dataDir), MoRStats(newV, m.fileLines.size, dv.touched.size,
+          stagedLines.size, dv.rows, stagedCount))
     }
-    out.get
   }
 
   /** Outcome of one CDC micro-batch apply. `committed=false` means the
@@ -2132,25 +1938,22 @@ object SnapshotStore {
     * Structured Streaming's replay window upgrades to a no-op. Versions
     * must chain densely (`version == latest+1`) — a gap means the feed
     * and the table disagree about history, and the CDC semantics (each
-    * batch applies to its predecessor) would silently skew. Like
-    * [[mergeUpsert]]/[[mergeMoR]], one writer per table is assumed —
-    * for a stream that is the checkpoint's own serialization guarantee.
+    * batch applies to its predecessor) would silently skew. The pinned
+    * version is never re-based: a lost commit race (a concurrent replay
+    * of the same batch committed first) drops this call's writer-unique
+    * staged dir and returns `committed=false`.
     */
   def applyCdcVersion(spark: SparkSession, table: String, batch: DataFrame,
                       keyCols: Seq[String], opCol: String,
                       version: Int): CdcApplyStats = {
     require(keyCols.nonEmpty, "applyCdcVersion needs at least one key column")
-    val committed = versions(spark, table)
-    require(committed.nonEmpty, s"no committed snapshots under $table")
-    if (committed.contains(version))
-      return CdcApplyStats(version, committed = false, 0, 0, 0L, 0L)
-    val v = committed.last
-    require(v == version - 1,
-      s"CDC version gap: table at v$v, batch pinned to v$version")
-    val lines = manifestLines(spark, table, v)
-    val schema = org.apache.spark.sql.types.StructType
-      .fromDDL(ddlOfLine(lines(2)))
-    val colmap = colmapOfLine(lines(2))
+    val m = manifestOf(spark, table, None)
+    val notCommitted = CdcApplyStats(version, committed = false, 0, 0, 0L, 0L)
+    if (version <= m.version && versions(spark, table).contains(version))
+      return notCommitted
+    require(m.version == version - 1,
+      s"CDC version gap: table at v${m.version}, batch pinned to v$version")
+    val schema = m.schema
     val batchLower = batch.columns.map(_.toLowerCase)
     require(batchLower.contains(opCol.toLowerCase),
       s"batch is missing op column $opCol")
@@ -2185,9 +1988,6 @@ object SnapshotStore {
       .map(fl => col(fl.name).cast(fl.dataType).as(fl.name)) :+
       ops.as("_op"): _*)
     val upserts = conformed.where(col("_op").isin("I", "U")).drop("_op")
-    val fileLines = lines.drop(3).filter(_.nonEmpty)
-    val allFilesUnpruned = fileLines.map(_.split('\t')(0))
-    val refs = dvRefsOf(fileLines)
     // A micro-batch is SMALL by nature — when its (single, integral)
     // key set fits a driver-side cap, min/max file stats prune the
     // pre-image discovery to candidate files exactly like [[dvDelete]],
@@ -2197,7 +1997,7 @@ object SnapshotStore {
     // mergeMoR path — correct at any size, just not file-pruned).
     val CdcPruneCap = 10000
     val allFiles: Seq[String] =
-      if (keyCols.size != 1 || fileLines.isEmpty) allFilesUnpruned
+      if (keyCols.size != 1 || m.files.isEmpty) m.files
       else {
         val kc = keyCols.head
         val integral = schema.fields.exists(f =>
@@ -2205,11 +2005,11 @@ object SnapshotStore {
             case "tinyint" | "smallint" | "int" | "bigint" => true
             case _ => false
           }))
-        if (!integral) allFilesUnpruned
+        if (!integral) m.files
         // nKeys is known from the fused probe, so an oversized batch
         // skips the key collect outright (it used to collect cap+1 rows
         // only to discard them)
-        else if (nKeys > CdcPruneCap) allFilesUnpruned
+        else if (nKeys > CdcPruneCap) m.files
         else {
           // null keys equi-join-match nothing — they can't suppress,
           // so they don't constrain pruning either. The collect reads
@@ -2221,9 +2021,9 @@ object SnapshotStore {
             .where(col("_k").isNotNull)
             .collect().map(_.getLong(0)).distinct
           val sorted = ks.sorted
-          val physKc = physOf(colmap, kc) // stats are keyed physically
-          val stats = statsOf(spark, table, v).toMap
-          allFilesUnpruned.filter { p =>
+          val physKc = m.phys(kc) // stats are keyed physically
+          val stats = m.stats.toMap
+          m.files.filter { p =>
             stats(p).get(physKc).forall { case (mn, mx) =>
               // any batch key in [mn, mx]? binary search the sorted keys
               val i = java.util.Arrays.binarySearch(sorted, mn)
@@ -2235,74 +2035,30 @@ object SnapshotStore {
       }
     // writer-unique staging dir (appends + nested DV): a concurrent
     // replay race can neither clobber nor delete the winner's files
-    val dataDir = new Path(new Path(table), f"snap-v$version%05d-w" +
-      java.util.UUID.randomUUID.toString.take(8))
-    val dvDir = new Path(dataDir,
-      "_dv-" + java.util.UUID.randomUUID.toString.take(8)).toString
+    val dataDir = uniqueDir(new Path(table), f"snap-v$version%05d-w")
+    val dvDir = uniqueDir(dataDir, "_dv-")
     // ALL batch keys suppress their live pre-image (an I on a key that
     // already exists therefore behaves as an upsert — idempotent feeds)
-    val (touchedKeys, rowsSuppressed, dvFrame) =
-      if (allFiles.isEmpty) (Set.empty[String], 0L, None)
-      else {
-        val newDv = loadFilesWithPos(spark, allFiles, lines)
-          .select(keyCols.map(col) :+ col("_k") :+ col("_pos"): _*)
-          .join(conformed.select(keyCols.map(col): _*), keyCols, "left_semi")
-          .select(col("_k").as("k"), col("_pos").as("pos"))
-          .localCheckpoint()
-        // one collect of the per-file position counts (≤ |touched
-        // files| rows over the checkpointed DV) yields BOTH the touched
-        // key set and the suppressed total — r15 §5, was a distinct
-        // collect plus a separate count action
-        val perFile = newDv.groupBy(col("k")).agg(count(lit(1)).as("n"))
-          .collect()
-        val touched = perFile.map(_.getString(0)).toSet
-        if (touched.isEmpty) (touched, 0L, None)
-        else {
-          val oldDirs = touched.flatMap(refs.get).toSeq.distinct.sorted
-          val carried =
-            if (oldDirs.isEmpty) None
-            else Some(readDv(spark, oldDirs)
-              .where(col("k").isin(touched.toSeq: _*)))
-          val full = carried.fold(newDv)(newDv.unionAll).distinct()
-            .localCheckpoint()
-          (touched, perFile.map(_.getLong(1)).sum, Some(full))
-        }
-      }
+    val dv = buildDv(spark, m, allFiles)(
+      _.select(keyCols.map(col) :+ col("_k") :+ col("_pos"): _*)
+        .join(conformed.select(keyCols.map(col): _*), keyCols, "left_semi"))
     // delete-only batches stage no data files; the dir still hosts the
     // DV. Upsert presence comes from the fused probe (no isEmpty action).
-    val hasUpserts = nUpserts > 0L
     val (stagedCount, stagedLines) =
-      if (hasUpserts)
-        stageFiles(toPhysical(upserts, colmap), dataDir,
-          partitionBy = partitionColsOf(fileLines))
+      if (nUpserts > 0L)
+        stageFiles(toPhysical(upserts, m.colmap), dataDir,
+          partitionBy = m.partitionCols)
       else { fs(spark, dataDir).mkdirs(dataDir); (0L, Seq.empty[String]) }
-    dvFrame.foreach(dv => stageDv(dv, dvDir, dv.count()))
-    val carryLines = fileLines.map { l =>
-      val parts = l.split('\t')
-      if (touchedKeys.contains(snapKey(parts(0))))
-        (parts.filterNot(_.startsWith("dv:")) :+ s"dv:$dvDir").mkString("\t")
-      else l
-    }
-    val total = countOf(spark, table, v) - rowsSuppressed + stagedCount
-    val body = s"count=$total\n${lines(2)}\n" +
-      (carryLines ++ stagedLines).mkString("\n")
-    val manifest = new Path(manifestDir(table), f"v$version%05d.manifest")
-    val f = fs(spark, manifest)
-    f.mkdirs(manifestDir(table))
-    try {
-      commitTestHook()
-      val outS = f.create(manifest, false)
-      outS.write(s"version=$version\n$body".getBytes(UTF_8))
-      outS.close()
-      CdcApplyStats(version, committed = true, touchedKeys.size,
-        stagedLines.size, rowsSuppressed, stagedCount)
-    } catch {
-      case e: java.io.IOException if isCommitRace(e) =>
-        // a replay of the SAME pinned batch committed first; drop our
-        // writer-unique staging dir (appends + nested DV) wholesale —
-        // race-free, the winner's files live in its own dir
-        f.delete(dataDir, true)
-        CdcApplyStats(version, committed = false, 0, 0, 0L, 0L)
+    dv.stage(dvDir)
+    val next = m.copy(version = version,
+      count = m.count - dv.rows + stagedCount,
+      fileLines = dv.withDvRef(m.fileLines, dvDir) ++ stagedLines)
+    if (commit(spark, table, next))
+      CdcApplyStats(version, committed = true, dv.touched.size,
+        stagedLines.size, dv.rows, stagedCount)
+    else {
+      fs(spark, dataDir).delete(dataDir, true)
+      notCommitted
     }
   }
 
@@ -2562,8 +2318,7 @@ object SnapshotStore {
         s"which are expired or never committed (have " +
         s"${committed.mkString(",")}) — do not vacuum versions inside a " +
         "subscriber's checkpoint lag")
-    val toSchema = org.apache.spark.sql.types.StructType
-      .fromDDL(ddlOfLine(manifestLines(spark, table, vTo)(2)))
+    val toSchema = manifestOf(spark, table, Some(vTo)).schema
     def conform(df: DataFrame) = df.select(toSchema.fields.toIndexedSeq
       .map(fl =>
         (if (df.columns.contains(fl.name)) col(fl.name) else lit(null))
@@ -2577,24 +2332,19 @@ object SnapshotStore {
   private def stepChanges(spark: SparkSession, table: String, v: Int,
                           keyCols: Seq[String]): DataFrame = {
     val w = v + 1
-    val linesV = manifestLines(spark, table, v)
-    val linesW = manifestLines(spark, table, w)
-    val flV = linesV.drop(3).filter(_.nonEmpty)
-    val flW = linesW.drop(3).filter(_.nonEmpty)
-    val keysV = flV.map(l => snapKey(l.split('\t')(0))).toSet
-    val keysW = flW.map(l => snapKey(l.split('\t')(0))).toSet
-    val refsV = dvRefsOf(flV)
-    val refsW = dvRefsOf(flW)
-    val filesW = flW.map(_.split('\t')(0))
-    val filesV = flV.map(_.split('\t')(0))
+    val mV = manifestOf(spark, table, Some(v))
+    val mW = manifestOf(spark, table, Some(w))
+    val keysV = mV.files.map(snapKey).toSet
+    val keysW = mW.files.map(snapKey).toSet
+    val (refsV, refsW) = (mV.dvRefs, mW.dvRefs)
+    val (filesV, filesW) = (mV.files, mW.files)
     val appended = filesW.filterNot(p => keysV.contains(snapKey(p)))
     val removed = filesV.filterNot(p => keysW.contains(snapKey(p)))
     val touched = filesW.filter { p =>
       val k = snapKey(p)
       keysV.contains(k) && refsW.get(k) != refsV.get(k)
     }
-    val wSchema = org.apache.spark.sql.types.StructType
-      .fromDDL(ddlOfLine(linesW(2)))
+    val wSchema = mW.schema
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], wSchema)
     def conformW(df: DataFrame) = df.select(wSchema.fields.toIndexedSeq
@@ -2604,7 +2354,7 @@ object SnapshotStore {
     // insert post-images: the appended files' live rows
     val ins =
       if (appended.isEmpty) empty
-      else conformW(loadFiles(spark, appended, linesW))
+      else conformW(loadFiles(spark, appended, mW))
     // delete pre-images, two sources: DV growth on carried files
     // (positions in the step's DV not in v's) + removed files' v-live rows
     val dvPre =
@@ -2619,13 +2369,13 @@ object SnapshotStore {
         val dvW = dvOf(refsW).get // touched ⇒ ref present in w
         val delta = dvOf(refsV).fold(dvW)(old =>
           dvW.join(old, Seq("k", "pos"), "left_anti"))
-        conformW(loadFilesWithPos(spark, touched, linesV)
+        conformW(loadFilesWithPos(spark, touched, mV)
           .join(delta, col("_k") === col("k") && col("_pos") === col("pos"),
                 "left_semi"))
       }
     val removedPre =
       if (removed.isEmpty) empty
-      else conformW(loadFiles(spark, removed, linesV))
+      else conformW(loadFiles(spark, removed, mV))
     val del = dvPre.unionAll(removedPre)
     // pair by key WITHIN the step: both sides → update pre/post images
     val delKeys = del.select(keyCols.map(col): _*).distinct()

@@ -21,6 +21,15 @@ class SnapshotStoreSpec extends SparkSpec {
     dir
   }
 
+  /** The two MERGE writers, keyed on `id`; both conform their source
+    * through the same schema guards. */
+  private val mergeWriters
+      : Seq[(String, (String, org.apache.spark.sql.DataFrame) => Any)] = Seq(
+      "mergeUpsert" -> ((t, src) =>
+        SnapshotStore.mergeUpsert(spark, t, src, Seq("id"))),
+      "mergeMoR" -> ((t, src) =>
+        SnapshotStore.mergeMoR(spark, t, src, Seq("id"))))
+
   test("publish → read round-trips rows; versions are immutable") {
     val t = freshTable("roundtrip")
     val v1 = SnapshotStore.publish(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), t)
@@ -240,11 +249,29 @@ class SnapshotStoreSpec extends SparkSpec {
       === Set((4L, "v4")))
     assert(SnapshotStore.read(spark, t, Some(3)).as[(Long, String)]
       .collect().toSet === Set((3L, "v3")))
-    // expired: loud failure naming the surviving versions
-    val err = intercept[IllegalArgumentException] {
-      SnapshotStore.read(spark, t, Some(1))
+    // expired (1) or never committed (9): every manifest reader fails
+    // loudly naming the surviving versions
+    val readers: Seq[(String, Int => Any)] = Seq(
+      "read" -> (v => SnapshotStore.read(spark, t, Some(v))),
+      "readBetween" -> (v =>
+        SnapshotStore.readBetween(spark, t, Some(v), "id", 0L, 9L)),
+      "readPoint" -> (v =>
+        SnapshotStore.readPoint(spark, t, Some(v), "id", Seq(1L))),
+      "dvAmplification" -> (v =>
+        SnapshotStore.dvAmplification(spark, t, Some(v))),
+      "schemaOf" -> (v => SnapshotStore.schemaOf(spark, t, v)),
+      "statsOf" -> (v => SnapshotStore.statsOf(spark, t, v)),
+      "countOf" -> (v => SnapshotStore.countOf(spark, t, v)))
+    for ((name, reader) <- readers; v <- Seq(1, 9)) {
+      val err = intercept[IllegalArgumentException](reader(v))
+      assert(err.getMessage.contains(s"version $v not committed (have: 3,4)"),
+        s"$name(v$v): ${err.getMessage}")
     }
-    assert(err.getMessage.contains("3,4"))
+    val empty = freshTable("vacuum-empty")
+    val none = intercept[IllegalArgumentException] {
+      SnapshotStore.countOf(spark, empty, 1)
+    }
+    assert(none.getMessage.contains("no committed snapshots"))
     // and the data dirs are actually gone (space reclaimed, not hidden)
     val f = new Path(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!f.exists(new Path(t, "snap-v00001")))
@@ -505,13 +532,16 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(tags(12L) === Some("x") && tags(17L) === Some("y"))
     assert(tags(5L).isEmpty && tags(25L).isEmpty,
       "carried narrow files must read tag as NULL")
-    // a SECOND merge without the new column is rejected (a widened
-    // schema is table schema from then on — missing columns fail loudly)
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.mergeUpsert(spark, t,
-        Seq((1L, 0L, 0L)).toDF("id", "pay", "b"), Seq("id"))
+    // a SECOND merge without the new column is rejected by either merge
+    // (a widened schema is table schema from then on — missing columns
+    // fail loudly)
+    mergeWriters.foreach { case (name, merge) =>
+      val e = intercept[IllegalArgumentException] {
+        merge(t, Seq((1L, 0L, 0L)).toDF("id", "pay", "b"))
+      }
+      assert(e.getMessage.contains("missing table columns tag"), name)
     }
-    assert(e.getMessage.contains("missing table columns"))
+    assert(SnapshotStore.versions(spark, t) === Seq(1, 2))
     // compact materializes the widened schema everywhere; data unchanged
     SnapshotStore.compact(spark, t, 2)
     val v3 = SnapshotStore.read(spark, t)
@@ -525,25 +555,27 @@ class SnapshotStoreSpec extends SparkSpec {
 
   test("schema evolution matches names case-insensitively (Spark's " +
        "default resolution) and rejects case-only collisions") {
-    val t = freshTable("evolve-case")
-    SnapshotStore.publish(
-      spark.range(10).select(col("id"), (col("id") * 100).as("pay")), t)
-    // a case-variant of an existing column is the SAME column — must
-    // NOT widen the manifest with a `Pay` twin
-    val src = Seq((3L, -1L)).toDF("id", "Pay")
-    SnapshotStore.mergeUpsert(spark, t, src, Seq("id"))
-    val got = SnapshotStore.read(spark, t)
-    assert(got.columns.toSeq === Seq("id", "pay"),
-      s"case-variant source column must not widen: ${got.columns.toSeq}")
-    assert(got.where(col("id") === 3L).select("pay").as[Long].head()
-      === -1L)
-    // a source carrying BOTH case-variants of one name is ambiguous
-    val bad = spark.range(1).select(col("id"), lit(1L).as("pay"),
-      lit(2L).as("PAY"))
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.mergeUpsert(spark, t, bad, Seq("id"))
+    mergeWriters.foreach { case (name, merge) =>
+      val t = freshTable(s"evolve-case-$name")
+      SnapshotStore.publish(
+        spark.range(10).select(col("id"), (col("id") * 100).as("pay")), t)
+      // a case-variant of an existing column is the SAME column — must
+      // NOT widen the manifest with a `Pay` twin
+      merge(t, Seq((3L, -1L)).toDF("id", "Pay"))
+      val got = SnapshotStore.read(spark, t)
+      assert(got.columns.toSeq === Seq("id", "pay"),
+        s"$name: case-variant source column must not widen: " +
+          got.columns.toSeq)
+      assert(got.where(col("id") === 3L).select("pay").as[Long].collect()
+        .toSeq === Seq(-1L), name)
+      // a source carrying BOTH case-variants of one name is ambiguous
+      val bad = spark.range(1).select(col("id"), lit(1L).as("pay"),
+        lit(2L).as("PAY"))
+      val e = intercept[IllegalArgumentException](merge(t, bad))
+      assert(e.getMessage.contains("case-only column collisions: pay/PAY"),
+        s"$name: ${e.getMessage}")
+      assert(SnapshotStore.versions(spark, t) === Seq(1, 2), name)
     }
-    assert(e.getMessage.contains("case-only"))
   }
 
   test("deletion vectors: point delete rewrites zero files, time travel " +
@@ -897,13 +929,16 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   test("mergeUpsert rejects a source with duplicate keys") {
-    val t = freshTable("merge-dup")
-    SnapshotStore.publish(Seq((1L, 10L)).toDF("id", "pay"), t)
-    val dup = Seq((5L, 1L), (5L, 2L)).toDF("id", "pay")
-    val e = intercept[IllegalArgumentException] {
-      SnapshotStore.mergeUpsert(spark, t, dup, Seq("id"))
+    // and so does mergeMoR: both conform their source the same way
+    mergeWriters.foreach { case (name, merge) =>
+      val t = freshTable(s"merge-dup-$name")
+      SnapshotStore.publish(Seq((1L, 10L)).toDF("id", "pay"), t)
+      val dup = Seq((5L, 1L), (5L, 2L)).toDF("id", "pay")
+      val e = intercept[IllegalArgumentException](merge(t, dup))
+      assert(e.getMessage.contains(s"$name source has duplicate keys"),
+        e.getMessage)
+      assert(SnapshotStore.versions(spark, t) === Seq(1), name)
     }
-    assert(e.getMessage.contains("duplicate keys"))
   }
 
   test("merge commit race: loser recomputes against the NEW latest, " +
@@ -1306,40 +1341,55 @@ class SnapshotStoreSpec extends SparkSpec {
   }
 
   // ─── conflict matrix: DETERMINISTIC commit races via commitTestHook ──
-  // Each case injects a competing committer at the loser's exclusive-
-  // create point, so writer A stages against version v, writer B
-  // commits v+1 in between, and A's lost-race path recomputes against
-  // B's result — the serializable outcome the matrix promises, checked
-  // by exact final row sets (no lost rows, no resurrection) and intact
-  // schema/colmap.
+  // One row per writer as the LOSER: `setup` builds the table, `winner`
+  // commits from inside the loser's commit hook (so the loser stages
+  // against version v and the winner commits v+1 in between), and the
+  // loser's lost-race path must recompute against the winner's result —
+  // the serializable outcome the matrix promises, checked by exact final
+  // row sets (no lost rows, no resurrection) and intact schema/colmap.
   private def injectOnce(b: => Unit): Unit =
     SnapshotStore.commitTestHook = () => {
       SnapshotStore.commitTestHook = () => ()
       b
     }
 
-  test("conflict matrix: dvDelete loses a deterministic race to " +
+  private def conflictCase[R](name: String, table: String)(
+      setup: String => Unit)(winner: String => Unit)(loser: String => R)(
+      check: (String, R) => Unit): Unit =
+    test(s"conflict matrix: $name") {
+      val t = freshTable(table)
+      setup(t)
+      injectOnce(winner(t))
+      val out = try loser(t) finally SnapshotStore.commitTestHook = () => ()
+      check(t, out)
+    }
+
+  private def payById(t: String, v: Option[Int] = None): Map[Long, Long] = {
+    val rows = SnapshotStore.read(spark, t, v).select("id", "pay")
+      .as[(Long, Long)].collect()
+    assert(rows.map(_._1).distinct.length === rows.length,
+      s"a key reads twice: ${rows.groupBy(_._1).filter(_._2.length > 1)}")
+    rows.toMap
+  }
+
+  private def bucketed = spark.range(300)
+    .select(col("id"), (col("id") % 3).as("b"), (col("id") * 7).as("pay"))
+  private val b0 = (0L until 300L).filter(_ % 3 == 0)
+
+  // dvDelete targets 10 SURVIVORS of bucket 0 — exactly the rows the
+  // injected compaction rewrites into a fresh file
+  conflictCase("dvDelete loses a deterministic race to " +
        "autoCompactDv on the SAME files and recomputes its tombstones " +
-       "against the compacted layout") {
-    val t = freshTable("race-dv-ac")
-    SnapshotStore.publish(
-      spark.range(300)
-        .select(col("id"), (col("id") % 3).as("b"), (col("id") * 7).as("pay"))
-        .repartition(3, col("b")),
-      t, partitionBy = Seq("b"))
-    val b0 = (0L until 300L).filter(_ % 3 == 0)
+       "against the compacted layout", "race-dv-ac") { t =>
+    SnapshotStore.publish(bucketed.repartition(3, col("b")), t,
+      partitionBy = Seq("b"))
     SnapshotStore.applyCdcVersion(spark, t,
-      spark.range(300)
-        .select(col("id"), (col("id") % 3).as("b"), (col("id") * 7).as("pay"))
-        .where(col("id").isin(b0.take(40): _*))
+      bucketed.where(col("id").isin(b0.take(40): _*))
         .withColumn("op", lit("D")),
       Seq("id"), "op", 2)
-    // dvDelete targets 10 SURVIVORS of bucket 0 — exactly the rows the
-    // injected compaction rewrites into a fresh file
-    val more = b0.slice(40, 50)
-    injectOnce { SnapshotStore.autoCompactDv(spark, t, thresholdBp = 2500L) }
-    val st = SnapshotStore.dvDelete(spark, t, "id", more)
-    SnapshotStore.commitTestHook = () => ()
+  } { t => SnapshotStore.autoCompactDv(spark, t, thresholdBp = 2500L) } {
+    t => SnapshotStore.dvDelete(spark, t, "id", b0.slice(40, 50))
+  } { (t, st) =>
     assert(st.version === 4,
       s"loser must land AFTER the injected compaction, got $st")
     // sequential outcome: compaction preserved 260 live, then 10 deleted
@@ -1352,24 +1402,21 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(live.contains(b0(50)) && live.contains(1L), "no lost rows")
   }
 
-  test("conflict matrix: deleteBetween loses a deterministic race to " +
+  // the merge inserts id 150 (inside the delete range!) and updates id
+  // 10; the losing deleteBetween must delete the merged 150 too
+  conflictCase("deleteBetween loses a deterministic race to " +
        "mergeMoR and deletes from the MERGED table — the sequential " +
-       "outcome") {
-    val t = freshTable("race-del-mor")
+       "outcome", "race-del-mor") { t =>
     SnapshotStore.publish(
       spark.range(100).select(col("id"), (col("id") * 10).as("pay")), t)
-    // the merge inserts id 150 (inside the delete range!) and updates
-    // id 10; the losing deleteBetween must delete the merged 150 too
-    injectOnce {
-      SnapshotStore.mergeMoR(spark, t,
-        Seq((150L, -1L), (10L, 999L)).toDF("id", "pay"), Seq("id"))
-    }
-    val st = SnapshotStore.deleteBetween(spark, t, "id", 90L, 160L)
-    SnapshotStore.commitTestHook = () => ()
+  } { t =>
+    SnapshotStore.mergeMoR(spark, t,
+      Seq((150L, -1L), (10L, 999L)).toDF("id", "pay"), Seq("id"))
+  } { t => SnapshotStore.deleteBetween(spark, t, "id", 90L, 160L) } {
+    (t, st) =>
     assert(st.version === 3,
       s"loser must land after the injected merge, got $st")
-    val rows = SnapshotStore.read(spark, t).select("id", "pay")
-      .as[(Long, Long)].collect().toMap
+    val rows = payById(t)
     assert(rows.keySet === (0L until 90L).toSet,
       "merged-in id 150 and base ids 90..99 must ALL be deleted")
     assert(rows(10L) === 999L, "the merge winner's update must survive")
@@ -1378,18 +1425,15 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, t, Some(2)).count() === 101L)
   }
 
-  test("conflict matrix: renameColumn loses a deterministic race to a " +
+  conflictCase("renameColumn loses a deterministic race to a " +
        "data writer and re-applies on the merged table; colmap and " +
-       "old-file reads stay intact") {
-    val t = freshTable("race-rename-merge")
+       "old-file reads stay intact", "race-rename-merge") { t =>
     SnapshotStore.publish(
       spark.range(10).select(col("id"), (col("id") * 3).as("v")), t)
-    injectOnce {
-      SnapshotStore.mergeUpsert(spark, t,
-        Seq((200L, 999L)).toDF("id", "v"), Seq("id"))
-    }
-    val st = SnapshotStore.renameColumn(spark, t, "v", "score")
-    SnapshotStore.commitTestHook = () => ()
+  } { t =>
+    SnapshotStore.mergeUpsert(spark, t,
+      Seq((200L, 999L)).toDF("id", "v"), Seq("id"))
+  } { t => SnapshotStore.renameColumn(spark, t, "v", "score") } { (t, st) =>
     assert(st.version === 3,
       s"rename must land after the injected merge, got $st")
     assert(SnapshotStore.read(spark, t).columns.toSeq === Seq("id", "score"))
@@ -1405,26 +1449,166 @@ class SnapshotStoreSpec extends SparkSpec {
     assert(SnapshotStore.read(spark, t).count() === 10L)
   }
 
-  test("conflict matrix: autoCluster loses a deterministic race to an " +
-       "append and re-clusters INCLUDING the appended file") {
-    val t = freshTable("race-cluster-append")
+  conflictCase("autoCluster loses a deterministic race to an " +
+       "append and re-clusters INCLUDING the appended file",
+       "race-cluster-append") { t =>
     SnapshotStore.publish(
       spark.range(0, 1000).select(col("id").as("k"),
         (col("id") * 3).as("pay")).coalesce(1), t)
-    injectOnce {
-      SnapshotStore.applyCdcVersion(spark, t,
-        spark.range(1000, 1100).select(col("id").as("k"),
-          (col("id") * 3).as("pay"), lit("I").as("op")).coalesce(1),
-        Seq("k"), "op", 2)
-      ()
-    }
-    val st = SnapshotStore.autoCluster(spark, t, "k", 4)
-    SnapshotStore.commitTestHook = () => ()
+  } { t =>
+    SnapshotStore.applyCdcVersion(spark, t,
+      spark.range(1000, 1100).select(col("id").as("k"),
+        (col("id") * 3).as("pay"), lit("I").as("op")).coalesce(1),
+      Seq("k"), "op", 2)
+    ()
+  } { t => SnapshotStore.autoCluster(spark, t, "k", 4) } { (t, st) =>
     assert(st.version === 3 && st.filesRewritten === 2 &&
       st.rowsClustered === 1100L,
       s"the losing cluster job must re-cluster BOTH files, got $st")
     assert(SnapshotStore.read(spark, t).count() === 1100L)
     assert(SnapshotStore.refOf(spark, t, "layout-epoch") === Some(3))
+  }
+
+  // the winner deletes key 5, which the loser upserts: the sequential
+  // outcome re-inserts 5 with the loser's payload and keeps 50 deleted
+  conflictCase("mergeUpsert loses a deterministic race to dvDelete " +
+       "and upserts into the post-delete table", "race-merge-dv") { t =>
+    SnapshotStore.publish(
+      spark.range(100).select(col("id"), (col("id") * 10).as("pay")), t)
+  } { t => SnapshotStore.dvDelete(spark, t, "id", Seq(5L, 50L)) } { t =>
+    SnapshotStore.mergeUpsert(spark, t,
+      Seq((5L, -5L), (200L, -200L)).toDF("id", "pay"), Seq("id"))
+  } { (t, st) =>
+    assert(st.version === 3, s"loser must land after the delete, got $st")
+    assert(payById(t) === ((0L until 100L).filterNot(_ == 50L)
+      .map(i => i -> i * 10).toMap ++ Map(5L -> -5L, 200L -> -200L)))
+    assert(payById(t, Some(2)).keySet ===
+      (0L until 100L).toSet -- Set(5L, 50L))
+  }
+
+  // both merges update key 10: the loser's payload wins, applied on top
+  // of the winner's rewrite — key 10 must read exactly once
+  conflictCase("mergeMoR loses a deterministic race to mergeUpsert " +
+       "and suppresses the winner's rewritten rows", "race-mor-merge") { t =>
+    SnapshotStore.publish(
+      spark.range(100).select(col("id"), (col("id") * 10).as("pay")), t)
+  } { t =>
+    SnapshotStore.mergeUpsert(spark, t,
+      Seq((10L, 111L), (300L, 3L)).toDF("id", "pay"), Seq("id"))
+  } { t =>
+    SnapshotStore.mergeMoR(spark, t,
+      Seq((10L, 222L), (20L, -20L)).toDF("id", "pay"), Seq("id"))
+  } { (t, st) =>
+    assert(st.version === 3 && st.rowsSuppressed === 2L,
+      s"loser must land after the merge, got $st")
+    assert(payById(t) === ((0L until 100L).map(i => i -> i * 10).toMap ++
+      Map(10L -> 222L, 20L -> -20L, 300L -> 3L)))
+    assert(payById(t, Some(2))(10L) === 111L)
+  }
+
+  // bucket 0 is 40% suppressed before the race; the winner suppresses
+  // one more row in EACH bucket. The loser must materialize bucket 0
+  // with both deletes applied and carry bucket 1 with the winner's DV.
+  conflictCase("autoCompactDv loses a deterministic race to dvDelete " +
+       "and materializes the winner's tombstones too", "race-ac-dv") { t =>
+    SnapshotStore.publish(
+      spark.range(200).select(col("id"), (col("id") * 10).as("pay"),
+        (col("id") / 100).cast("long").as("b")).repartition(2, col("b")),
+      t, partitionBy = Seq("b"))
+    SnapshotStore.dvDelete(spark, t, "id", 0L until 40L)
+  } { t => SnapshotStore.dvDelete(spark, t, "id", Seq(50L, 150L)) } { t =>
+    SnapshotStore.autoCompactDv(spark, t, thresholdBp = 2500L)
+  } { (t, st) =>
+    assert(st.version === 4 && st.filesMaterialized === 1 &&
+      st.rowsRewritten === 59L, s"loser must land after the delete, got $st")
+    assert(payById(t) === ((40L until 200L).toSet -- Set(50L, 150L))
+      .map(i => i -> i * 10).toMap)
+    val amp = SnapshotStore.dvAmplification(spark, t)
+    assert(amp.map(a => (a.rows, a.suppressed)) === Seq((100L, 1L)),
+      s"only bucket 1 keeps a DV: $amp")
+  }
+
+  // the winner is a replay of the SAME pinned batch: the loser must
+  // report committed=false and drop its staged dir, leaving the
+  // winner's v2 as the only writer-unique dir of that version
+  conflictCase("applyCdcVersion loses a replay race for its pinned " +
+       "version and no-ops without a trace", "race-cdc-replay") { t =>
+    SnapshotStore.publish(
+      spark.range(100).select(col("id"), (col("id") * 10).as("pay")), t)
+  } { t => applyBatch(t); () } { t => applyBatch(t) } { (t, st) =>
+    assert(!st.committed && st.version === 2, s"got $st")
+    assert(SnapshotStore.versions(spark, t) === Seq(1, 2))
+    assert(stagedDirs(t).count(_.matches("snap-v00002-w[0-9a-f]{8}")) === 1,
+      s"the loser's staged dir must be gone: ${stagedDirs(t)}")
+    assert(payById(t) === ((0L until 100L).filterNot(_ == 3L)
+      .map(i => i -> i * 10).toMap ++ Map(4L -> -4L, 500L -> 5000L)))
+  }
+
+  private def applyBatch(t: String) = SnapshotStore.applyCdcVersion(spark, t,
+    Seq((3L, 30L, "D"), (4L, -4L, "U"), (500L, 5000L, "I"))
+      .toDF("id", "pay", "op"), Seq("id"), "op", 2)
+
+  /** Writer-unique dirs under table `t` (`snap-v…-w/-ac/-cl<hex>` data
+    * dirs and `_dv-<hex>` DV dirs), as paths relative to `t`. */
+  private def stagedDirs(t: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(t)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(java.nio.file.Files.isDirectory(_))
+      .map(root.relativize(_).toString)
+      .filter(_.split('/').exists(seg =>
+        seg.matches("snap-v\\d{5}-(w|ac|cl)[0-9a-f]{8}|_dv-[0-9a-f]{8}")))
+      .toSet
+    finally walk.close()
+  }
+
+  test("the retry cap: a writer that loses EVERY commit race fails with " +
+       "'<what> lost 8 commit races', leaving no staged dir behind and " +
+       "only the competitor's commits") {
+    // re-arms itself: a metadata-only competitor commits the next
+    // version before EVERY attempt of the writer under test (the hook is
+    // disarmed while the competitor itself commits)
+    def raceEveryAttempt(t: String): Unit = {
+      def arm(): Unit = SnapshotStore.commitTestHook = () => {
+        SnapshotStore.commitTestHook = () => ()
+        SnapshotStore.renameColumn(spark, t, "pay", "pay")
+        arm()
+      }
+      arm()
+    }
+    val writers: Seq[(String, String => Any)] = Seq(
+      "mergeUpsert" -> (t => SnapshotStore.mergeUpsert(spark, t,
+        Seq((60L, -1L), (500L, 5L)).toDF("id", "pay"), Seq("id"))),
+      "mergeMoR" -> (t => SnapshotStore.mergeMoR(spark, t,
+        Seq((60L, -1L), (500L, 5L)).toDF("id", "pay"), Seq("id"))),
+      "deleteBetween" -> (t =>
+        SnapshotStore.deleteBetween(spark, t, "id", 50L, 70L)),
+      "dvDelete" -> (t => SnapshotStore.dvDelete(spark, t, "id", Seq(60L))),
+      "autoCompactDv" -> (t =>
+        SnapshotStore.autoCompactDv(spark, t, thresholdBp = 1L)),
+      "autoCluster" -> (t => SnapshotStore.autoCluster(spark, t, "id", 2)),
+      "rename pay -> score" -> (t =>
+        SnapshotStore.renameColumn(spark, t, "pay", "score")))
+    writers.foreach { case (what, write) =>
+      val t = freshTable("cap-" + what.filter(_.isLetter))
+      SnapshotStore.publish(
+        spark.range(100).select(col("id"), (col("id") * 10).as("pay"))
+          .coalesce(2), t)
+      // a DV for autoCompactDv to materialize
+      SnapshotStore.dvDelete(spark, t, "id", 0L until 30L)
+      val before = SnapshotStore.versions(spark, t)
+      val dirsBefore = stagedDirs(t)
+      raceEveryAttempt(t)
+      val e = try intercept[IllegalArgumentException](write(t))
+        finally SnapshotStore.commitTestHook = () => ()
+      assert(e.getMessage.contains(s"$what lost 8 commit races"),
+        s"$what: ${e.getMessage}")
+      assert(SnapshotStore.versions(spark, t) ===
+        before ++ (before.last + 1 to before.last + 8), what)
+      assert(stagedDirs(t) === dirsBefore,
+        s"$what left staged dirs: ${stagedDirs(t) -- dirsBefore}")
+      assert(SnapshotStore.read(spark, t).count() === 70L, what)
+    }
   }
 
   test("autoCluster is INCREMENTAL: the epoch ref gates which files " +
